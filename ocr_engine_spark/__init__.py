@@ -6,8 +6,8 @@ document → extracted text (+ char spans) → cleaned text → structured
 fields → accuracy metrics, re-expressed as a ``pyspark.sql`` DataFrame
 job over a Common-Crawl-style pages table
 ``(url string, warc_ts timestamp, html binary, text string, lang string)``
-with all per-document work inside vectorized pandas/Arrow kernels
-(``mapInPandas``) — no per-row Python on the hot path.
+with all per-document work inside Arrow-batched kernels
+(``mapInArrow``) — no per-row Python on the hot path.
 
 Layout:
   kernels/    pure-Python, Spark-free extraction kernels (unit-testable)

@@ -6,7 +6,7 @@ Spark lifecycle (the DataFrame mirror of the reference's POST /ocr path,
   read pages (url, warc_ts, html, text, lang)
     -> payload-kind classification (magic bytes; JVM-side)
     -> repartition(P, xxhash64(url))         # load-balance kernel cost
-    -> mapInPandas(extract_batch)            # ONE Arrow-batched Python
+    -> mapInArrow(extract_batch_arrow)       # ONE Arrow-batched Python
          html: DOM parse + densitometric block scoring
          pdf:  text-layer layout analysis
          + clean_text (5-step pipeline) in the same pass
@@ -15,7 +15,7 @@ Spark lifecycle (the DataFrame mirror of the reference's POST /ocr path,
     -> extractions DataFrame
 
 No per-row Python UDFs anywhere: the only Python stage is one
-``mapInPandas`` over whole Arrow batches (the reference's model-per-
+``mapInArrow`` over whole Arrow batches (the reference's model-per-
 request becomes kernel-per-worker: module import = the analog of the
 reference's load-models-once-at-startup, surya_service.py:55-75).
 
@@ -26,10 +26,8 @@ message, never a task failure (surya_service.py:150-158).
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
@@ -88,7 +86,7 @@ def extract_batch_arrow(batches):
     Chosen over mapInPandas deliberately: url/warc_ts/lang/partition_id
     pass through ZERO-COPY (no pandas object materialization either
     way), and the new columns are built with ``pa.array`` directly —
-    measured ~25% less wall than the pandas form on a 32 KB-page corpus,
+    measured ~25% less wall than a pandas form on a 32 KB-page corpus,
     all of it serialization overhead, none of it kernel work. Kernels
     import lazily per worker (the reference's load-models-once analog,
     surya_service.py:55-75).
@@ -157,68 +155,10 @@ def extract_batch_arrow(batches):
         batch_seq += 1
 
 
-def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas form of the kernel stage (kept as the readable
-    reference implementation and for pandas-pipeline composition; the
-    hot path uses extract_batch_arrow)."""
-    # lazy per-worker init — executed once per Python worker process
-    from ocr_engine_spark.kernels.clean import clean_text
-    from ocr_engine_spark.kernels.html_extract import extract_html
-    from ocr_engine_spark.kernels.pdf_extract import extract_pdf
-
-    batch_seq = 0
-    for pdf_batch in batches:
-        n = len(pdf_batch)
-        rows = {
-            "url": pdf_batch["url"], "warc_ts": pdf_batch["warc_ts"],
-            "lang": pdf_batch["lang"],
-            "partition_id": pdf_batch["partition_id"],
-        }
-        kinds, texts, cleans, spans_col, n_blocks = [], [], [], [], []
-        confs, statuses, errors, times = [], [], [], []
-        for payload in pdf_batch["html"]:
-            t0 = time.perf_counter()
-            raw = bytes(payload) if payload is not None else b""
-            if len(raw) > MAX_PAYLOAD_BYTES:
-                kind = "oversize"
-                res = {"text": None, "spans": [], "n_blocks": 0,
-                       "confidence": None, "status": "error",
-                       "error": f"payload exceeds {MAX_PAYLOAD_BYTES} "
-                                f"bytes"}
-            elif raw.startswith(b"%PDF"):
-                kind = "pdf"
-                res = extract_pdf(raw)
-            else:
-                kind = "html"
-                res = extract_html(raw)
-            txt = res["text"]
-            kinds.append(kind)
-            texts.append(txt)
-            cleans.append(clean_text(txt) if txt is not None else None)
-            spans_col.append(res["spans"])
-            n_blocks.append(res["n_blocks"])
-            confs.append(res["confidence"])
-            statuses.append(res["status"])
-            errors.append(res["error"])
-            times.append((time.perf_counter() - t0) * 1000.0)
-        out = pd.DataFrame({
-            **{k: v.reset_index(drop=True) for k, v in rows.items()},
-            "payload_kind": kinds, "extracted_text": texts,
-            "clean_text": cleans, "spans": spans_col,
-            "n_blocks": pd.array(n_blocks, dtype="int32"),
-            "confidence": pd.array(confs, dtype="float64"),
-            "status": statuses, "error": errors,
-            "processing_ms": times,
-            "batch_seq": pd.array([batch_seq] * n, dtype="int32"),
-        })
-        batch_seq += 1
-        yield out[[f.name for f in EXTRACT_SCHEMA.fields]]
-
-
 def provider_col(url=None) -> F.Column:
     """T11 — filename-substring provider detection (qwen_service.py:260),
     as a pure JVM expression. (No module-level Column objects: executors
-    import this module inside the mapInPandas worker, where Column
+    import this module inside the mapInArrow worker, where Column
     construction is unavailable.)"""
     u = F.lower(url if url is not None else F.col("url"))
     return (F.when(u.contains("dewa"), F.lit("DEWA"))

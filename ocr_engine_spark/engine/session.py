@@ -3,7 +3,9 @@
 One place for the knobs that matter at 100 TB (AQE, skew-join handling,
 Arrow batch sizing for the Python kernels) so tests, bench, and
 spark-submit entry points agree. In the sandbox we run local[N]; on a
-real cluster the same config applies per-executor.
+real cluster the same config applies per-executor, except the worker
+settings of ``worker_conf``, which only hold where workers run on the
+driver's host.
 """
 
 from __future__ import annotations
@@ -11,6 +13,29 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+import ocr_engine_spark
+
+# the directory that holds the ocr_engine_spark package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(
+    os.path.abspath(ocr_engine_spark.__file__)))
+
+
+def worker_conf(master: str) -> dict[str, str]:
+    """Python-worker settings for ``master``. On a local master the
+    workers see this checkout: they import the package (kernels, the
+    daemon) from ``PACKAGE_PARENT`` whatever the working directory, and
+    run under ``engine/worker_daemon.py`` (``pyspark.daemon`` without its
+    per-task zip re-reads and full-heap collects). Elsewhere the package
+    reaches executors as ``--py-files``, which land on ``sys.path`` only
+    inside each forked worker, too late for a daemon module, so any other
+    master keeps the stock daemon and the executors' own ``PYTHONPATH``."""
+    if not master.startswith("local"):
+        return {}
+    return {
+        "spark.executorEnv.PYTHONPATH": PACKAGE_PARENT,
+        "spark.python.daemon.module": "ocr_engine_spark.engine.worker_daemon",
+    }
 
 
 def build_session(app: str = "ocr-engine-spark", master: str | None = None,
@@ -43,4 +68,6 @@ def build_session(app: str = "ocr-engine-spark", master: str | None = None,
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    for key, value in worker_conf(master).items():
+        b = b.config(key, value)
     return b.getOrCreate()

@@ -65,7 +65,7 @@ def freeze_extractions(corpus_dir: str) -> str:
     for url, payload in zip(pages.column("url").to_pylist(),
                             pages.column("html").to_pylist()):
         raw = payload or b""
-        if len(raw) > MAX_PAYLOAD_BYTES:  # same guard as extract_batch
+        if len(raw) > MAX_PAYLOAD_BYTES:  # same guard as extract_batch_arrow
             kind, res = "oversize", {
                 "text": None, "clean": None, "confidence": None,
                 "status": "error"}

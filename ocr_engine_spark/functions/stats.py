@@ -36,13 +36,17 @@ from ocr_engine_spark.functions.sample import global_stratum_ranks
 def spearman_micro(df: DataFrame, sig_a: Column, sig_b: Column, *,
                    id_col: str = "doc_id") -> DataFrame:
     """One row: (n, sum_d2, rho_micro) — tie-broken Spearman rank
-    correlation of two signal columns over ``df``."""
+    correlation of two signal columns over ``df``. An empty ``df``
+    gives (0, 0, NULL)."""
     base = (df.select(F.col(id_col).alias("id"),
                       sig_a.alias("__a"), sig_b.alias("__b"))
             .withColumn("__s", F.lit(1)))
-    ra = (global_stratum_ranks(base, strata_col="__s", id_col="id",
-                               order_col="__a")
-          .select("id", F.col("__grank").alias("rank_a")))
+    ra = global_stratum_ranks(base, strata_col="__s", id_col="id",
+                              order_col="__a")
+    if ra is None:
+        return df.sparkSession.createDataFrame(
+            [(0, 0, None)], "n long, sum_d2 long, rho_micro long")
+    ra = ra.select("id", F.col("__grank").alias("rank_a"))
     rb = (global_stratum_ranks(base, strata_col="__s", id_col="id",
                                order_col="__b")
           .select("id", F.col("__grank").alias("rank_b")))

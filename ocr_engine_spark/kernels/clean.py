@@ -26,8 +26,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 # --- step tables (verbatim from the reference, same iteration order) ---
 
 # ocr_postprocessing.py:12-17
@@ -138,12 +136,3 @@ def clean_text(text: str) -> str:
     text = fix_table_formatting(text)
     text = normalize_whitespace(text)
     return text
-
-
-def clean_series(s: pd.Series) -> pd.Series:
-    """Vectorized (Arrow-batch) form used by the pandas-UDF stage.
-
-    Nulls pass through as nulls (errors-are-data discipline, mirroring
-    the reference's error-as-record behavior, surya_service.py:150-158).
-    """
-    return s.map(lambda t: clean_text(t) if isinstance(t, str) else t)

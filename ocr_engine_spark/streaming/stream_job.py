@@ -39,7 +39,7 @@ def read_pages_stream(spark: SparkSession, path: str,
 def extract_stream(pages: DataFrame, *, partitions: int | None = None
                    ) -> DataFrame:
     """The batch extraction core applied to a streaming DataFrame —
-    identical plan after the source node (mapInPandas is
+    identical plan after the source node (mapInArrow is
     streaming-compatible; the repartition becomes a per-micro-batch
     shuffle)."""
     return extract_pages(pages, partitions=partitions)

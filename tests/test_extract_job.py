@@ -203,22 +203,31 @@ def test_auto_balance_wants_four_tasks_per_slot(pages_df, monkeypatch):
 def test_oversize_payload_guard(monkeypatch):
     """Reference parity (Claude.md:204, 50 MB upload cap): oversized
     payloads become error records without entering the kernels. Tested
-    through the in-process pandas kernel with a lowered cap."""
-    import pandas as pd
+    through the in-process Arrow kernel with a lowered cap."""
+    import datetime
+
+    import pyarrow as pa
+
     from ocr_engine_spark.engine import extract_job as ej
     monkeypatch.setattr(ej, "MAX_PAYLOAD_BYTES", 4096)
-    pdf = pd.DataFrame({
+    rb = pa.RecordBatch.from_pydict({
         "url": ["u://big", "u://ok"],
-        "warc_ts": [pd.Timestamp("2025-05-01")] * 2,
-        "html": [b"x" * 5000,
-                 b"<p>small page with plenty of words to pass the "
-                 b"content threshold in one block</p>"],
-        "lang": ["en", "en"], "partition_id": [0, 0]})
-    out = next(ej.extract_batch(iter([pdf])))
-    big, ok = out.iloc[0], out.iloc[1]
-    assert big.status == "error" and "exceeds" in big.error
-    assert big.payload_kind == "oversize" and big.extracted_text is None
-    assert ok.status == "success"
+        "warc_ts": pa.array([datetime.datetime(2025, 5, 1)] * 2,
+                            pa.timestamp("us", tz="UTC")),
+        "html": pa.array([b"x" * 5000,
+                          b"<p>small page with plenty of words to pass the "
+                          b"content threshold in one block</p>"],
+                         pa.binary()),
+        "lang": ["en", "en"],
+        "partition_id": pa.array([0, 0], pa.int32())})
+    out = next(ej.extract_batch_arrow(iter([rb])))
+    assert out.schema.names == [f.name for f in ej.EXTRACT_SCHEMA.fields]
+    big, ok = out.to_pylist()
+    assert big["status"] == "error" and "exceeds" in big["error"]
+    assert big["payload_kind"] == "oversize"
+    assert big["extracted_text"] is None and big["clean_text"] is None
+    assert ok["status"] == "success" and ok["payload_kind"] == "html"
+    assert ok["url"] == "u://ok" and ok["batch_seq"] == 0
 
 
 def test_read_pages_autosplit(spark, tmp_path):

@@ -39,3 +39,16 @@ def test_partitioning_independent(spark):
     r2 = spearman_micro(df.repartition(13), F.col("a"),
                         F.col("b")).collect()[0]
     assert tuple(r1) == tuple(r2)
+
+
+def test_empty_input_gives_null_rho_row(spark):
+    """An empty frame yields one (0, 0, NULL) row instead of crashing on
+    the rank engine's None for empty input."""
+    from ocr_engine_spark.functions.stats import spearman_micro
+    df = spark.createDataFrame([], "doc_id long, a double, b double")
+    out = spearman_micro(df, F.col("a"), F.col("b"))
+    assert [tuple(r) for r in out.collect()] == [(0, 0, None)]
+    one = spearman_micro(df.union(spark.createDataFrame(
+        [(1, 1.0, 2.0)], df.schema)), F.col("a"), F.col("b"))
+    assert [(f.name, f.dataType) for f in out.schema] == \
+        [(f.name, f.dataType) for f in one.schema]

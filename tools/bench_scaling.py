@@ -209,7 +209,7 @@ own Python workers, so the 2->8 (pre-saturation) pair is the faithful
 proxy for the north rule.
 
 Why the plan scales: scan -> `repartition(4 x cores, xxhash64(url))`
--> ONE mapInPandas kernel stage -> sink. The only shuffle is the
+-> ONE mapInArrow kernel stage -> sink. The only shuffle is the
 explicit load-balancing repartition (measured < 1 s of the total);
 kernel work is embarrassingly parallel; 4 tasks/slot amortizes the
 ~10x per-doc cost variance (PDF layout vs HTML) so the last wave has
