@@ -10596,9 +10596,12 @@ def oracle_sql() -> dict[str, str]:
                FROM g GROUP BY lang),
         ua AS (SELECT lang, count(*)::BIGINT AS n_unique
                FROM u GROUP BY lang)
-        SELECT ga.lang, n_gated, n_unique, n_sampled, tokens_sampled
-        FROM ga JOIN ua ON ga.lang = ua.lang
-                JOIN s ON ga.lang = s.lang
+        SELECT ga.lang, n_gated,
+               coalesce(n_unique, 0)::BIGINT AS n_unique,
+               coalesce(n_sampled, 0)::BIGINT AS n_sampled,
+               coalesce(tokens_sampled, 0)::BIGINT AS tokens_sampled
+        FROM ga LEFT JOIN ua ON ga.lang = ua.lang
+                LEFT JOIN s ON ga.lang = s.lang
         ORDER BY ga.lang
     """
     d["warc_extract"] = """

@@ -16,8 +16,9 @@ O(doc chars + matches) per row.
 
 Value parity contract: identical results to ``lexicon_scan`` for the
 same lexicon — lowercase fold, ASCII ``\\b`` word boundaries
-(word chars ``[a-z0-9_]`` post-fold), per-term independent occurrence
-counts summed per category, same output schema and integer ppm.
+(word chars ``[a-z0-9_]`` post-fold), per-term independent
+non-overlapping occurrence counts summed per category, same output
+schema and integer ppm.
 Asserted by tests AND by sharing lexicon_scan's DuckDB ORACLE
 verbatim (``lexicon_ac``). Terms must start and end with word
 characters (asserted at build) — the same restriction under which
@@ -89,8 +90,13 @@ def build_automaton(terms: list[str]):
 
 def scan_counts(text: str, goto, fail, out, lens,
                 cat_of: list[int], n_cats: int) -> list[int]:
-    """Per-category whole-word occurrence counts in one pass."""
+    """Per-category whole-word occurrence counts in one pass. Each
+    term counts NON-OVERLAPPING matches, leftmost first, as
+    ``regexp_count`` does: a match that starts before the end of the
+    same term's last counted match is skipped (``'a b a'`` occurs once
+    in ``'a b a b a'``, not twice)."""
     counts = [0] * n_cats
+    last_end = [0] * len(lens)  # per term: end of its last counted match
     t = text.lower()
     n = len(t)
     s = 0
@@ -101,8 +107,10 @@ def scan_counts(text: str, goto, fail, out, lens,
         if out[s] and (i + 1 >= n or t[i + 1] not in _WORD):
             for tid in out[s]:
                 st = i + 1 - lens[tid]
-                if st == 0 or t[st - 1] not in _WORD:
+                if st >= last_end[tid] and (st == 0
+                                            or t[st - 1] not in _WORD):
                     counts[cat_of[tid]] += 1
+                    last_end[tid] = i + 1
     return counts
 
 

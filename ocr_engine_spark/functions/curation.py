@@ -37,15 +37,12 @@ from ocr_engine_spark.functions.text import (
 )
 
 
-def curate_corpus(docs: DataFrame, *, min_tokens: int = 25,
-                  min_quality_micro: int = 350_000,
-                  n_per_lang: int = 20, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  lang_col: str = "lang") -> DataFrame:
-    """The curated sample itself: (doc_id, lang, n_tokens) rows that
-    survive gate -> exact-dedup -> per-language quota, deterministic
-    for a given population regardless of partitioning (the portable
-    hash rank's property)."""
+def _gate_and_dedup(docs: DataFrame, *, min_tokens: int,
+                    min_quality_micro: int, id_col: str, text_col: str,
+                    lang_col: str) -> tuple[DataFrame, DataFrame]:
+    """(gated, unique): the quality-gated rows (id, lang, __text,
+    n_tokens, __q) and their exact-dedup survivors (doc_id, lang,
+    n_tokens) — the lowest id wins per normalized-text fingerprint."""
     gated = (docs
              .select(F.col(id_col), F.col(lang_col).alias("lang"),
                      F.col(text_col).alias("__text"),
@@ -62,6 +59,22 @@ def curate_corpus(docs: DataFrame, *, min_tokens: int = 25,
                     .alias("__m"))
             .groupBy("__fp").agg(F.min("__m").alias("__m"))
             .select("__m.doc_id", "__m.lang", "__m.n_tokens"))
+    return gated, uniq
+
+
+def curate_corpus(docs: DataFrame, *, min_tokens: int = 25,
+                  min_quality_micro: int = 350_000,
+                  n_per_lang: int = 20, id_col: str = "doc_id",
+                  text_col: str = "text",
+                  lang_col: str = "lang") -> DataFrame:
+    """The curated sample itself: (doc_id, lang, n_tokens) rows that
+    survive gate -> exact-dedup -> per-language quota, deterministic
+    for a given population regardless of partitioning (the portable
+    hash rank's property)."""
+    _, uniq = _gate_and_dedup(docs, min_tokens=min_tokens,
+                              min_quality_micro=min_quality_micro,
+                              id_col=id_col, text_col=text_col,
+                              lang_col=lang_col)
     return stratified_sample(uniq, int(n_per_lang), strata_col="lang",
                              id_col="doc_id")
 
@@ -73,28 +86,18 @@ def curation_summary(docs: DataFrame, *, min_tokens: int = 25,
                      lang_col: str = "lang") -> DataFrame:
     """Per-language funnel of the composed pipeline: (lang, n_gated,
     n_unique, n_sampled, tokens_sampled) — the acceptance report read
-    before committing a training mix. The three stage aggregates are
-    branches of one logical plan; Catalyst reuses only IDENTICAL
-    exchanges, so the map-side gate re-executes per branch (columnar
-    scan + expression chain — cheap). At 100 TB run `curate_corpus`
-    for the sample and derive the report from its materialized
-    output instead of re-gating three times."""
-    gated = (docs
-             .select(F.col(id_col), F.col(lang_col).alias("lang"),
-                     F.col(text_col).alias("__text"),
-                     token_count_col(F.col(text_col)).alias("n_tokens"),
-                     F.floor(quality_score_raw_col(F.col(text_col))
-                             * 1e6 + F.lit(0.5)).alias("__q"))
-             .filter((F.col("n_tokens") >= int(min_tokens))
-                     & (F.col("__q") >= int(min_quality_micro))))
-    uniq = (gated
-            .select(fingerprint_col(F.col("__text")).alias("__fp"),
-                    F.struct(F.col(id_col).alias("doc_id"),
-                             F.col("lang").alias("lang"),
-                             F.col("n_tokens").alias("n_tokens"))
-                    .alias("__m"))
-            .groupBy("__fp").agg(F.min("__m").alias("__m"))
-            .select("__m.doc_id", "__m.lang", "__m.n_tokens"))
+    before committing a training mix. Every language with a gated row
+    gets a row: one whose rows all dedup into another language's copy
+    reads ``(n_gated, 0, 0, 0)`` instead of vanishing. The three stage
+    aggregates are branches of one logical plan; Catalyst reuses only
+    IDENTICAL exchanges, so the map-side gate re-executes per branch
+    (columnar scan + expression chain — cheap). At 100 TB run
+    `curate_corpus` for the sample and derive the report from its
+    materialized output instead of re-gating three times."""
+    gated, uniq = _gate_and_dedup(docs, min_tokens=min_tokens,
+                                  min_quality_micro=min_quality_micro,
+                                  id_col=id_col, text_col=text_col,
+                                  lang_col=lang_col)
     sampled = stratified_sample(uniq, int(n_per_lang),
                                 strata_col="lang", id_col="doc_id")
     g = gated.groupBy("lang").agg(
@@ -104,7 +107,9 @@ def curation_summary(docs: DataFrame, *, min_tokens: int = 25,
     s = sampled.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_sampled"),
         F.sum("n_tokens").cast("long").alias("tokens_sampled"))
-    return (g.join(u, "lang").join(s, "lang")
-            .select("lang", "n_gated", "n_unique", "n_sampled",
-                    "tokens_sampled")
+    zero = F.lit(0).cast("long")
+    return (g.join(u, "lang", "left").join(s, "lang", "left")
+            .select("lang", "n_gated",
+                    *[F.coalesce(c, zero).alias(c) for c in
+                      ("n_unique", "n_sampled", "tokens_sampled")])
             .orderBy("lang"))

@@ -10,7 +10,7 @@ scores. This module derives that signal from the pages table itself:
     bytes, entirely in JVM codegen'd expressions (decode + one
     ``regexp_extract_all``): no UDF, no shuffle, pipelined into the
     parquet scan. Byte-transparent ISO-8859-1 decode + a leading-``<``
-    gate, the ``meta_robots_col`` discipline (scrub.py:279) — legacy
+    gate, the ``scrub._html_head`` discipline — legacy
     charsets keep their ASCII hrefs verbatim and PDF payloads are
     never decoded.
   * ``outlink_records`` / ``host_edges`` — exploded per-link records
@@ -55,7 +55,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ocr_engine_spark.functions.portability import is_portable_ascii
-from ocr_engine_spark.functions.scrub import host_col
+from ocr_engine_spark.functions.scrub import (
+    _grammar_rows, _html_head, host_col,
+)
 
 #: shared Java/RE2 pattern: an ``<a>`` tag's (first) href value,
 #: captured WITH its quotes (group 1) so quote stripping is a separate,
@@ -106,14 +108,12 @@ def outlink_hrefs_col(html: Column, *, scan_bytes: int | None = None
     preserved, duplicates kept (dedupe is the caller's policy).
     ``scan_bytes`` bounds the decode for prefix-only uses; the default
     decodes the full payload (links live in the body)."""
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    s = F.decode(prefix, "ISO-8859-1")
+    s, is_html = _html_head(html, scan_bytes)
     quoted = F.regexp_extract_all(s, F.lit(A_HREF_RE),
                                   F.lit(_HREF_GROUP))
     hrefs = F.filter(F.transform(quoted, strip_quotes_col),
                      clean_ascii_href)
-    return F.when(F.substring(html, 1, 1) == F.lit(b"<"), hrefs)
+    return F.when(is_html, hrefs)
 
 
 def target_host_col(href: Column, src_host: Column) -> Column:
@@ -158,44 +158,35 @@ def resolve_url_col(href: Column, base_url: Column) -> Column:
             .otherwise(F.concat(base_dir, href)))
 
 
-def outlink_records(pages: DataFrame, *, url_col: str = "url",
-                    html_col: str = "html") -> DataFrame:
+def outlink_records(pages: DataFrame) -> DataFrame:
     """(url, href, target_url) — one row per extracted link, resolved
     to an absolute target. Map-only: decode + regex + explode, no
     shuffle; Catalyst prunes the scan to (url, html)."""
     from ocr_engine_spark.functions.generate import explode_nonull
-    hrefs = outlink_hrefs_col(F.col(html_col))
+    hrefs = outlink_hrefs_col(F.col("html"))
     # explode_nonull: a plain explode would re-evaluate the whole href
     # grammar in a Catalyst-inferred guard filter (see generate.py)
-    return (explode_nonull(pages, hrefs, "href",
-                           F.col(url_col).alias("url"))
+    return (explode_nonull(pages, hrefs, "href", "url")
             .withColumn("target_url",
                         resolve_url_col(F.col("href"), F.col("url")))
             .where(F.col("target_url").isNotNull()))
 
 
-def anchor_records(pages: DataFrame, *, url_col: str = "url",
-                   html_col: str = "html") -> DataFrame:
+def anchor_records(pages: DataFrame) -> DataFrame:
     """(url, href, target_url, anchor_text) — links WITH their anchor
     text (inner tags stripped, whitespace collapsed). Anchor text is
     the classic target-page relevance signal (it describes the page it
     points AT); aggregate it per target to build a queryable signal
     table (anchor_term_profile — whose ascii_only mode makes the whole
     path blob-escape-oracle-portable despite non-ASCII anchor text)."""
-    elems = F.regexp_extract_all(F.decode(F.col(html_col), "ISO-8859-1"),
-                                 F.lit(A_ELEM_RE), F.lit(0))
-    gated = F.when(F.substring(F.col(html_col), 1, 1) == F.lit(b"<"),
-                   elems)
-    from ocr_engine_spark.functions.generate import explode_nonull
-    out = (explode_nonull(pages, gated, "elem",
-                          F.col(url_col).alias("url"))
+    out = (_grammar_rows(pages, A_ELEM_RE, 0, None)
            .select("url",
                    strip_quotes_col(
-                       F.regexp_extract("elem", A_ELEM_RE, 2))
+                       F.regexp_extract("match", A_ELEM_RE, 2))
                    .alias("href"),
                    F.trim(F.regexp_replace(
                        F.regexp_replace(
-                           F.regexp_extract("elem", A_ELEM_RE, 3),
+                           F.regexp_extract("match", A_ELEM_RE, 3),
                            r"<[^>]*>", " "),
                        r"[ \t\n\r]+", " ")).alias("anchor_text")))
     return (out.where(clean_ascii_href(F.col("href")))
@@ -205,8 +196,7 @@ def anchor_records(pages: DataFrame, *, url_col: str = "url",
             .select("url", "href", "target_url", "anchor_text"))
 
 
-def anchor_term_profile(pages: DataFrame, *, url_col: str = "url",
-                        html_col: str = "html", top_k: int = 5,
+def anchor_term_profile(pages: DataFrame, *, top_k: int = 5,
                         ascii_only: bool = False) -> DataFrame:
     """(dst_host, term, n_term, pos) — the ``top_k`` most frequent
     anchor-text terms pointing AT each host. Anchor text describes the
@@ -220,7 +210,7 @@ def anchor_term_profile(pages: DataFrame, *, url_col: str = "url",
     by corpus size. ``ascii_only`` drops records whose anchor text
     isn't printable-ASCII (the oracle-portability regime — see
     clean_ascii_href); the default keeps all text."""
-    a = anchor_records(pages, url_col=url_col, html_col=html_col)
+    a = anchor_records(pages)
     if ascii_only:
         a = a.where(is_portable_ascii(F.col("anchor_text")))
     from ocr_engine_spark.functions.generate import explode_nonull
@@ -240,14 +230,13 @@ def anchor_term_profile(pages: DataFrame, *, url_col: str = "url",
             .where(F.col("pos") <= top_k))
 
 
-def host_edges(pages: DataFrame, *, url_col: str = "url",
-               html_col: str = "html",
+def host_edges(pages: DataFrame, *,
                keep_self_loops: bool = True) -> DataFrame:
     """(src_host, dst_host, n_links) host-level edge aggregate over the
     corpus. One shuffle (the groupBy partial-combines map-side); the
     href explode and host resolution are pipelined into the scan."""
-    src = host_col(F.col(url_col))
-    hrefs = outlink_hrefs_col(F.col(html_col))
+    src = host_col(F.col("url"))
+    hrefs = outlink_hrefs_col(F.col("html"))
     from ocr_engine_spark.functions.generate import explode_nonull
     e = (explode_nonull(pages, hrefs, "href", src.alias("src_host"))
          .select("src_host",
@@ -466,6 +455,22 @@ def pagerank(edges: DataFrame, *, src: str = "src_host",
     so per-node weight sums up to ~9e6 are safe — host-level link
     counts, not raw-page multiplicities.
     """
+    return _damped_rank(edges, None, src=src, dst=dst, weight=weight,
+                        iterations=iterations, damping_pct=damping_pct,
+                        scale=scale, out="rank")
+
+
+def _damped_rank(edges: DataFrame, seeds: DataFrame | None, *, src: str,
+                 dst: str, weight: str | None, iterations: int,
+                 damping_pct: int, scale: int, out: str) -> DataFrame:
+    """(node, <out>): the integer damped-rank iteration shared by
+    :func:`pagerank` (``seeds=None``: every node is a seed) and
+    :func:`trustrank` (``seeds``: a one-column ``node`` table). Seeds
+    start and teleport with ``scale div n_seeds`` mass each and receive
+    the dangling mass, ``dangling div n_seeds`` per seed; non-seeds
+    start at 0 and gain only link contributions. With every node a
+    seed this is exactly PageRank's uniform start, teleport and
+    dangling redistribution."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     if not 0 <= damping_pct <= 100:
@@ -482,40 +487,58 @@ def pagerank(edges: DataFrame, *, src: str = "src_host",
     if weight is None:
         e = e.distinct()
     else:
-        e = (e.groupBy("s", "d").agg(F.sum("w").alias("w")))
+        e = e.groupBy("s", "d").agg(F.sum("w").alias("w"))
     e = e.persist()
-    n = nodes.count()  # driver scalar: graph metadata, 1 value
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0).cast("long"))
+    if seeds is None:
+        marked = nodes.withColumn("is_seed", F.lit(True))
+        ns = nodes.count()  # driver scalar: graph metadata, 1 value
+        if ns == 0:
+            return nodes.withColumn(out, F.lit(0).cast("long"))
+    else:
+        # seeds outside the graph carry no mass
+        sd = (seeds.distinct().join(nodes, "node")
+              .withColumn("is_seed", F.lit(True)))
+        marked = nodes.join(F.broadcast(sd), "node", "left").persist()
+        ns = marked.where(F.col("is_seed")).count()  # driver scalar
+        if ns == 0:
+            raise ValueError("no seed intersects the graph's node set")
     # out-mass denominator: weight sum (== out-degree when unweighted)
     deg = e.groupBy(F.col("s").alias("node")).agg(
         F.sum("w").alias("deg"))
-    base = scale // n
+    base = scale // ns
     tele = (base * (100 - damping_pct)) // 100
-    ranks = (nodes.withColumn("rank", F.lit(base).cast("long"))
-             .localCheckpoint())
+    ranks = (marked.select(
+        "node",
+        F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0))
+        .cast("long").alias(out))
+        .localCheckpoint())
     for _ in range(iterations):
         r = ranks.join(deg, "node", "left")
         linked = r.where(F.col("deg").isNotNull())
         shares = (e.join(linked, e["s"] == linked["node"])
                   .select(F.col("d").alias("node"),
-                          F.expr("(rank * w) div deg").alias("share")))
+                          F.expr(f"({out} * w) div deg").alias("share")))
         contrib = shares.groupBy("node").agg(
             F.sum("share").alias("contrib"))
         dangling = (r.where(F.col("deg").isNull())
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0))
+                    .agg(F.coalesce(F.sum(out), F.lit(0))
                          .alias("dangling")))
-        ranks = (nodes.join(contrib, "node", "left")
+        ranks = (marked.join(contrib, "node", "left")
                  .crossJoin(F.broadcast(dangling))
-                 .select("node",
-                         (F.lit(tele).cast("long")
-                          + F.expr(f"({damping_pct} * (coalesce(contrib,"
-                                   f" CAST(0 AS BIGINT)) + (dangling div"
-                                   f" {n}))) div 100"))
-                         .cast("long").alias("rank"))
+                 .select(
+                     "node",
+                     (F.when(F.col("is_seed"), F.lit(tele))
+                      .otherwise(F.lit(0)).cast("long")
+                      + F.expr(
+                          f"({damping_pct} * (coalesce(contrib,"
+                          f" CAST(0 AS BIGINT)) + CASE WHEN is_seed"
+                          f" THEN dangling div {ns} ELSE 0 END))"
+                          f" div 100"))
+                     .cast("long").alias(out))
                  .localCheckpoint())
     e.unpersist()
     nodes.unpersist()
+    marked.unpersist()
     return ranks
 
 
@@ -676,70 +699,10 @@ def trustrank(edges: DataFrame, seeds: DataFrame, *,
     even if listed as seeds. The usual spam-mass workflow pairs this
     with :func:`pagerank`: ``spam_mass = (pr - trust) / pr``.
     """
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    if not 0 <= damping_pct <= 100:
-        raise ValueError("damping_pct must be in [0, 100]")
-    wcol = (F.col(weight).cast("long") if weight is not None
-            else F.lit(1).cast("long"))
-    e0 = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"),
-                      wcol.alias("w"))
-    nodes = (e0.select(F.col("s").alias("node"))
-             .unionByName(e0.select(F.col("d").alias("node")))
-             .distinct()
-             .persist())
-    e = e0.where(F.col("s") != F.col("d"))
-    if weight is None:
-        e = e.distinct()
-    else:
-        e = e.groupBy("s", "d").agg(F.sum("w").alias("w"))
-    e = e.persist()
-    sd = (seeds.select(F.col(seed_col).alias("node")).distinct()
-          .join(nodes, "node")  # seeds outside the graph carry no mass
-          .withColumn("is_seed", F.lit(True))
-          .persist())
-    ns = sd.count()  # driver scalar: |seeds|, graph metadata
-    if ns == 0:
-        raise ValueError("no seed intersects the graph's node set")
-    deg = e.groupBy(F.col("s").alias("node")).agg(
-        F.sum("w").alias("deg"))
-    base = scale // ns
-    tele = (base * (100 - damping_pct)) // 100
-    marked = nodes.join(F.broadcast(sd), "node", "left").persist()
-    ranks = (marked.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0))
-        .cast("long").alias("trust"))
-        .localCheckpoint())
-    for _ in range(iterations):
-        r = ranks.join(deg, "node", "left")
-        linked = r.where(F.col("deg").isNotNull())
-        shares = (e.join(linked, e["s"] == linked["node"])
-                  .select(F.col("d").alias("node"),
-                          F.expr("(trust * w) div deg").alias("share")))
-        contrib = shares.groupBy("node").agg(
-            F.sum("share").alias("contrib"))
-        dangling = (r.where(F.col("deg").isNull())
-                    .agg(F.coalesce(F.sum("trust"), F.lit(0))
-                         .alias("dangling")))
-        ranks = (marked.join(contrib, "node", "left")
-                 .crossJoin(F.broadcast(dangling))
-                 .select(
-                     "node",
-                     (F.when(F.col("is_seed"), F.lit(tele))
-                      .otherwise(F.lit(0)).cast("long")
-                      + F.expr(
-                          f"({damping_pct} * (coalesce(contrib,"
-                          f" CAST(0 AS BIGINT)) + CASE WHEN is_seed"
-                          f" THEN dangling div {ns} ELSE 0 END))"
-                          f" div 100"))
-                     .cast("long").alias("trust"))
-                 .localCheckpoint())
-    e.unpersist()
-    nodes.unpersist()
-    sd.unpersist()
-    marked.unpersist()
-    return ranks
+    return _damped_rank(edges, seeds.select(F.col(seed_col).alias("node")),
+                        src=src, dst=dst, weight=weight,
+                        iterations=iterations, damping_pct=damping_pct,
+                        scale=scale, out="trust")
 
 
 def crawl_schedule(pages: DataFrame, *, n_shards: int = 8,

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ocr_engine_spark.functions.portability import portable_or_null
 
 _REGEX_SPECIALS = ".^$+?()[]{}|"  # escaped in patterns ('\\' first)
 
@@ -343,8 +342,7 @@ _FEED_TYPE_RE = (r'(?i)[ \t\n\r]type[ \t\n\r]*=[ \t\n\r]*'
                  r'["\']?application/(?:rss|atom)\+xml')
 
 
-def feed_links(pages: DataFrame, *, url_col: str = "url",
-               html_col: str = "html",
+def feed_links(pages: DataFrame, *,
                scan_bytes: int | None = 8192,
                ascii_only: bool = True) -> DataFrame:
     """(url, pos, feed_url) — every
@@ -357,22 +355,11 @@ def feed_links(pages: DataFrame, *, url_col: str = "url",
     ``ascii_only``) — one map-side regexp_extract_all + posexplode,
     zero shuffle, zero UDF."""
     from ocr_engine_spark.functions.scrub import (
-        _HREF_VAL_RE, _LINK_TAG_RE,
+        _HREF_VAL_RE, _LINK_TAG_RE, _grammar_rows, _trim_gate,
     )
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    tags = F.when(is_html,
-                  F.regexp_extract_all(head, F.lit(_LINK_TAG_RE),
-                                       F.lit(0)))
-    e = pages.select(F.col(url_col).alias("url"),
-                     F.posexplode(tags).alias("pos", "__t"))
-    href = F.nullif(F.regexp_extract("__t", _HREF_VAL_RE, 1), F.lit(""))
-    if ascii_only:
-        href = portable_or_null(href)
-    keep = F.col("__t").rlike(_FEED_TYPE_RE)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
-                     F.when(keep, href).alias("feed_url"))
+    e = _grammar_rows(pages, _LINK_TAG_RE, 0, scan_bytes)
+    href = _trim_gate(F.regexp_extract("match", _HREF_VAL_RE, 1),
+                      ascii_only=ascii_only)
+    keep = F.col("match").rlike(_FEED_TYPE_RE)
+    return (e.select("url", "pos", F.when(keep, href).alias("feed_url"))
             .filter(F.col("feed_url").isNotNull()))

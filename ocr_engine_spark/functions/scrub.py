@@ -395,11 +395,72 @@ def host_concentration(pages: DataFrame, *, url_col: str = "url",
         .alias("gini_micro"))
 
 
+# ---------------------------------------------------------------------------
+# HTML payload scan shell: every page extractor below reads the payload
+# through these helpers, so the charset discipline, the non-HTML gate
+# and the whitespace/portability finish are written once
+# ---------------------------------------------------------------------------
+
+def _html_head(html: Column, scan_bytes: int | None) -> tuple[Column, Column]:
+    """``(head, is_html)`` for an HTML payload column. ``head`` is the
+    ISO-8859-1 decode of the first ``scan_bytes`` bytes (the whole
+    payload when None: the exact-oracle mode, DuckDB cannot slice
+    blobs). ISO-8859-1, not UTF-8: every grammar here is ASCII, latin-1
+    maps every byte (no decode failure on mojibake or legacy-charset
+    pages, which still carry their ASCII markup verbatim), and a prefix
+    cut can never split a character. ``is_html`` is the leading-``<``
+    gate: PDF and other binary payloads are never read as markup."""
+    prefix = html if scan_bytes is None else F.substring(html, 1,
+                                                         scan_bytes)
+    return (F.decode(prefix, "ISO-8859-1"),
+            F.substring(html, 1, 1) == F.lit(b"<"))
+
+
+def _trim_gate(v: Column, *, ascii_only: bool = True) -> Column:
+    """Trim, empty -> NULL; under ``ascii_only`` the engine-wide
+    clean-printable portability gate (printable ASCII, no backslash: a
+    raw high byte fails it on the Spark side and carries a blob-escape
+    backslash on the DuckDB side, so both engines reject the same
+    values). Used directly for JSON payloads (never collapsed) and for
+    value classes that cannot hold whitespace."""
+    v = F.nullif(F.trim(v), F.lit(""))
+    if ascii_only:
+        v = portable_or_null(v)
+    return v
+
+
+def _head_field_finish(raw: Column, *, ascii_only: bool = True) -> Column:
+    """Finish an ALREADY-extracted raw text value: collapse whitespace
+    runs, then ``_trim_gate``. Kept apart from the regexp_extract so
+    extractors can materialize the expensive extract ONCE in an inner
+    Project — nullif + the gate reference their operand ~6x, and with
+    the extract inlined that replication (x n_fields) blows the JVM's
+    64 KB whole-stage-codegen limit (og_metadata was the proof)."""
+    return _trim_gate(F.regexp_replace(raw, r"[ \t\n\r]+", " "),
+                      ascii_only=ascii_only)
+
+
+def _grammar_rows(pages: DataFrame, grammar: str, group: int,
+                  scan_bytes: int | None) -> DataFrame:
+    """``(url, pos, match)``: capture ``group`` of every ``grammar``
+    match in each HTML page's scanned head, ``pos`` numbering the
+    matches per url in document order. One codegen'd
+    ``regexp_extract_all`` + a map-side ``posexplode_nonull`` — zero
+    shuffle, zero UDF, and no Catalyst-inferred guard that would
+    re-evaluate the grammar (generate.py)."""
+    head, is_html = _html_head(F.col("html"), scan_bytes)
+    ms = F.when(is_html, F.regexp_extract_all(head, F.lit(grammar),
+                                              F.lit(group)))
+    return (posexplode_nonull(pages, ms, "pos", "match", "url")
+            .select("url", F.col("pos").cast("long").alias("pos"),
+                    "match"))
+
+
 _CHARSET_DECL_RE = (r'(?i)<meta[^>]+charset[ \t\n\r]*=[ \t\n\r]*'
                     r'["\']?[ \t\n\r]*([A-Za-z0-9_-]+)')
 
 
-def charset_report(pages: DataFrame, *, html_col: str = "html",
+def charset_report(pages: DataFrame, *,
                    scan_bytes: int | None = 4096) -> DataFrame:
     """(charset, n_pages) — the corpus's declared-encoding landscape:
     the first ``<meta charset=..>`` / ``http-equiv content-type``
@@ -409,11 +470,7 @@ def charset_report(pages: DataFrame, *, html_col: str = "html",
     much mojibake repair to expect). Lowercased, first match wins;
     HTML without a declaration -> ``(undeclared)``; non-HTML payloads
     -> ``(binary)``. One map-side extract + one count shuffle."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
+    head, is_html = _html_head(F.col("html"), scan_bytes)
     decl = F.nullif(F.lower(F.regexp_extract(
         head, _CHARSET_DECL_RE, 1)), F.lit(""))
     cs = F.when(~is_html, F.lit("(binary)")) \
@@ -432,16 +489,13 @@ def skeleton_col(html: Column, *, scan_bytes: int | None = 4096) -> Column:
     hrefs differing per page mean 'different template instance', a
     pinned conservatism that under-merges, never over-merges).
     NULL for non-HTML payloads (leading-``<`` gate)."""
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
+    head, is_html = _html_head(html, scan_bytes)
     skel = F.regexp_replace(head, r">[^<]*", ">")
     skel = F.regexp_replace(skel, r"[ \t\n\r]+", " ")
-    return F.when(F.substring(html, 1, 1) == F.lit(b"<"), skel)
+    return F.when(is_html, skel)
 
 
-def template_report(pages: DataFrame, *, url_col: str = "url",
-                    html_col: str = "html",
+def template_report(pages: DataFrame, *,
                     scan_bytes: int | None = 4096) -> DataFrame:
     """(host, n_pages, n_skeletons, top_share_micro) — per-host
     template concentration: how many of a host's HTML pages share one
@@ -465,10 +519,10 @@ def template_report(pages: DataFrame, *, url_col: str = "url",
     this drops ~nothing; a production variant can swap md5 for
     xxhash64 over raw bytes and skip the gate (the simhash rule)."""
     from ocr_engine_spark.functions.text import md5_int60_col
-    skel = skeleton_col(F.col(html_col), scan_bytes=scan_bytes)
+    skel = skeleton_col(F.col("html"), scan_bytes=scan_bytes)
     skel = portable_or_null(skel)
     sk = md5_int60_col(skel)
-    per = (pages.select(host_col(F.col(url_col)).alias("host"),
+    per = (pages.select(host_col(F.col("url")).alias("host"),
                         sk.alias("__skel"))
            .where(F.col("__skel").isNotNull())
            .groupBy("host", "__skel")
@@ -488,20 +542,13 @@ def meta_robots_col(html: Column, *, scan_bytes: int | None = 4096
     match (name-first and content-first). ``scan_bytes=None`` decodes
     the full payload (exact-oracle mode); the default bounds the decode
     for the scan path."""
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    # ISO-8859-1, not UTF-8: the directive grammar is pure ASCII per
-    # the robots-meta spec, latin-1 maps every byte (no ANSI decode
-    # failure on mojibake/legacy-charset pages — which still carry
-    # their ASCII robots tags verbatim), and a prefix cut can never
-    # split a character
-    head = F.lower(F.decode(prefix, "ISO-8859-1"))
+    head, is_html = _html_head(html, scan_bytes)
+    head = F.lower(head)
     directive = F.coalesce(
         F.nullif(F.regexp_extract(head, _ROBOTS_NAME_FIRST, 1), F.lit("")),
         F.nullif(F.regexp_extract(head, _ROBOTS_CONTENT_FIRST, 1),
                  F.lit("")))
-    return F.when(F.substring(html, 1, 1) == F.lit(b"<"),
-                  F.trim(directive))
+    return F.when(is_html, F.trim(directive))
 
 
 def noindex_col(html: Column, *, scan_bytes: int | None = 4096) -> Column:
@@ -516,22 +563,22 @@ def noindex_col(html: Column, *, scan_bytes: int | None = 4096) -> Column:
             & d.isNotNull())
 
 
-def filter_noindex(df: DataFrame, *, html_col: str = "html",
+def filter_noindex(df: DataFrame, *,
                    scan_bytes: int | None = 4096) -> DataFrame:
     """Drop pages whose robots meta opts out (NULL directive = keep:
     absence of the tag is consent for indexing)."""
     return df.where(~F.coalesce(
-        noindex_col(F.col(html_col), scan_bytes=scan_bytes),
+        noindex_col(F.col("html"), scan_bytes=scan_bytes),
         F.lit(False)))
 
 
-def robots_report(df: DataFrame, *, html_col: str = "html",
+def robots_report(df: DataFrame, *,
                   scan_bytes: int | None = 4096) -> DataFrame:
     """(directive, n_pages, n_dropped) — corpus-wide robots-meta
     audit; '(absent)' covers untagged HTML and non-HTML payloads."""
-    d = meta_robots_col(F.col(html_col), scan_bytes=scan_bytes)
-    drop = F.coalesce(noindex_col(F.col(html_col),
-                                  scan_bytes=scan_bytes), F.lit(False))
+    d = meta_robots_col(F.col("html"), scan_bytes=scan_bytes)
+    drop = F.coalesce(noindex_col(F.col("html"), scan_bytes=scan_bytes),
+                      F.lit(False))
     return (df.select(F.coalesce(d, F.lit("(absent)")).alias("directive"),
                       drop.cast("long").alias("__drop"))
             .groupBy("directive")
@@ -561,34 +608,36 @@ _CANON_HREF_FIRST = (r'(?i)<link[^>]*href[ \t\n\r]*=[ \t\n\r]*'
                      r'["\']?canonical(?:["\' \t\n\r/>]|$)')
 
 
-def _head_field_finish(raw: Column, *, ascii_only: bool = True) -> Column:
-    """Finishing half of a head-section field over an ALREADY-extracted
-    raw group: collapse whitespace, trim, empty -> NULL; under
-    ``ascii_only`` the engine-wide clean-printable portability gate.
-    Split from the regexp_extract so extractors can materialize the
-    expensive extract ONCE in an inner Project — nullif + the gate
-    reference their operand ~6x, and with the extract inlined that
-    replication (x n_fields) blows the JVM's 64 KB whole-stage-codegen
-    limit (og_metadata was the proof)."""
-    v = F.nullif(F.trim(F.regexp_replace(raw, r"[ \t\n\r]+", " ")),
-                 F.lit(""))
-    if ascii_only:
-        v = portable_or_null(v)
-    return v
+def _first_match_fields(pages: DataFrame,
+                        fields: dict[str, tuple[str, ...]],
+                        scan_bytes: int | None,
+                        ascii_only: bool) -> DataFrame:
+    """(url, *fields): each field is the first of its grammars, tried in
+    order, whose finished group 1 is non-NULL; NULL for non-HTML
+    payloads. Pure map-side plan of TWO stacked Projects, zero shuffle,
+    zero UDF — the inner Project materializes every regexp extract
+    once, the outer finishes (trim/nullif/gate) over the cheap
+    attribute refs. CollapseProject keeps them separate because the
+    producer expressions are non-cheap and multiply referenced;
+    collapsed into one Project the replicated decode+extract subtrees
+    overflow the 64 KB codegen limit and the whole stage runs
+    interpreted (~6x slower — BENCH.md round-3/4 notes)."""
+    head, is_html = _html_head(F.col("html"), scan_bytes)
+    inner = pages.select(
+        "url", is_html.alias("__is_html"),
+        *[F.regexp_extract(head, pat, 1).alias(f"__{name}_{i}")
+          for name, pats in fields.items() for i, pat in enumerate(pats)])
+
+    def _field(name: str, n: int) -> Column:
+        fin = [_head_field_finish(F.col(f"__{name}_{i}"),
+                                  ascii_only=ascii_only) for i in range(n)]
+        return F.when(F.col("__is_html"), F.coalesce(*fin)).alias(name)
+
+    return inner.select("url", *[_field(name, len(pats))
+                                 for name, pats in fields.items()])
 
 
-def _head_field(head: Column, pattern: str, *,
-                ascii_only: bool = True) -> Column:
-    """First-match head-section field: extract group 1, collapse
-    whitespace, trim, empty -> NULL; under ``ascii_only`` apply the
-    engine-wide clean-printable portability gate (printable ASCII, no
-    backslash — matches DuckDB's blob-escape projection)."""
-    return _head_field_finish(F.regexp_extract(head, pattern, 1),
-                              ascii_only=ascii_only)
-
-
-def page_metadata(pages: DataFrame, *, url_col: str = "url",
-                  html_col: str = "html",
+def page_metadata(pages: DataFrame, *,
                   scan_bytes: int | None = 8192,
                   ascii_only: bool = True) -> DataFrame:
     """(url, title, meta_description, canonical_url) — the head-section
@@ -598,44 +647,16 @@ def page_metadata(pages: DataFrame, *, url_col: str = "url",
     syntactic merge). First match wins per field; both attribute
     orders for meta/link; values whitespace-collapsed; empty -> NULL;
     non-HTML payloads gated on the leading ``<`` byte and never
-    decoded. Follows meta_robots_col's charset discipline (ISO-8859-1
-    prefix decode, case-insensitive ASCII grammar) and — under
-    ``ascii_only`` (default) — linkgraph's clean-printable portability
-    gate: a value with a raw high byte fails printable-ASCII on the
-    Spark side and carries a blob-escape backslash on the DuckDB side,
-    rejected identically, which makes the whole extractor
-    oracle-checkable. Pure map-side Project: zero shuffle, zero UDF.
+    decoded. Follows the ``_html_head`` charset discipline and — under
+    ``ascii_only`` (default) — the clean-printable portability gate,
+    which makes the whole extractor oracle-checkable. Pure map-side
+    plan (``_first_match_fields``): zero shuffle, zero UDF.
     """
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-
-    # two stacked Projects (same structure and rationale as
-    # og_metadata): extract the 5 raw groups once, finish over cheap
-    # attribute refs — one collapsed Project overflows 64 KB codegen
-    raws = {"__title": _TITLE_RE,
-            "__desc_nf": _DESC_NAME_FIRST,
-            "__desc_cf": _DESC_CONTENT_FIRST,
-            "__canon_rf": _CANON_REL_FIRST,
-            "__canon_hf": _CANON_HREF_FIRST}
-    inner = pages.select(
-        F.col(url_col).alias("url"), is_html.alias("__is_html"),
-        *[F.regexp_extract(head, pat, 1).alias(name)
-          for name, pat in raws.items()])
-
-    def _fin(name: str) -> Column:
-        return _head_field_finish(F.col(name), ascii_only=ascii_only)
-
-    ih = F.col("__is_html")
-    return inner.select(
-        "url",
-        F.when(ih, _fin("__title")).alias("title"),
-        F.when(ih, F.coalesce(_fin("__desc_nf"), _fin("__desc_cf")))
-         .alias("meta_description"),
-        F.when(ih, F.coalesce(_fin("__canon_rf"), _fin("__canon_hf")))
-         .alias("canonical_url"))
+    return _first_match_fields(
+        pages, {"title": (_TITLE_RE,),
+                "meta_description": (_DESC_NAME_FIRST, _DESC_CONTENT_FIRST),
+                "canonical_url": (_CANON_REL_FIRST, _CANON_HREF_FIRST)},
+        scan_bytes, ascii_only)
 
 
 # ---------------------------------------------------------------------------
@@ -645,8 +666,7 @@ def page_metadata(pages: DataFrame, *, url_col: str = "url",
 _HEADING_RE = r"(?i)<h([1-6])[^>]*>([^<]*)</h"
 
 
-def heading_records(pages: DataFrame, *, url_col: str = "url",
-                    html_col: str = "html",
+def heading_records(pages: DataFrame, *,
                     scan_bytes: int | None = 8192,
                     ascii_only: bool = True) -> DataFrame:
     """(url, pos, level, heading) — every ``<h1>``–``<h6>`` element in
@@ -668,23 +688,12 @@ def heading_records(pages: DataFrame, *, url_col: str = "url",
     charset discipline (leading-``<`` PDF gate, never decodes non-HTML
     payloads) and — under ``ascii_only`` — linkgraph's clean-printable
     portability gate."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    ms = F.when(is_html,
-                F.regexp_extract_all(head, F.lit(_HEADING_RE), F.lit(0)))
-    e = posexplode_nonull(pages, ms, "pos", "m",
-                           F.col(url_col).alias("url"))
-    level = F.regexp_extract("m", r"(?i)<h([1-6])", 1).cast("long")
-    txt = F.nullif(F.trim(F.regexp_replace(
-        F.regexp_extract("m", _HEADING_RE, 2),
-        r"[ \t\n\r]+", " ")), F.lit(""))
-    if ascii_only:
-        txt = portable_or_null(txt)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
-                     level.alias("level"), txt.alias("heading"))
+    e = _grammar_rows(pages, _HEADING_RE, 0, scan_bytes)
+    level = F.regexp_extract("match", r"(?i)<h([1-6])", 1).cast("long")
+    txt = _head_field_finish(F.regexp_extract("match", _HEADING_RE, 2),
+                             ascii_only=ascii_only)
+    return (e.select("url", "pos", level.alias("level"),
+                     txt.alias("heading"))
             .filter(F.col("heading").isNotNull()))
 
 
@@ -712,8 +721,7 @@ _TABLE_ROW_RE = r"(?is)<tr[^>]*>(.*?)</tr>"
 _TABLE_CELL_RE = r"(?is)<t([dh])[^>]*>([^<]*)</t[dh]"
 
 
-def table_records(pages: DataFrame, *, url_col: str = "url",
-                  html_col: str = "html",
+def table_records(pages: DataFrame, *,
                   scan_bytes: int | None = 8192,
                   ascii_only: bool = True) -> DataFrame:
     """(url, table_pos, row_pos, col_pos, is_header, cell) — every
@@ -750,33 +758,20 @@ def table_records(pages: DataFrame, *, url_col: str = "url",
     gate (PDFs and other payloads are never decoded), bounded prefix
     scan, and — under ``ascii_only`` — the clean-printable
     portability gate shared with linkgraph/heading_records."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    blocks = F.when(is_html,
-                    F.regexp_extract_all(head, F.lit(_TABLE_BLOCK_RE),
-                                         F.lit(1)))
-    t = posexplode_nonull(pages, blocks, "table_pos", "__block",
-                           F.col(url_col).alias("url"))
-    rows = F.regexp_extract_all(F.col("__block"), F.lit(_TABLE_ROW_RE),
+    t = _grammar_rows(pages, _TABLE_BLOCK_RE, 1, scan_bytes)
+    rows = F.regexp_extract_all(F.col("match"), F.lit(_TABLE_ROW_RE),
                                 F.lit(1))
     r = posexplode_nonull(t, rows, "row_pos", "__row",
-                          "url", "table_pos")
+                          "url", F.col("pos").alias("table_pos"))
     cells = F.regexp_extract_all(F.col("__row"), F.lit(_TABLE_CELL_RE),
                                  F.lit(0))
     c = posexplode_nonull(r, cells, "col_pos", "__m",
                           "url", "table_pos", "row_pos")
     is_header = (F.lower(F.regexp_extract("__m", _TABLE_CELL_RE, 1))
                  == F.lit("h"))
-    txt = F.nullif(F.trim(F.regexp_replace(
-        F.regexp_extract("__m", _TABLE_CELL_RE, 2),
-        r"[ \t\n\r]+", " ")), F.lit(""))
-    if ascii_only:
-        txt = portable_or_null(txt)
-    return (c.select("url",
-                     F.col("table_pos").cast("long").alias("table_pos"),
+    txt = _head_field_finish(F.regexp_extract("__m", _TABLE_CELL_RE, 2),
+                             ascii_only=ascii_only)
+    return (c.select("url", "table_pos",
                      F.col("row_pos").cast("long").alias("row_pos"),
                      F.col("col_pos").cast("long").alias("col_pos"),
                      is_header.alias("is_header"),
@@ -811,8 +806,7 @@ _JSONLD_RE = (r'(?is)<script[^>]*type[ \t\n\r]*=[ \t\n\r]*["\x27]?'
               r'application/ld\+json["\x27]?[^>]*>(.*?)</script>')
 
 
-def jsonld_records(pages: DataFrame, *, url_col: str = "url",
-                   html_col: str = "html",
+def jsonld_records(pages: DataFrame, *,
                    scan_bytes: int | None = 8192,
                    ascii_only: bool = True) -> DataFrame:
     """(url, pos, payload) — the raw body of every
@@ -837,21 +831,9 @@ def jsonld_records(pages: DataFrame, *, url_col: str = "url",
 
     Follows the engine-wide charset discipline: leading-``<`` HTML
     gate, bounded prefix scan."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    blocks = F.when(is_html,
-                    F.regexp_extract_all(head, F.lit(_JSONLD_RE),
-                                         F.lit(1)))
-    e = posexplode_nonull(pages, blocks, "pos", "__p",
-                           F.col(url_col).alias("url"))
-    payload = F.nullif(F.trim("__p"), F.lit(""))
-    if ascii_only:
-        payload = portable_or_null(payload)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
-                     payload.alias("payload"))
+    e = _grammar_rows(pages, _JSONLD_RE, 1, scan_bytes)
+    payload = _trim_gate(F.col("match"), ascii_only=ascii_only)
+    return (e.select("url", "pos", payload.alias("payload"))
             .filter(F.col("payload").isNotNull()))
 
 
@@ -892,8 +874,7 @@ def jsonld_entities(pages: DataFrame, **kwargs) -> DataFrame:
 # page feature vector (the quality-classifier input row)
 # ---------------------------------------------------------------------------
 
-def page_features(pages: DataFrame, *, url_col: str = "url",
-                  html_col: str = "html",
+def page_features(pages: DataFrame, *,
                   scan_bytes: int | None = 8192) -> DataFrame:
     """One row per url of page-STRUCTURE features — the vector a
     page-quality / page-type classifier consumes (``classify.nb_fit``
@@ -913,11 +894,8 @@ def page_features(pages: DataFrame, *, url_col: str = "url",
     zero explode, zero shuffle, zero UDF. The exploding extractors
     pay a Generate per family; this pays nothing, which is why the
     classifier-facing wide table uses counts, not records."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
+    html = F.col("html")
+    head, is_html = _html_head(html, scan_bytes)
 
     def cnt(pat: str) -> Column:
         return F.when(is_html,
@@ -925,7 +903,7 @@ def page_features(pages: DataFrame, *, url_col: str = "url",
                 .otherwise(F.lit(0)).cast("long")
 
     base = pages.select(
-        F.col(url_col).alias("url"),
+        "url",
         cnt(r"(?i)<h[1-6][ \t\n\r>]").alias("n_headings"),
         cnt(r"(?i)<table[ \t\n\r>]").alias("n_tables"),
         cnt(r"(?i)<[uo]l[ \t\n\r>]").alias("n_lists"),
@@ -997,8 +975,7 @@ _IMG_SRC_RE = attr_val_re("src")
 _IMG_ALT_RE = attr_val_re("alt", value_cls=r'[^"\']*', quoted=True)
 
 
-def image_captions(pages: DataFrame, *, url_col: str = "url",
-                   html_col: str = "html",
+def image_captions(pages: DataFrame, *,
                    scan_bytes: int | None = 8192,
                    ascii_only: bool = True,
                    min_alt_len: int = 5) -> DataFrame:
@@ -1025,26 +1002,13 @@ def image_captions(pages: DataFrame, *, url_col: str = "url",
 
     Engine-wide charset discipline: leading-``<`` HTML gate, bounded
     prefix scan."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    tags = F.when(is_html,
-                  F.regexp_extract_all(head, F.lit(_IMG_TAG_RE),
-                                       F.lit(0)))
-    e = posexplode_nonull(pages, tags, "pos", "__t",
-                           F.col(url_col).alias("url"))
-    src = F.nullif(F.regexp_extract("__t", _IMG_SRC_RE, 1), F.lit(""))
-    alt = F.nullif(F.trim(F.regexp_replace(
-        F.regexp_extract("__t", _IMG_ALT_RE, 1),
-        r"[ \t\n\r]+", " ")), F.lit(""))
+    e = _grammar_rows(pages, _IMG_TAG_RE, 0, scan_bytes)
+    src = _trim_gate(F.regexp_extract("match", _IMG_SRC_RE, 1),
+                     ascii_only=ascii_only)
+    alt = _head_field_finish(F.regexp_extract("match", _IMG_ALT_RE, 1),
+                             ascii_only=ascii_only)
     alt = F.when(F.length(alt) >= int(min_alt_len), alt)
-    if ascii_only:
-        src = portable_or_null(src)
-        alt = portable_or_null(alt)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
-                     src.alias("src"), alt.alias("alt"))
+    return (e.select("url", "pos", src.alias("src"), alt.alias("alt"))
             .filter(F.col("src").isNotNull() & F.col("alt").isNotNull()))
 
 
@@ -1057,8 +1021,7 @@ _LIST_BLOCK_RE = (r"(?is)<([uo])l(?:>|[ \t\n\r][^>]*>)(.*?)"
 _LIST_ITEM_RE = r"(?is)<li(?:>|[ \t\n\r][^>]*>)([^<]*)"
 
 
-def list_records(pages: DataFrame, *, url_col: str = "url",
-                 html_col: str = "html",
+def list_records(pages: DataFrame, *,
                  scan_bytes: int | None = 8192,
                  ascii_only: bool = True) -> DataFrame:
     """(url, list_pos, ordered, item_pos, item) — every ``<li>`` of
@@ -1087,29 +1050,16 @@ def list_records(pages: DataFrame, *, url_col: str = "url",
 
     Engine-wide charset discipline: leading-``<`` HTML gate, bounded
     prefix scan."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    blocks = F.when(is_html,
-                    F.regexp_extract_all(head, F.lit(_LIST_BLOCK_RE),
-                                         F.lit(0)))
-    b = posexplode_nonull(pages, blocks, "list_pos", "__b",
-                           F.col(url_col).alias("url"))
-    ordered = (F.lower(F.regexp_extract("__b", _LIST_BLOCK_RE, 1))
+    b = _grammar_rows(pages, _LIST_BLOCK_RE, 0, scan_bytes)
+    ordered = (F.lower(F.regexp_extract("match", _LIST_BLOCK_RE, 1))
                == F.lit("o"))
-    body = F.regexp_extract("__b", _LIST_BLOCK_RE, 2)
+    body = F.regexp_extract("match", _LIST_BLOCK_RE, 2)
     items = F.regexp_extract_all(body, F.lit(_LIST_ITEM_RE), F.lit(1))
-    i = posexplode_nonull(b, items, "item_pos", "__i",
-                          "url", "list_pos", ordered.alias("ordered"))
-    item = F.nullif(F.trim(F.regexp_replace(
-        F.col("__i"), r"[ \t\n\r]+", " ")), F.lit(""))
-    if ascii_only:
-        item = portable_or_null(item)
-    return (i.select("url",
-                     F.col("list_pos").cast("long").alias("list_pos"),
-                     "ordered",
+    i = posexplode_nonull(b, items, "item_pos", "__i", "url",
+                          F.col("pos").alias("list_pos"),
+                          ordered.alias("ordered"))
+    item = _head_field_finish(F.col("__i"), ascii_only=ascii_only)
+    return (i.select("url", "list_pos", "ordered",
                      F.col("item_pos").cast("long").alias("item_pos"),
                      item.alias("item"))
             .filter(F.col("item").isNotNull()))
@@ -1120,12 +1070,29 @@ def list_records(pages: DataFrame, *, url_col: str = "url",
 # ---------------------------------------------------------------------------
 
 _MEDIA_TAG_RE = r"(?i)<(?:video|audio|source|track)[ \t\n\r][^>]*>"
+_EMBED_TAG_RE = r"(?i)<(?:iframe|embed)[ \t\n\r][^>]*>"
 _MEDIA_KIND_RE = r"(?i)^<([a-z]+)"
 _PAGINATION_REL_RE = attr_token_re("rel", r"(next|prev)")
 
 
-def media_links(pages: DataFrame, *, url_col: str = "url",
-                html_col: str = "html",
+def _tag_src_records(pages: DataFrame, tag_re: str,
+                     scan_bytes: int | None,
+                     ascii_only: bool) -> DataFrame:
+    """(url, pos, tag, src) for every ``tag_re`` tag carrying a
+    ``src``: ``pos`` numbers ALL matched tags per url (srcless tags
+    drop as holes), ``tag`` is the lowercased element name, ``src`` is
+    kept verbatim under the gate."""
+    e = _grammar_rows(pages, tag_re, 0, scan_bytes)
+    src = _trim_gate(F.regexp_extract("match", _IMG_SRC_RE, 1),
+                     ascii_only=ascii_only)
+    return (e.select("url", "pos",
+                     F.lower(F.regexp_extract("match", _MEDIA_KIND_RE,
+                                              1)).alias("tag"),
+                     src.alias("src"))
+            .filter(F.col("src").isNotNull()))
+
+
+def media_links(pages: DataFrame, *,
                 scan_bytes: int | None = 8192,
                 ascii_only: bool = True) -> DataFrame:
     """(url, pos, tag, src) — every ``<video>``/``<audio>``/
@@ -1138,31 +1105,11 @@ def media_links(pages: DataFrame, *, url_col: str = "url",
     ``linkgraph.resolve_url_col``; clean-printable gate under
     ``ascii_only``. One map-side regexp_extract_all + posexplode —
     zero shuffle, zero UDF; engine-wide charset discipline."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    tags = F.when(is_html,
-                  F.regexp_extract_all(head, F.lit(_MEDIA_TAG_RE),
-                                       F.lit(0)))
-    e = posexplode_nonull(pages, tags, "pos", "__t",
-                           F.col(url_col).alias("url"))
-    src = F.nullif(F.regexp_extract("__t", _IMG_SRC_RE, 1), F.lit(""))
-    if ascii_only:
-        src = portable_or_null(src)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
-                     F.lower(F.regexp_extract("__t", _MEDIA_KIND_RE,
-                                              1)).alias("tag"),
-                     src.alias("src"))
-            .filter(F.col("src").isNotNull()))
+    return _tag_src_records(pages, _MEDIA_TAG_RE, scan_bytes, ascii_only)
 
 
-_EMBED_TAG_RE = r"(?i)<(?:iframe|embed)[ \t\n\r][^>]*>"
 
-
-def embed_links(pages: DataFrame, *, url_col: str = "url",
-                html_col: str = "html",
+def embed_links(pages: DataFrame, *,
                 scan_bytes: int | None = 8192,
                 ascii_only: bool = True) -> DataFrame:
     """(url, pos, tag, src) — every ``<iframe>``/``<embed>`` with a
@@ -1173,28 +1120,10 @@ def embed_links(pages: DataFrame, *, url_col: str = "url",
     tag-enumeration grammar, pos holes, verbatim src and gate
     discipline as ``media_links`` — one map-side pass, zero shuffle,
     zero UDF."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    tags = F.when(is_html,
-                  F.regexp_extract_all(head, F.lit(_EMBED_TAG_RE),
-                                       F.lit(0)))
-    e = posexplode_nonull(pages, tags, "pos", "__t",
-                           F.col(url_col).alias("url"))
-    src = F.nullif(F.regexp_extract("__t", _IMG_SRC_RE, 1), F.lit(""))
-    if ascii_only:
-        src = portable_or_null(src)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
-                     F.lower(F.regexp_extract("__t", _MEDIA_KIND_RE,
-                                              1)).alias("tag"),
-                     src.alias("src"))
-            .filter(F.col("src").isNotNull()))
+    return _tag_src_records(pages, _EMBED_TAG_RE, scan_bytes, ascii_only)
 
 
-def pagination_links(pages: DataFrame, *, url_col: str = "url",
-                     html_col: str = "html",
+def pagination_links(pages: DataFrame, *,
                      scan_bytes: int | None = 8192,
                      ascii_only: bool = True) -> DataFrame:
     """(url, rel_next, rel_prev) — the ``<link rel=next/prev>``
@@ -1204,28 +1133,17 @@ def pagination_links(pages: DataFrame, *, url_col: str = "url",
     each rel wins; pages with neither are dropped. Same link-tag
     enumeration + gate discipline as ``hreflang_records``; one
     map-side pass, zero shuffle, zero UDF."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    tags = F.when(is_html,
-                  F.regexp_extract_all(head, F.lit(_LINK_TAG_RE),
-                                       F.lit(0)))
-    e = posexplode_nonull(pages, tags, "__p", "__t",
-                           F.col(url_col).alias("url"))
-    rel = F.lower(F.regexp_extract("__t", _PAGINATION_REL_RE, 1))
-    href = F.nullif(F.regexp_extract("__t", _HREF_VAL_RE, 1), F.lit(""))
-    if ascii_only:
-        href = portable_or_null(href)
-    per = e.select("url", rel.alias("__rel"), href.alias("__href"),
-                   F.col("__p"))
+    e = _grammar_rows(pages, _LINK_TAG_RE, 0, scan_bytes)
+    rel = F.lower(F.regexp_extract("match", _PAGINATION_REL_RE, 1))
+    href = _trim_gate(F.regexp_extract("match", _HREF_VAL_RE, 1),
+                      ascii_only=ascii_only)
+    per = e.select("url", rel.alias("__rel"), href.alias("__href"), "pos")
     agg = (per.where((F.col("__rel") != "") & F.col("__href").isNotNull())
            .groupBy("url")
            .agg(F.min(F.when(F.col("__rel") == "next",
-                             F.struct("__p", "__href"))).alias("__n"),
+                             F.struct("pos", "__href"))).alias("__n"),
                 F.min(F.when(F.col("__rel") == "prev",
-                             F.struct("__p", "__href"))).alias("__v")))
+                             F.struct("pos", "__href"))).alias("__v")))
     return (agg.select("url",
                        F.col("__n")["__href"].alias("rel_next"),
                        F.col("__v")["__href"].alias("rel_prev"))
@@ -1245,8 +1163,35 @@ _MD_TEXT_RE = r">([^<]*)$"
 _MD_TYPE_VAL_RE = attr_val_re("itemtype", in_tag=True)
 
 
-def microdata_records(pages: DataFrame, *, url_col: str = "url",
-                      html_col: str = "html",
+def _prop_records(pages: DataFrame, tag_re: str, name_re: str, name: str,
+                  scan_bytes: int | None, ascii_only: bool) -> DataFrame:
+    """(url, pos, <name>, value) over the FLAT attribute-embedded
+    grammar shared by microdata and RDFa: a record is a ``tag_re`` tag
+    with its immediate tag-free trailing text; value = the tag's
+    ``content`` attribute when present, else that text."""
+    e = _grammar_rows(pages, tag_re, 0, scan_bytes)
+    prop = _trim_gate(F.regexp_extract("match", name_re, 1),
+                      ascii_only=ascii_only)
+    content = F.nullif(F.regexp_extract("match", _MD_CONTENT_VAL_RE, 1),
+                       F.lit(""))
+    text = F.regexp_extract("match", _MD_TEXT_RE, 1)
+    value = _head_field_finish(F.coalesce(content, text),
+                               ascii_only=ascii_only)
+    return (e.select("url", "pos", prop.alias(name), value.alias("value"))
+            .filter(F.col(name).isNotNull() & F.col("value").isNotNull()))
+
+
+def _type_records(pages: DataFrame, type_re: str, name: str,
+                  scan_bytes: int | None, ascii_only: bool) -> DataFrame:
+    """(url, pos, <name>): every ``type_re`` type declaration in
+    document order, the value kept verbatim under the gate."""
+    e = _grammar_rows(pages, type_re, 1, scan_bytes)
+    t = _trim_gate(F.col("match"), ascii_only=ascii_only)
+    return (e.select("url", "pos", t.alias(name))
+            .filter(F.col(name).isNotNull()))
+
+
+def microdata_records(pages: DataFrame, *,
                       scan_bytes: int | None = 8192,
                       ascii_only: bool = True) -> DataFrame:
     """(url, pos, itemprop, value) — every ``itemprop`` declaration in
@@ -1273,34 +1218,11 @@ def microdata_records(pages: DataFrame, *, url_col: str = "url",
 
     Engine-wide charset discipline: leading-``<`` HTML gate, bounded
     prefix scan, non-HTML payloads never decoded."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    ms = F.when(is_html,
-                F.regexp_extract_all(head, F.lit(_MD_PROP_TAG_RE),
-                                     F.lit(0)))
-    e = posexplode_nonull(pages, ms, "pos", "__m",
-                           F.col(url_col).alias("url"))
-    prop = F.nullif(F.regexp_extract("__m", _MD_PROP_VAL_RE, 1),
-                    F.lit(""))
-    content = F.nullif(F.regexp_extract("__m", _MD_CONTENT_VAL_RE, 1),
-                       F.lit(""))
-    text = F.regexp_extract("__m", _MD_TEXT_RE, 1)
-    value = F.nullif(F.trim(F.regexp_replace(
-        F.coalesce(content, text), r"[ \t\n\r]+", " ")), F.lit(""))
-    if ascii_only:
-        prop = portable_or_null(prop)
-        value = portable_or_null(value)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
-                     prop.alias("itemprop"), value.alias("value"))
-            .filter(F.col("itemprop").isNotNull()
-                    & F.col("value").isNotNull()))
+    return _prop_records(pages, _MD_PROP_TAG_RE, _MD_PROP_VAL_RE,
+                         "itemprop", scan_bytes, ascii_only)
 
 
-def microdata_types(pages: DataFrame, *, url_col: str = "url",
-                    html_col: str = "html",
+def microdata_types(pages: DataFrame, *,
                     scan_bytes: int | None = 8192,
                     ascii_only: bool = True) -> DataFrame:
     """(url, pos, itemtype) — every ``itemtype`` declaration in
@@ -1309,22 +1231,8 @@ def microdata_types(pages: DataFrame, *, url_col: str = "url",
     of ``jsonld_entities``' @type and the same page-type routing
     signal. Same pinned one-pass grammar/gate discipline as
     ``microdata_records``."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    ms = F.when(is_html,
-                F.regexp_extract_all(head, F.lit(_MD_TYPE_VAL_RE),
-                                     F.lit(1)))
-    e = posexplode_nonull(pages, ms, "pos", "__t",
-                           F.col(url_col).alias("url"))
-    t = F.nullif(F.trim("__t"), F.lit(""))
-    if ascii_only:
-        t = portable_or_null(t)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
-                     t.alias("itemtype"))
-            .filter(F.col("itemtype").isNotNull()))
+    return _type_records(pages, _MD_TYPE_VAL_RE, "itemtype", scan_bytes,
+                         ascii_only)
 
 
 # ---------------------------------------------------------------------------
@@ -1337,8 +1245,7 @@ _RDFA_PROP_VAL_RE = attr_val_re("property")
 _RDFA_TYPEOF_VAL_RE = attr_val_re("typeof", in_tag=True)
 
 
-def rdfa_records(pages: DataFrame, *, url_col: str = "url",
-                 html_col: str = "html",
+def rdfa_records(pages: DataFrame, *,
                  scan_bytes: int | None = 8192,
                  ascii_only: bool = True) -> DataFrame:
     """(url, pos, property, value) — every RDFa ``property``
@@ -1356,55 +1263,18 @@ def rdfa_records(pages: DataFrame, *, url_col: str = "url",
     clean-printable gates under ``ascii_only``. One codegen'd
     ``regexp_extract_all`` + map-side posexplode — zero shuffle,
     zero UDF; engine-wide charset discipline."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    ms = F.when(is_html,
-                F.regexp_extract_all(head, F.lit(_RDFA_PROP_TAG_RE),
-                                     F.lit(0)))
-    e = posexplode_nonull(pages, ms, "pos", "__m",
-                           F.col(url_col).alias("url"))
-    prop = F.nullif(F.regexp_extract("__m", _RDFA_PROP_VAL_RE, 1),
-                    F.lit(""))
-    content = F.nullif(F.regexp_extract("__m", _MD_CONTENT_VAL_RE, 1),
-                       F.lit(""))
-    text = F.regexp_extract("__m", _MD_TEXT_RE, 1)
-    value = F.nullif(F.trim(F.regexp_replace(
-        F.coalesce(content, text), r"[ \t\n\r]+", " ")), F.lit(""))
-    if ascii_only:
-        prop = portable_or_null(prop)
-        value = portable_or_null(value)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
-                     prop.alias("property"), value.alias("value"))
-            .filter(F.col("property").isNotNull()
-                    & F.col("value").isNotNull()))
+    return _prop_records(pages, _RDFA_PROP_TAG_RE, _RDFA_PROP_VAL_RE,
+                         "property", scan_bytes, ascii_only)
 
 
-def rdfa_types(pages: DataFrame, *, url_col: str = "url",
-               html_col: str = "html",
+def rdfa_types(pages: DataFrame, *,
                scan_bytes: int | None = 8192,
                ascii_only: bool = True) -> DataFrame:
     """(url, pos, type_of) — every RDFa ``typeof`` declaration: the
     RDFa twin of ``microdata_types``/``jsonld_entities``' @type. Same
     one-pass grammar/gate discipline."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    ms = F.when(is_html,
-                F.regexp_extract_all(head, F.lit(_RDFA_TYPEOF_VAL_RE),
-                                     F.lit(1)))
-    e = posexplode_nonull(pages, ms, "pos", "__t",
-                           F.col(url_col).alias("url"))
-    t = F.nullif(F.trim("__t"), F.lit(""))
-    if ascii_only:
-        t = portable_or_null(t)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
-                     t.alias("type_of"))
-            .filter(F.col("type_of").isNotNull()))
+    return _type_records(pages, _RDFA_TYPEOF_VAL_RE, "type_of", scan_bytes,
+                         ascii_only)
 
 
 # ---------------------------------------------------------------------------
@@ -1417,8 +1287,7 @@ _HREFLANG_VAL_RE = attr_val_re("hreflang")
 _HREF_VAL_RE = attr_val_re("href")
 
 
-def hreflang_records(pages: DataFrame, *, url_col: str = "url",
-                     html_col: str = "html",
+def hreflang_records(pages: DataFrame, *,
                      scan_bytes: int | None = 8192,
                      ascii_only: bool = True) -> DataFrame:
     """(url, pos, hreflang, href) — every
@@ -1450,32 +1319,20 @@ def hreflang_records(pages: DataFrame, *, url_col: str = "url",
 
     Follows the engine-wide charset discipline: leading-``<`` HTML
     gate, bounded prefix scan, non-HTML payloads never decoded."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-    tags = F.when(is_html,
-                  F.regexp_extract_all(head, F.lit(_LINK_TAG_RE),
-                                       F.lit(0)))
-    e = posexplode_nonull(pages, tags, "pos", "__t",
-                           F.col(url_col).alias("url"))
-    lang = F.nullif(F.lower(
-        F.regexp_extract("__t", _HREFLANG_VAL_RE, 1)), F.lit(""))
-    href = F.nullif(F.regexp_extract("__t", _HREF_VAL_RE, 1), F.lit(""))
-    if ascii_only:
-        lang = portable_or_null(lang)
-        href = portable_or_null(href)
-    keep = F.col("__t").rlike(_REL_ALTERNATE_RE)
-    return (e.select("url", F.col("pos").cast("long").alias("pos"),
+    e = _grammar_rows(pages, _LINK_TAG_RE, 0, scan_bytes)
+    lang = _trim_gate(F.lower(F.regexp_extract("match", _HREFLANG_VAL_RE, 1)),
+                      ascii_only=ascii_only)
+    href = _trim_gate(F.regexp_extract("match", _HREF_VAL_RE, 1),
+                      ascii_only=ascii_only)
+    keep = F.col("match").rlike(_REL_ALTERNATE_RE)
+    return (e.select("url", "pos",
                      F.when(keep, lang).alias("hreflang"),
                      F.when(keep, href).alias("href"))
             .filter(F.col("hreflang").isNotNull()
                     & F.col("href").isNotNull()))
 
 
-def bitext_candidates(pages: DataFrame, *, url_col: str = "url",
-                      html_col: str = "html", lang_col: str = "lang",
+def bitext_candidates(pages: DataFrame, *, lang_col: str = "lang",
                       scan_bytes: int | None = 8192,
                       ascii_only: bool = True,
                       resolve: bool = False) -> DataFrame:
@@ -1499,17 +1356,15 @@ def bitext_candidates(pages: DataFrame, *, url_col: str = "url",
     ``href="/fr/page"`` — at the cost of the map-side resolution
     expressions; the default keeps hrefs verbatim (only absolute
     alternates can match, the oracle-pinned behavior)."""
-    recs = hreflang_records(pages, url_col=url_col, html_col=html_col,
-                            scan_bytes=scan_bytes,
+    recs = hreflang_records(pages, scan_bytes=scan_bytes,
                             ascii_only=ascii_only)
     if resolve:
         from ocr_engine_spark.functions.linkgraph import resolve_url_col
         recs = (recs.withColumn(
             "href", resolve_url_col(F.col("href"), F.col("url")))
             .filter(F.col("href").isNotNull()))
-    src = pages.select(F.col(url_col).alias("url"),
-                       F.col(lang_col).alias("lang"))
-    tgt = pages.select(F.col(url_col).alias("alt_url"),
+    src = pages.select("url", F.col(lang_col).alias("lang"))
+    tgt = pages.select(F.col("url").alias("alt_url"),
                        F.col(lang_col).alias("alt_lang"))
     return (recs.join(src, "url")
             .join(tgt, recs["href"] == tgt["alt_url"])
@@ -1538,8 +1393,7 @@ def _og_content_first(prop: str) -> str:
             r'["\']?og:' + prop + r'(?:["\' \t\n\r/>]|$)')
 
 
-def og_metadata(pages: DataFrame, *, url_col: str = "url",
-                html_col: str = "html",
+def og_metadata(pages: DataFrame, *,
                 scan_bytes: int | None = 8192,
                 ascii_only: bool = True) -> DataFrame:
     """(url, og_title, og_description, og_type, og_image) — the Open
@@ -1552,43 +1406,14 @@ def og_metadata(pages: DataFrame, *, url_col: str = "url",
     Same pinned grammar family as ``page_metadata`` (first match wins
     per field, ``property``/``content`` in either attribute order,
     whitespace-collapsed, empty -> NULL, clean-printable gate under
-    ``ascii_only``) and the same engine-wide charset discipline.
-    Pure map-side plan: TWO stacked Projects, zero shuffle, zero UDF —
-    the inner Project materializes all 8 regexp extracts once, the
-    outer applies trim/nullif/gate over the (cheap) attribute refs.
-    CollapseProject keeps them separate because the producer
-    expressions are non-cheap and multiply referenced; collapsed into
-    one Project the replicated decode+extract subtrees overflow the
-    64 KB codegen limit and the whole stage runs interpreted (~6x
-    slower — BENCH.md round-3/4 notes)."""
-    html = F.col(html_col)
-    prefix = html if scan_bytes is None else F.substring(html, 1,
-                                                         scan_bytes)
-    head = F.decode(prefix, "ISO-8859-1")
-    is_html = F.substring(html, 1, 1) == F.lit(b"<")
-
-    props = ("title", "description", "type", "image")
-    raw_cols = []
-    for prop in props:
-        raw_cols.append(F.regexp_extract(head, _og_prop_first(prop), 1)
-                        .alias(f"__pf_{prop}"))
-        raw_cols.append(F.regexp_extract(head, _og_content_first(prop), 1)
-                        .alias(f"__cf_{prop}"))
-    inner = pages.select(F.col(url_col).alias("url"),
-                         is_html.alias("__is_html"), *raw_cols)
-
-    def _field(prop: str) -> Column:
-        return F.when(F.col("__is_html"), F.coalesce(
-            _head_field_finish(F.col(f"__pf_{prop}"),
-                               ascii_only=ascii_only),
-            _head_field_finish(F.col(f"__cf_{prop}"),
-                               ascii_only=ascii_only)))
-
-    return inner.select("url",
-                        _field("title").alias("og_title"),
-                        _field("description").alias("og_description"),
-                        _field("type").alias("og_type"),
-                        _field("image").alias("og_image"))
+    ``ascii_only``) and the same engine-wide charset discipline. Pure
+    map-side plan (``_first_match_fields``: its two stacked Projects
+    keep the 8 extracts under the 64 KB codegen limit), zero shuffle,
+    zero UDF."""
+    return _first_match_fields(
+        pages, {f"og_{p}": (_og_prop_first(p), _og_content_first(p))
+                for p in ("title", "description", "type", "image")},
+        scan_bytes, ascii_only)
 
 
 def table_triples(pages: DataFrame, **kwargs) -> DataFrame:

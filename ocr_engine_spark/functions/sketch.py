@@ -51,41 +51,40 @@ def _alpha_micro(m: int) -> int:
     return round(0.7213 / (1 + 1.079 / m) * 1_000_000)
 
 
-def hll_registers(df: DataFrame, col: str, *, b: int = 10) -> DataFrame:
-    """(bucket, register) — the mergeable sketch state. Missing
-    buckets mean register 0; ``hll_estimate`` accounts for them."""
+def _keyed_registers(df: DataFrame, col: str, keys: list[str], *,
+                     b: int) -> DataFrame:
+    """(*keys, bucket, register): the register state of one sketch per
+    key (one global sketch when ``keys`` is empty). One groupBy with
+    map-side max-combine — at most |keys| x m rows leave a map task."""
     assert 7 <= int(b) <= 16
     m = 1 << int(b)
-    h = md5_int60_col(F.col(col))
-    bucket = F.pmod(h, F.lit(m))
-    rem = F.expr(f"(__h div {m})")
     width = 60 - int(b)
     rho = F.when(F.col("__r") == 0, F.lit(width + 1)) \
            .otherwise(F.lit(width)
                       - F.length(F.expr("bin(__r)")).cast("int")
                       + F.lit(1))
-    d = (df.select(h.alias("__h"))
-         .withColumn("__r", rem)
-         .select(F.pmod(F.col("__h"), F.lit(m)).alias("bucket"),
+    d = (df.select(*keys, md5_int60_col(F.col(col)).alias("__h"))
+         .withColumn("__r", F.expr(f"(__h div {m})"))
+         .select(*keys, F.pmod(F.col("__h"), F.lit(m)).alias("bucket"),
                  rho.alias("__rho")))
-    return (d.groupBy("bucket")
+    return (d.groupBy(*keys, "bucket")
             .agg(F.max("__rho").cast("long").alias("register")))
 
 
-def hll_estimate(registers: DataFrame, *, b: int = 10) -> DataFrame:
-    """One row: (m, n_buckets_hit, n_zero_buckets, sum_scaled,
-    estimate) from a register table (post-merge if unioned: feed
-    ``max(register) group by bucket`` of the union)."""
+def _keyed_estimate(registers: DataFrame, keys: list[str], *,
+                    b: int) -> DataFrame:
+    """(*keys, m, n_buckets_hit, n_zero_buckets, sum_scaled, estimate)
+    per key from the (*keys, bucket, register) rows of HIT buckets;
+    absent buckets are register 0 (one 2^30 term each)."""
     m = 1 << int(b)
     am = _alpha_micro(m)
-    agg = registers.agg(
+    agg = registers.groupBy(*keys).agg(
         F.count("*").alias("n_buckets_hit"),
         F.sum(F.expr(
             "CASE WHEN register <= 30 THEN "
             "shiftleft(1L, 30 - cast(register as int)) ELSE 0 END"))
          .alias("__sum_hit"))
     zeros = F.lit(m) - F.col("n_buckets_hit")
-    # empty buckets carry register 0 -> term 2^30 each
     sum_scaled = (F.col("__sum_hit")
                   + zeros.cast("long") * F.lit(1 << 30))
     est_raw = F.expr(
@@ -99,12 +98,25 @@ def hll_estimate(registers: DataFrame, *, b: int = 10) -> DataFrame:
     est = (F.when((F.col("__raw") < int(2.5 * m))
                   & (F.col("__zeros") > 0), lc)
            .otherwise(F.col("__raw")))
-    return d.select(F.lit(m).cast("long").alias("m"),
+    return d.select(*keys, F.lit(m).cast("long").alias("m"),
                     F.col("n_buckets_hit").cast("long")
                     .alias("n_buckets_hit"),
                     F.col("__zeros").alias("n_zero_buckets"),
                     F.col("__ss").alias("sum_scaled"),
                     est.cast("long").alias("estimate"))
+
+
+def hll_registers(df: DataFrame, col: str, *, b: int = 10) -> DataFrame:
+    """(bucket, register) — the mergeable sketch state. Missing
+    buckets mean register 0; ``hll_estimate`` accounts for them."""
+    return _keyed_registers(df, col, [], b=b)
+
+
+def hll_estimate(registers: DataFrame, *, b: int = 10) -> DataFrame:
+    """One row: (m, n_buckets_hit, n_zero_buckets, sum_scaled,
+    estimate) from a register table (post-merge if unioned: feed
+    ``max(register) group by bucket`` of the union)."""
+    return _keyed_estimate(registers, [], b=b)
 
 
 def hll_distinct(df: DataFrame, col: str, *, b: int = 10) -> DataFrame:
@@ -335,55 +347,14 @@ def hll_grouped_distinct(df: DataFrame, group_col: str, col: str, *,
     runs alongside (fixture scale) for the gated err_ppm audit.
     Returns one row per group: (group, m, n_buckets_hit,
     n_zero_buckets, sum_scaled, estimate, n_exact, err_ppm)."""
-    assert 7 <= int(b) <= 16
-    m = 1 << int(b)
-    am = _alpha_micro(m)
-    width = 60 - int(b)
-    h = md5_int60_col(F.col(col))
-    g = F.col(group_col).alias("__g")
-    rho = F.when(F.col("__r") == 0, F.lit(width + 1)) \
-           .otherwise(F.lit(width)
-                      - F.length(F.expr("bin(__r)")).cast("int")
-                      + F.lit(1))
-    d = (df.select(g, h.alias("__h"))
-         .withColumn("__r", F.expr(f"(__h div {m})"))
-         .select("__g", F.pmod(F.col("__h"), F.lit(m)).alias("bucket"),
-                 rho.alias("__rho")))
-    regs = (d.groupBy("__g", "bucket")
-            .agg(F.max("__rho").cast("long").alias("register")))
-    agg = regs.groupBy("__g").agg(
-        F.count("*").alias("n_buckets_hit"),
-        F.sum(F.expr(
-            "CASE WHEN register <= 30 THEN "
-            "shiftleft(1L, 30 - cast(register as int)) ELSE 0 END"))
-        .alias("__sum_hit"))
-    zeros = F.lit(m) - F.col("n_buckets_hit")
-    sum_scaled = (F.col("__sum_hit")
-                  + zeros.cast("long") * F.lit(1 << 30))
-    est_raw = F.expr(
-        f"CAST(floor(({am} * 1.0) * {m * m * (1 << 30)} / 1000000.0"
-        f" / __ss) AS BIGINT)")
-    lc = F.expr(
-        f"CAST(floor({m} * ln({m} * 1.0 / __zeros)) AS BIGINT)")
-    d2 = (agg.withColumn("__ss", sum_scaled)
-          .withColumn("__zeros", zeros.cast("long"))
-          .withColumn("__raw", est_raw))
-    est = (F.when((F.col("__raw") < int(2.5 * m))
-                  & (F.col("__zeros") > 0), lc)
-           .otherwise(F.col("__raw")))
-    exact = (df.groupBy(F.col(group_col).alias("__g"))
+    est = _keyed_estimate(_keyed_registers(df, col, [group_col], b=b),
+                          [group_col], b=b)
+    exact = (df.groupBy(group_col)
              .agg(F.count_distinct(F.col(col)).alias("n_exact")))
-    out = (d2.withColumn("estimate", est.cast("long"))
-           .join(exact, "__g"))
     err = F.expr("((estimate - n_exact) * 1000000) div n_exact")
-    return out.select(
-        F.col("__g").alias(group_col),
-        F.lit(m).cast("long").alias("m"),
-        F.col("n_buckets_hit").cast("long").alias("n_buckets_hit"),
-        F.col("__zeros").alias("n_zero_buckets"),
-        F.col("__ss").alias("sum_scaled"),
-        "estimate",
-        F.col("n_exact").cast("long").alias("n_exact"),
+    return est.join(exact, group_col).select(
+        group_col, "m", "n_buckets_hit", "n_zero_buckets", "sum_scaled",
+        "estimate", F.col("n_exact").cast("long").alias("n_exact"),
         err.alias("err_ppm"))
 
 
@@ -408,47 +379,24 @@ def hll_growth_curve(df: DataFrame, bucket_col: str, col: str, *,
     Returns (bucket, m, estimate, n_exact_cum, err_ppm) ordered by
     bucket."""
     from pyspark.sql import Window
-    assert 7 <= int(b) <= 16
     m = 1 << int(b)
-    am = _alpha_micro(m)
-    width = 60 - int(b)
-    h = md5_int60_col(F.col(col))
-    rho = F.when(F.col("__r") == 0, F.lit(width + 1)) \
-           .otherwise(F.lit(width)
-                      - F.length(F.expr("bin(__r)")).cast("int")
-                      + F.lit(1))
-    vals = df.select(F.col(bucket_col).alias("tb"), h.alias("__h"))
-    d = (vals.withColumn("__r", F.expr(f"(__h div {m})"))
-         .select("tb", F.pmod(F.col("__h"), F.lit(m)).alias("bucket"),
-                 rho.alias("__rho")))
-    regs = (d.groupBy("tb", "bucket")
-            .agg(F.max("__rho").cast("long").alias("reg")))
-    tbs = vals.select("tb").distinct()
+    regs = _keyed_registers(
+        df.select(F.col(bucket_col).alias("tb"), F.col(col)), col, ["tb"],
+        b=b)
+    tbs = df.select(F.col(bucket_col).alias("tb")).distinct()
     grid = tbs.select(
         "tb", F.explode(F.sequence(F.lit(0), F.lit(m - 1)))
         .alias("bucket"))
     w = (Window.partitionBy("bucket").orderBy("tb")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    # the running per-bucket max IS the union of every earlier time
+    # bucket's sketch; zero registers are absent buckets to the estimator
     cum = (grid.join(regs, ["tb", "bucket"], "left")
-           .withColumn("creg",
-                       F.max(F.coalesce(F.col("reg"), F.lit(0)))
-                       .over(w)))
-    agg = cum.groupBy("tb").agg(
-        F.sum((F.col("creg") > 0).cast("long")).alias("n_hit"),
-        F.sum(F.expr(
-            "CASE WHEN creg > 0 AND creg <= 30 THEN "
-            "shiftleft(1L, 30 - cast(creg as int)) ELSE 0 END"))
-        .alias("__sum_hit"))
-    zeros = (F.lit(m) - F.col("n_hit")).cast("long")
-    ss = F.col("__sum_hit") + zeros * F.lit(1 << 30)
-    d2 = (agg.withColumn("__zeros", zeros).withColumn("__ss", ss)
-          .withColumn("__raw", F.expr(
-              f"CAST(floor(({am} * 1.0) * {m * m * (1 << 30)}"
-              f" / 1000000.0 / __ss) AS BIGINT)")))
-    lc = F.expr(f"CAST(floor({m} * ln({m} * 1.0 / __zeros)) AS BIGINT)")
-    est = (F.when((F.col("__raw") < int(2.5 * m))
-                  & (F.col("__zeros") > 0), lc)
-           .otherwise(F.col("__raw")))
+           .select("tb", "bucket",
+                   F.max(F.coalesce(F.col("register"), F.lit(0)))
+                   .over(w).alias("register"))
+           .where(F.col("register") > 0))
+    est = _keyed_estimate(cum, ["tb"], b=b)
     # exact cumulative distinct: first-occurrence bucket per value,
     # then an inequality join against the bounded bucket table
     firsts = (df.select(F.col(bucket_col).alias("ftb"),
@@ -457,12 +405,9 @@ def hll_growth_curve(df: DataFrame, bucket_col: str, col: str, *,
     cexact = (tbs.join(firsts, F.col("ftb") <= F.col("tb"))
               .groupBy("tb")
               .agg(F.count("*").cast("long").alias("n_exact_cum")))
-    out = (d2.withColumn("estimate", est.cast("long"))
-           .join(cexact, "tb"))
     err = F.expr("((estimate - n_exact_cum) * 1000000)"
                  " div n_exact_cum")
-    return (out.select(F.col("tb").alias("bucket"),
-                       F.lit(m).cast("long").alias("m"),
-                       "estimate", "n_exact_cum",
-                       err.alias("err_ppm"))
+    return (est.join(cexact, "tb")
+            .select(F.col("tb").alias("bucket"), "m", "estimate",
+                    "n_exact_cum", err.alias("err_ppm"))
             .orderBy("bucket"))

@@ -26,9 +26,11 @@ piece costs are ``floor(-ln(count/total) * 1e6 + 0.5)`` integer
 micro-nats computed by the SAME libm in both engines (Python
 ``math.log`` here, DuckDB ``ln`` in the oracle — one C library in
 this container); the Viterbi objective is the single integer
-``total_cost * 1000 + n_pieces`` (n_pieces <= word length <= 64, so
-the packing is collision-free), minimized left-to-right with ties
-therefore broken toward FEWER pieces; seed selection orders by
+``total_cost * (len(word) + 1) + n_pieces`` (n_pieces <= word length,
+so the packing is collision-free at any length and orders exactly as
+the oracle's ``* 1000`` packing for words under 1,000 chars),
+minimized left-to-right with ties therefore broken toward FEWER
+pieces; seed selection orders by
 (count desc, piece asc). The ``unigram_segment`` oracle replays seed
 construction and the unrolled DP verbatim.
 """
@@ -46,7 +48,7 @@ from ocr_engine_spark.functions.bpe import word_table
 
 Vocab = list[tuple[str, int]]  # (piece, cost_micro_nats)
 
-_SENTINEL = 1 << 60
+_UNREACHED = math.inf  # above every packed score, at any word length
 
 
 def seed_piece_counts(words: DataFrame, *,
@@ -95,22 +97,24 @@ def build_seed_vocab(df: DataFrame, *, vocab_size: int = 256,
 def viterbi(word: str, cost: dict[str, int],
             max_piece_len: int) -> tuple[int, int, list[str]]:
     """(total_cost_micro, n_pieces, pieces) minimizing the packed
-    integer ``cost*1000 + n_pieces`` — ties break toward fewer
-    pieces; unsegmentable suffixes (impossible when all chars are in
-    the vocab) carry the sentinel."""
+    integer ``cost * (n + 1) + n_pieces`` for a word of n chars — the
+    multiplier exceeds any piece count, so ties break toward fewer
+    pieces at every length; an unsegmentable word (a char missing
+    from the vocab) returns ``(-1, -1, [])``."""
     n = len(word)
-    best = [0] + [_SENTINEL] * n          # packed score per prefix
+    mult = n + 1
+    best = [0] + [_UNREACHED] * n         # packed score per prefix
     back = [0] * (n + 1)                  # chosen piece length
     for j in range(1, n + 1):
         for k in range(1, min(max_piece_len, j) + 1):
             c = cost.get(word[j - k:j])
-            if c is None or best[j - k] >= _SENTINEL:
+            if c is None or best[j - k] == _UNREACHED:
                 continue
-            cand = best[j - k] + c * 1000 + 1
+            cand = best[j - k] + c * mult + 1
             if cand < best[j]:
                 best[j] = cand
                 back[j] = k
-    if best[n] >= _SENTINEL:
+    if best[n] == _UNREACHED:
         return -1, -1, []
     pieces: list[str] = []
     j = n
@@ -119,7 +123,7 @@ def viterbi(word: str, cost: dict[str, int],
         pieces.append(word[j - k:j])
         j -= k
     pieces.reverse()
-    return best[n] // 1000, best[n] % 1000, pieces
+    return best[n] // mult, best[n] % mult, pieces
 
 
 def segment_words(words: DataFrame, vocab: Vocab, *,
@@ -185,7 +189,10 @@ def encode_unigram(df: DataFrame, vocab: Vocab, *,
     """(id, n_words, n_tokens): per-document unigram token counts —
     the fertility input. Distinct words segment ONCE; documents join
     the segmented side table on the word key (broadcast when small),
-    corpus bytes are never re-scanned per piece."""
+    corpus bytes are never re-scanned per piece. A word the vocab
+    cannot segment (a char it never saw) counts in ``n_words`` and
+    adds 0 to ``n_tokens``: the ``-1`` sentinel is floored at 0,
+    never summed."""
     doc_words = (df
                  .select(F.col(id_col),
                          F.explode(F.split(F.lower(F.col(text_col)),
@@ -198,4 +205,5 @@ def encode_unigram(df: DataFrame, vocab: Vocab, *,
     return (doc_words.join(seg, "word")
             .groupBy(id_col)
             .agg(F.count("*").cast("long").alias("n_words"),
-                 F.sum("n_pieces").cast("long").alias("n_tokens")))
+                 F.sum(F.greatest("n_pieces", F.lit(0)))
+                 .cast("long").alias("n_tokens")))

@@ -79,3 +79,19 @@ def test_rejects_non_word_edge_terms():
         build_automaton(["-bad"])
     with pytest.raises(AssertionError):
         build_automaton(["bad-"])
+
+
+def test_self_overlapping_term_counts_non_overlapping(spark):
+    """A term that overlaps itself counts like regexp_count: leftmost
+    match first, then the scan resumes after it."""
+    from ocr_engine_spark.functions.aho import lexicon_scan_ac
+    from ocr_engine_spark.functions.scrub import lexicon_scan
+    lex = {"x": ["a b a"], "y": ["aa aa", "a b a"]}
+    rows = [(0, "a b a b a"), (1, "a b a b a b a"), (2, "aa aa aa aa aa")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    ac = lexicon_scan_ac(df, lex).collect()
+    assert (sorted(map(tuple, lexicon_scan(df, lex).collect()))
+            == sorted(map(tuple, ac)))
+    got = {r.doc_id: r for r in ac}
+    assert got[0].x_hits == 1 and got[1].x_hits == 2
+    assert got[2].y_hits == 2

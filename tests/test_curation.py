@@ -56,3 +56,22 @@ def test_single_plan_no_python_and_gate_pushed(spark):
     for line in plan.splitlines():
         if "+- Window [" in line or line.strip().startswith("Window ["):
             assert len(line.split("], [")) >= 3, line
+
+
+def test_language_deduped_away_keeps_its_report_row(spark):
+    """A language whose gated rows are all exact copies of LOWER-id
+    rows in another language loses every row to dedup; the report
+    still lists it as (n_gated, 0, 0, 0) and leaves the other
+    languages' rows as they were."""
+    from ocr_engine_spark.functions.curation import curation_summary
+    docs = _docs(spark).filter(F.col("doc_id") < 200)
+    ghost = docs.select((F.col("doc_id") + 100_000).alias("doc_id"),
+                        "text", F.lit("zz").alias("lang"), "source",
+                        "n_chars")
+    base = {r.lang: tuple(r) for r in curation_summary(docs).collect()}
+    got = {r.lang: tuple(r) for r in
+           curation_summary(docs.unionByName(ghost)).collect()}
+    n_gated = sum(r[1] for r in base.values())
+    assert n_gated > 0
+    assert got.pop("zz") == ("zz", n_gated, 0, 0, 0)
+    assert got == base

@@ -243,3 +243,22 @@ def test_host_concentration_has_no_unpartitioned_window(spark):
             # partitioned renders '], [parts], [order]' (3 groups);
             # unpartitioned has no partition group (2)
             assert len(line.split("], [")) >= 3, line
+
+
+def test_page_extractors_compile_under_huge_method_limit(spark, entrymod):
+    """Every whole-stage-codegen subtree of the widest page extractors
+    compiles to methods under ``spark.sql.codegen.hugeMethodLimit``.
+    Past it the JIT refuses to compile the method and the stage runs
+    interpreted (~6x slower); og_metadata and page_metadata stay under
+    it only because their extracts and finishes sit in two stacked
+    Projects."""
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    for name in ("og_metadata", "page_metadata", "html_tables",
+                 "hreflang_alternates"):
+        df = entrymod.queries()[name](spark, SF_DIR)
+        df.collect()  # AQE exposes its codegen subtrees once executed
+        seq = df._jdf.queryExecution().debug().codegenToSeq()
+        sizes = [seq.apply(i)._3().maxMethodCodeSize()
+                 for i in range(seq.size())]
+        assert sizes, name
+        assert max(sizes) < limit, (name, sizes)

@@ -83,3 +83,26 @@ def test_encode_unigram_token_accounting(spark):
     assert 2 not in got  # no words -> no row (join semantics)
     # n_tokens >= n_words (a word is at least one piece)
     assert got[0].n_tokens >= got[0].n_words
+
+
+def test_viterbi_long_word_piece_count_never_wraps():
+    """1,200 single-char pieces: the old ``cost*1000 + n_pieces``
+    packing carried 1,000 of them into the cost."""
+    from ocr_engine_spark.functions.unigram import viterbi
+    c, n, pieces = viterbi("a" * 1200, {"a": 7}, 4)
+    assert (c, n) == (7 * 1200, 1200) and pieces == ["a"] * 1200
+    # ties still break toward fewer pieces at this length
+    c2, n2, p2 = viterbi("a" * 1200, {"a": 7, "aa": 14}, 4)
+    assert (c2, n2) == (7 * 1200, 600) and set(p2) == {"aa"}
+
+
+def test_encode_unigram_unseen_char_adds_no_tokens(spark):
+    """A word with a char outside the vocab is unsegmentable: it still
+    counts as a word, and its ``-1`` sentinel never lowers n_tokens."""
+    from ocr_engine_spark.functions.unigram import encode_unigram
+    vocab = [("a", 10), ("b", 10), ("ab", 15)]
+    rows = [(0, "ab ab"), (1, "ab qab"), (2, "q"), (3, "a" * 1200)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.doc_id: (r.n_words, r.n_tokens)
+           for r in encode_unigram(df, vocab).collect()}
+    assert got == {0: (2, 2), 1: (2, 1), 2: (1, 0), 3: (1, 1200)}

@@ -3,6 +3,9 @@ entry under Spark and its oracle_sql() twin under DuckDB on the same
 parquet tables, compare row count + schema-sorted values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+A query name that is not in queries() is an error (exit 2) before any
+query runs, so a misspelled name can never pass by checking nothing.
 """
 
 from __future__ import annotations
@@ -34,6 +37,11 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from ocr_engine_spark.engine.session import build_session
 
+    qs = entrymod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print("unknown query names:", unknown)
+        return 2
     spark = build_session("oracle-check", master="local[8]",
                           shuffle_partitions=8)
     con = duckdb.connect()
@@ -42,9 +50,9 @@ def main() -> int:
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    n_compared = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -54,6 +62,7 @@ def main() -> int:
             print(f"{name:24s} rows-only: {len(got)} rows ok")
             continue
         want = con.sql(oracles[name]).df()
+        n_compared += 1
         g, w = normalize(got), normalize(want)
         status = "OK"
         if list(g.columns) != list(w.columns):
@@ -71,6 +80,7 @@ def main() -> int:
         if status != "OK":
             failures.append(name)
     spark.stop()
+    print(f"compared {n_compared} queries against their oracles")
     if failures:
         print("FAILED:", failures)
         return 1
