@@ -80,6 +80,37 @@ def shingles_col(c: Column, n: int = 3) -> Column:
             lambda i: F.concat_ws(" ", F.slice(toks, i, n)))))
 
 
+def _doc_shingles(df: DataFrame, id_col: str, text_col: str,
+                  n: int) -> tuple[DataFrame, DataFrame]:
+    """(id, sh) rows, one per distinct word n-gram shingle of a doc,
+    and the (id, n_sh) per-doc shingle counts."""
+    from ocr_engine_spark.functions.generate import explode_nonull
+    # explode_nonull: plain explode re-evaluates the shingle grammar in
+    # a Catalyst-inferred guard filter (see generate.py)
+    sh = explode_nonull(df, shingles_col(F.col(text_col), n), "sh",
+                        F.col(id_col).alias("id"))
+    return sh, sh.groupBy("id").agg(F.count("*").alias("n_sh"))
+
+
+def _shingle_overlaps(sh: DataFrame, sizes: DataFrame) -> DataFrame:
+    """(id_a, id_b, inter, n_a, n_b), id_a < id_b, for every pair of
+    docs sharing a shingle, from ``_doc_shingles``-shaped (id, sh) and
+    (id, n_sh) tables: ``inter`` shared shingles, ``n_a`` / ``n_b``
+    each doc's shingle count. An inverted-index equi-join on the
+    shingle — never a cross join."""
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (a.join(b, "sh")
+             .filter(F.col("a.id") < F.col("b.id"))
+             .groupBy(F.col("a.id").alias("id_a"),
+                      F.col("b.id").alias("id_b"))
+             .agg(F.count("*").alias("inter")))
+    return (inter
+            .join(sizes.select(F.col("id").alias("id_a"),
+                               F.col("n_sh").alias("n_a")), "id_a")
+            .join(sizes.select(F.col("id").alias("id_b"),
+                               F.col("n_sh").alias("n_b")), "id_b"))
+
+
 def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", n: int = 3,
                   threshold: float = 0.1) -> DataFrame:
@@ -89,30 +120,13 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     Scale note: exact and shuffle-bound; at 100 TB this runs only inside
     LSH candidate buckets (minhash_candidate_pairs verifies with this).
     """
-    from ocr_engine_spark.functions.generate import explode_nonull
-    # explode_nonull: plain explode re-evaluates the shingle grammar in
-    # a Catalyst-inferred guard filter (see generate.py)
-    sh = explode_nonull(df, shingles_col(F.col(text_col), n), "sh",
-                        F.col(id_col).alias("id"))
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (a.join(b, "sh")
-             .filter(F.col("a.id") < F.col("b.id"))
-             .groupBy(F.col("a.id").alias("id_a"),
-                      F.col("b.id").alias("id_b"))
-             .agg(F.count("*").alias("inter")))
-    out = (inter
-           .join(sizes.select(F.col("id").alias("id_a"),
-                              F.col("n_sh").alias("n_a")), "id_a")
-           .join(F.broadcast(sizes.select(F.col("id").alias("id_b"),
-                                          F.col("n_sh").alias("n_b"))), "id_b")
-           .withColumn("jaccard",
-                       F.round(F.col("inter").cast("double")
-                               / (F.col("n_a") + F.col("n_b") - F.col("inter")),
-                               6))
-           .filter(F.col("jaccard") >= threshold)
-           .select("id_a", "id_b", "inter", "n_a", "n_b", "jaccard"))
-    return out
+    return (_shingle_overlaps(*_doc_shingles(df, id_col, text_col, n))
+            .withColumn("jaccard",
+                        F.round(F.col("inter").cast("double")
+                                / (F.col("n_a") + F.col("n_b")
+                                   - F.col("inter")), 6))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "inter", "n_a", "n_b", "jaccard"))
 
 
 # ---------------------------------------------------------------------------
@@ -292,23 +306,7 @@ def containment_pairs(df: DataFrame, *, id_col: str = "doc_id",
     buckets or on audit samples. Containments are round-6 doubles
     (inter/n_a with both longs — exact division then one rounding,
     replayed verbatim by the oracle)."""
-    from ocr_engine_spark.functions.generate import explode_nonull
-    # explode_nonull: plain explode re-evaluates the shingle grammar in
-    # a Catalyst-inferred guard filter (see generate.py)
-    sh = explode_nonull(df, shingles_col(F.col(text_col), n), "sh",
-                        F.col(id_col).alias("id"))
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (a.join(b, "sh")
-             .filter(F.col("a.id") < F.col("b.id"))
-             .groupBy(F.col("a.id").alias("id_a"),
-                      F.col("b.id").alias("id_b"))
-             .agg(F.count("*").alias("inter")))
-    return (inter
-            .join(sizes.select(F.col("id").alias("id_a"),
-                               F.col("n_sh").alias("n_a")), "id_a")
-            .join(sizes.select(F.col("id").alias("id_b"),
-                               F.col("n_sh").alias("n_b")), "id_b")
+    return (_shingle_overlaps(*_doc_shingles(df, id_col, text_col, n))
             .withColumn("cont_a", F.round(F.col("inter").cast("double")
                                           / F.col("n_a"), 6))
             .withColumn("cont_b", F.round(F.col("inter").cast("double")
@@ -343,19 +341,8 @@ def lsh_quality_audit(df: DataFrame, *, id_col: str = "doc_id",
     sh = df.select(F.col(id_col).alias("id"),
                    shingles_col(F.col(text_col), n).alias("sh")).persist()
     # truth: inverted index -> intersection counts -> exact Jaccard
-    ex = sh.select("id", F.explode("sh").alias("s"))
-    sizes = sh.select("id", F.size("sh").alias("n_sh"))
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (a.join(b, "s")
-             .filter(F.col("a.id") < F.col("b.id"))
-             .groupBy(F.col("a.id").alias("id_a"),
-                      F.col("b.id").alias("id_b"))
-             .agg(F.count("*").alias("inter")))
-    truth = (inter
-             .join(sizes.select(F.col("id").alias("id_a"),
-                                F.col("n_sh").alias("n_a")), "id_a")
-             .join(sizes.select(F.col("id").alias("id_b"),
-                                F.col("n_sh").alias("n_b")), "id_b")
+    truth = (_shingle_overlaps(sh.select("id", F.explode("sh").alias("sh")),
+                               sh.select("id", F.size("sh").alias("n_sh")))
              .filter(F.round(F.col("inter").cast("double")
                              / (F.col("n_a") + F.col("n_b")
                                 - F.col("inter")), 6) >= threshold)

@@ -10,6 +10,9 @@ Re-expressed Spark-first with the repo's portability discipline:
     word tokens hash into ``buckets`` slots via the repo-wide portable
     60-bit md5 hash, so DuckDB replays every count and every score
     (a KenLM binary would be an opaque, unverifiable side input);
+  * the interpolated Kneser-Ney scorers (orders 2 and 3, the smoothing
+    KenLM uses) are ONE order-n recursion over continuation-count
+    tables on the same hashed basis (``_fit_kn`` / ``doc_log_ppl_kn``);
   * every per-bigram log probability is quantized ONCE to integer
     micro-nats (the dsir.py fixed-point rule) so per-doc sums are exact
     64-bit arithmetic in any engine / summation order;
@@ -54,27 +57,50 @@ from ocr_engine_spark.functions.text import md5_int60_col
 MICRO = 1e6  # fixed-point scale: integer micro-nats (dsir.MICRO twin)
 
 
+def _ngram_buckets(df: DataFrame, keys: tuple[str, ...], *, buckets: int,
+                   id_col: str, text_col: str) -> DataFrame:
+    """One (id, *keys) row per n-gram occurrence, n = ``len(keys)``:
+    each position's token bucket under the portable 60-bit hash. Pure
+    map-side — tokenize once (materialized column: HOFs never codegen,
+    see functions/text.py), zip the token array against its n-1
+    shifts, explode; docs under n tokens contribute nothing. DuckDB
+    twins zip n ``unnest``s of the shifted slices in one SELECT."""
+    toks = df.select(F.col(id_col),
+                     word_tokens_col(F.col(text_col)).alias("__t"))
+    n, size = len(keys), F.size("__t")
+    grams = F.when(size >= n, F.arrays_zip(
+        *[F.slice("__t", i + 1, size - (n - 1)).alias(k)
+          for i, k in enumerate(keys)])
+    ).otherwise(F.array().cast(
+        "array<struct<%s>>" % ",".join(f"{k}:string" for k in keys)))
+    return (toks.select(id_col, F.explode(grams).alias("__g"))
+            .select(id_col, *[(md5_int60_col(F.col(f"__g.{k}"))
+                               % F.lit(buckets)).alias(k)
+                              for k in keys]))
+
+
 def bigram_pairs(df: DataFrame, *, buckets: int, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
     """One (id, cb, wb) row per bigram occurrence: context bucket and
-    word bucket under the portable 60-bit hash. Pure map-side —
-    tokenize once (materialized column: HOFs never codegen, see
-    functions/text.py), zip the token array against its own shift,
-    explode. DuckDB twin zips two ``unnest``s of ``t[1:n-1]`` /
-    ``t[2:n]`` in one SELECT."""
-    toks = df.select(F.col(id_col),
-                     word_tokens_col(F.col(text_col)).alias("__t"))
-    n = F.size("__t")
-    pairs = F.when(n >= 2, F.arrays_zip(
-        F.slice("__t", 1, n - 1).alias("c"),
-        F.slice("__t", 2, n - 1).alias("w"))
-    ).otherwise(F.array().cast("array<struct<c:string,w:string>>"))
-    return (toks.select(id_col, F.explode(pairs).alias("__p"))
-            .select(id_col,
-                    (md5_int60_col(F.col("__p.c")) % F.lit(buckets))
-                    .alias("cb"),
-                    (md5_int60_col(F.col("__p.w")) % F.lit(buckets))
-                    .alias("wb")))
+    word bucket under the portable 60-bit hash."""
+    return _ngram_buckets(df, ("cb", "wb"), buckets=buckets,
+                          id_col=id_col, text_col=text_col)
+
+
+def _per_doc_nll(grams: DataFrame, p, *, id_col: str,
+                 count_col: str) -> DataFrame:
+    """(id, count_col, nll_micro, log_ppl_micro) from one row per gram
+    carrying its probability ``p``: ln(p) is quantized ONCE to integer
+    micro-nats, per-doc sums are exact int64, and ``log_ppl_micro =
+    nll_micro div count`` (one (doc, partial-sum) shuffle with
+    map-side combine)."""
+    lp_micro = F.round(F.log(p) * F.lit(MICRO), 0).cast("long")
+    return (grams.withColumn("__lp", lp_micro)
+            .groupBy(id_col)
+            .agg(F.count("*").alias(count_col),
+                 (-F.sum("__lp")).alias("nll_micro"))
+            .withColumn("log_ppl_micro",
+                        F.expr(f"nll_micro div {count_col}")))
 
 
 def fit_bigram_lm(reference: DataFrame, *, buckets: int,
@@ -111,13 +137,7 @@ def doc_log_ppl(docs: DataFrame, ctx_counts: DataFrame,
               .withColumn("c_ctx", F.coalesce(F.col("c_ctx"), F.lit(0))))
     alpha_v = alpha * buckets  # python-folded literal, same in SQL twin
     p = (F.col("c_big") + F.lit(alpha)) / (F.col("c_ctx") + F.lit(alpha_v))
-    lp_micro = F.round(F.log(p) * F.lit(MICRO), 0).cast("long")
-    return (joined.withColumn("__lp", lp_micro)
-            .groupBy(id_col)
-            .agg(F.count("*").alias("n_bigrams"),
-                 (-F.sum("__lp")).alias("nll_micro"))
-            .withColumn("log_ppl_micro",
-                        F.expr("nll_micro div n_bigrams")))
+    return _per_doc_nll(joined, p, id_col=id_col, count_col="n_bigrams")
 
 
 def ppl_bucket(docs: DataFrame, reference: DataFrame, *,
@@ -158,222 +178,132 @@ def ppl_bucket(docs: DataFrame, reference: DataFrame, *,
             .drop("__grank", "__all", "__n"))
 
 
-def fit_kn_bigram_lm(reference: DataFrame, *, buckets: int,
-                     id_col: str = "doc_id", text_col: str = "text"
-                     ) -> tuple[DataFrame, DataFrame, DataFrame,
-                                DataFrame]:
-    """Interpolated Kneser-Ney statistics (Kneser & Ney 1995; Chen &
-    Goodman 1998 — the smoothing KenLM itself uses, here on the hashed
-    bucket basis): returns ``(big, ctx, n1w, scalars)`` where
+def _kn_keys(order: int) -> tuple[str, ...]:
+    return tuple(f"b{i}" for i in range(order))
 
-      * ``big``     = (cb, wb, c_big) bigram counts;
-      * ``ctx``     = (cb, c_ctx, n1c): context totals and the number
-        of DISTINCT bucket types following cb (N1+(cb·));
-      * ``n1w``     = (wb, n1w): distinct contexts preceding wb
-        (N1+(·wb) — the continuation count that makes KN score a word
-        by how many contexts it completes, not how often it occurs);
-      * ``scalars`` = 1 row (nb, n1, n2): distinct bigram types and
-        the count-of-counts feeding the Ney-Essen-Kneser discount
-        ``D = n1 / (n1 + 2·n2)``.
 
-    Everything derives from ONE pass over the reference's bigram
-    table; all four outputs are bounded by reference gram volume and
+def _fit_kn(reference: DataFrame, order: int, *, buckets: int,
+            id_col: str, text_col: str) -> tuple[DataFrame, ...]:
+    """Interpolated Kneser-Ney statistics of any order n (Chen &
+    Goodman 1998 §4.1.6 — lower orders use CONTINUATION counts, the
+    KenLM formulation): ``(T_n, ctx_n, T_{n-1}, ctx_{n-1}, ..., T_2,
+    ctx_2, T_1, scalars)``, where
+
+      * ``T_n`` (b0..b{n-1}, c{n}) holds raw n-gram counts and each
+        lower ``T_k`` is the continuation table of the one above —
+        ``T_{k+1}`` grouped by its last k keys, ``c{k}`` = the number
+        of distinct left extensions (N1+(·w) at k = 1: KN scores a
+        word by how many contexts it completes, not how often it
+        occurs);
+      * ``ctx_k`` (the k-1 context keys, tot{k}, n1p{k}): context
+        totals and N1+(ctx·), the distinct types following it;
+      * ``scalars`` is 1 row of each level's count-of-counts
+        (n1_{k}, n2_{k}) feeding ``D_k = n1/(n1 + 2·n2)`` and its
+        type count rows{k} (``rows2`` is the unigram denominator).
+
+    Everything flows from ONE pass over the reference's top-order
+    table; every output is bounded by reference gram volume and
     broadcast into scoring."""
-    pairs = bigram_pairs(reference, buckets=buckets, id_col=id_col,
-                         text_col=text_col)
-    big = pairs.groupBy("cb", "wb").agg(F.count("*").alias("c_big"))
-    ctx = big.groupBy("cb").agg(F.sum("c_big").alias("c_ctx"),
-                                F.count("*").alias("n1c"))
-    n1w = big.groupBy("wb").agg(F.count("*").alias("n1w"))
-    scalars = big.agg(
-        F.count("*").alias("nb"),
-        F.sum((F.col("c_big") == 1).cast("long")).alias("n1"),
-        F.sum((F.col("c_big") == 2).cast("long")).alias("n2"))
-    return big, ctx, n1w, scalars
+    keys = _kn_keys(order)
+    t = (_ngram_buckets(reference, keys, buckets=buckets, id_col=id_col,
+                        text_col=text_col)
+         .groupBy(*keys).agg(F.count("*").alias(f"c{order}")))
+    model, levels = [], []
+    for k in range(order, 1, -1):
+        c, ks = F.col(f"c{k}"), keys[order - k:]
+        model += [t, t.groupBy(*ks[:-1]).agg(F.sum(c).alias(f"tot{k}"),
+                                             F.count("*").alias(f"n1p{k}"))]
+        levels.append(t.agg(F.count("*").alias(f"rows{k}"),
+                            F.sum((c == 1).cast("long")).alias(f"n1_{k}"),
+                            F.sum((c == 2).cast("long")).alias(f"n2_{k}")))
+        t = t.groupBy(*ks[1:]).agg(F.count("*").alias(f"c{k - 1}"))
+    scalars = levels[0]
+    for lv in levels[1:]:
+        scalars = scalars.crossJoin(lv)
+    return (*model, t, scalars)
 
 
-def doc_log_ppl_kn(docs: DataFrame, big: DataFrame, ctx: DataFrame,
-                   n1w: DataFrame, scalars: DataFrame, *, buckets: int,
+def doc_log_ppl_kn(docs: DataFrame, *model: DataFrame, buckets: int,
                    id_col: str = "doc_id", text_col: str = "text"
                    ) -> DataFrame:
-    """(id, n_bigrams, nll_micro, log_ppl_micro) under interpolated
-    Kneser-Ney:
+    """(id, n_bigrams | n_trigrams, nll_micro, log_ppl_micro) under
+    interpolated Kneser-Ney of the order ``model`` was fitted at
+    (``fit_kn_bigram_lm`` / ``fit_kn_trigram_lm``), by the recursion
 
-      ``p(w|c) = (max(c(c,w) - D, 0) + D · N1+(c·) · Pcont(w)) / c(c·)``
-      ``Pcont(w) = N1+(·w) / nb``, floored at ``1/(nb + buckets)`` for
-      words completing no reference context; contexts with ``c(c·)=0``
-      back off to ``Pcont(w)`` alone.
+      ``p_1(w)   = c1(w) / rows2``, floored at ``1/(rows2 + buckets)``
+      for words completing no reference context;
+      ``p_k(w|ctx) = (max(c_k - D_k, 0) + D_k · N1+(ctx·) · p_{k-1})
+      / tot_k(ctx)``, backing fully off to ``p_{k-1}`` when
+      ``tot_k(ctx) = 0``; ``D_k = 0.5`` when ``n1 + 2·n2 = 0``.
 
-    Portability: D, Pcont and p are each ONE double expression over
-    exact int64 counts (the n-row scalar rides a broadcast cross
-    join — never a Python literal, so both engines derive it from the
-    same integers), ln() is quantized ONCE to micro-nats, per-doc sums
-    are exact integers. The interpolation term can push p marginally
-    above 1 for pathological contexts (documented Chen-Goodman
-    artifact of flooring Pcont), so single-gram lp may be slightly
-    positive — scores remain a valid ranking signal.
+    Portability: every D_k and p_k is ONE double expression over exact
+    int64 counts (the scalars ride a broadcast 1-row cross join — never
+    a Python literal, so both engines derive them from the same
+    integers), ln() is quantized ONCE to micro-nats, per-doc sums are
+    exact integers. The interpolation term can push p marginally above
+    1 for pathological contexts (documented Chen-Goodman artifact of
+    flooring p_1), so single-gram lp may be slightly positive — scores
+    remain a valid ranking signal.
 
-    Plan: three broadcast joins + one 1-row cross join + one
-    (doc, partial-sum) shuffle with map-side combine — identical shape
-    to the add-alpha scorer."""
-    pairs = bigram_pairs(docs, buckets=buckets, id_col=id_col,
-                         text_col=text_col)
-    joined = (pairs
-              .join(F.broadcast(big), ["cb", "wb"], "left")
-              .join(F.broadcast(ctx), ["cb"], "left")
-              .join(F.broadcast(n1w), ["wb"], "left")
-              .crossJoin(F.broadcast(scalars))
-              .withColumn("c_big", F.coalesce(F.col("c_big"), F.lit(0)))
-              .withColumn("c_ctx", F.coalesce(F.col("c_ctx"), F.lit(0)))
-              .withColumn("n1c", F.coalesce(F.col("n1c"), F.lit(0)))
-              .withColumn("n1w", F.coalesce(F.col("n1w"), F.lit(0))))
-    d = F.when(F.col("n1") + 2 * F.col("n2") == 0, F.lit(0.5)) \
-         .otherwise(F.col("n1").cast("double")
-                    / (F.col("n1") + 2 * F.col("n2")).cast("double"))
-    pcont = F.when(F.col("n1w") > 0,
-                   F.col("n1w").cast("double")
-                   / F.col("nb").cast("double")) \
-             .otherwise(F.lit(1.0)
-                        / (F.col("nb") + F.lit(buckets)).cast("double"))
-    p = F.when(
-        F.col("c_ctx") > 0,
-        (F.greatest(F.col("c_big").cast("double") - d, F.lit(0.0))
-         + d * F.col("n1c").cast("double") * pcont)
-        / F.col("c_ctx").cast("double")) \
-        .otherwise(pcont)
-    lp_micro = F.round(F.log(p) * F.lit(MICRO), 0).cast("long")
-    return (joined.withColumn("__lp", lp_micro)
-            .groupBy(id_col)
-            .agg(F.count("*").alias("n_bigrams"),
-                 (-F.sum("__lp")).alias("nll_micro"))
-            .withColumn("log_ppl_micro",
-                        F.expr("nll_micro div n_bigrams")))
+    Plan: 2n-1 broadcast joins + one 1-row cross join + one
+    (doc, partial-sum) shuffle with map-side combine — the add-alpha
+    scorer's shape."""
+    order = len(model) // 2
+    keys = _kn_keys(order)
+    g = _ngram_buckets(docs, keys, buckets=buckets, id_col=id_col,
+                       text_col=text_col)
+    # T_k joins on its k-gram, ctx_k on the k-1 context before it
+    on = [keys[i:j] for i in range(order) for j in (order, order - 1)
+          if j > i]
+    for table, ks in zip(model, on):
+        g = g.join(F.broadcast(table), list(ks), "left")
+    g = g.crossJoin(F.broadcast(model[-1]))
+    for k in range(1, order + 1):
+        for c in [f"c{k}"] + ([f"tot{k}", f"n1p{k}"] if k > 1 else []):
+            g = g.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
+    rows2 = F.col("rows2")
+    p = F.when(F.col("c1") > 0,
+               F.col("c1").cast("double") / rows2.cast("double")) \
+         .otherwise(F.lit(1.0) / (rows2 + F.lit(buckets)).cast("double"))
+    for k in range(2, order + 1):
+        n1, n2, tot = F.col(f"n1_{k}"), F.col(f"n2_{k}"), F.col(f"tot{k}")
+        d = F.when(n1 + 2 * n2 == 0, F.lit(0.5)) \
+             .otherwise(n1.cast("double") / (n1 + 2 * n2).cast("double"))
+        p = F.when(
+            tot > 0,
+            (F.greatest(F.col(f"c{k}").cast("double") - d, F.lit(0.0))
+             + d * F.col(f"n1p{k}").cast("double") * p)
+            / tot.cast("double")) \
+            .otherwise(p)
+    return _per_doc_nll(g, p, id_col=id_col,
+                        count_col={2: "n_bigrams", 3: "n_trigrams"}[order])
 
 
-def trigram_triples(df: DataFrame, *, buckets: int,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """One (id, ub, vb, wb) row per trigram occurrence under the
-    portable hash — the order-3 sibling of ``bigram_pairs`` (same
-    materialize-then-zip discipline; docs under 3 tokens contribute
-    nothing)."""
-    toks = df.select(F.col(id_col),
-                     word_tokens_col(F.col(text_col)).alias("__t"))
-    n = F.size("__t")
-    trips = F.when(n >= 3, F.arrays_zip(
-        F.slice("__t", 1, n - 2).alias("u"),
-        F.slice("__t", 2, n - 2).alias("v"),
-        F.slice("__t", 3, n - 2).alias("w"))
-    ).otherwise(F.array().cast(
-        "array<struct<u:string,v:string,w:string>>"))
-    return (toks.select(id_col, F.explode(trips).alias("__p"))
-            .select(id_col,
-                    (md5_int60_col(F.col("__p.u")) % F.lit(buckets))
-                    .alias("ub"),
-                    (md5_int60_col(F.col("__p.v")) % F.lit(buckets))
-                    .alias("vb"),
-                    (md5_int60_col(F.col("__p.w")) % F.lit(buckets))
-                    .alias("wb")))
+def fit_kn_bigram_lm(reference: DataFrame, *, buckets: int,
+                     id_col: str = "doc_id", text_col: str = "text"
+                     ) -> tuple[DataFrame, ...]:
+    """Interpolated Kneser-Ney bigram statistics (Kneser & Ney 1995;
+    Chen & Goodman 1998 — the smoothing KenLM itself uses, here on the
+    hashed bucket basis): the order-2 ``_fit_kn`` tuple (bigram
+    counts, context totals, N1+(·w), scalars), splatted into
+    ``doc_log_ppl_kn(docs, *model, ...)``."""
+    return _fit_kn(reference, 2, buckets=buckets, id_col=id_col,
+                   text_col=text_col)
 
 
 def fit_kn_trigram_lm(reference: DataFrame, *, buckets: int,
                       id_col: str = "doc_id", text_col: str = "text"
-                      ) -> dict[str, DataFrame]:
-    """Full interpolated Kneser-Ney order-3 statistics (Chen &
-    Goodman 1998 §4.1.6 — lower orders use CONTINUATION counts, not
-    raw counts): returns a dict of broadcastable tables
-
-      * ``tri``   (ub, vb, wb, c3): raw trigram counts;
-      * ``tctx``  (ub, vb, c3tot, n13): trigram context totals and
-        N1+(uv·);
-      * ``cont2`` (vb, wb, c2h): continuation bigram counts
-        N1+(·vw) — how many left contexts the bigram completes;
-      * ``c2ctx`` (vb, c2tot, n12): continuation-context totals and
-        N1+(v·) over the continuation table;
-      * ``cont1`` (wb, c1h): N1+ (·w) over continuation bigrams;
-      * ``sca``   1 row (nb2, n1_3, n2_3, n1_2, n2_2): distinct
-        continuation-bigram types and both levels' count-of-counts
-        feeding D3 = n1_3/(n1_3+2·n2_3), D2 = n1_2/(n1_2+2·n2_2).
-
-    Everything flows from ONE trigram-table pass; all outputs are
-    reference-bounded broadcast sides."""
-    trips = trigram_triples(reference, buckets=buckets, id_col=id_col,
-                            text_col=text_col)
-    tri = trips.groupBy("ub", "vb", "wb").agg(F.count("*").alias("c3"))
-    tctx = tri.groupBy("ub", "vb").agg(F.sum("c3").alias("c3tot"),
-                                       F.count("*").alias("n13"))
-    cont2 = tri.groupBy("vb", "wb").agg(F.count("*").alias("c2h"))
-    c2ctx = cont2.groupBy("vb").agg(F.sum("c2h").alias("c2tot"),
-                                    F.count("*").alias("n12"))
-    cont1 = cont2.groupBy("wb").agg(F.count("*").alias("c1h"))
-    sca = (tri.agg(
-        F.sum((F.col("c3") == 1).cast("long")).alias("n1_3"),
-        F.sum((F.col("c3") == 2).cast("long")).alias("n2_3"))
-        .crossJoin(cont2.agg(
-            F.count("*").alias("nb2"),
-            F.sum((F.col("c2h") == 1).cast("long")).alias("n1_2"),
-            F.sum((F.col("c2h") == 2).cast("long")).alias("n2_2"))))
-    return {"tri": tri, "tctx": tctx, "cont2": cont2, "c2ctx": c2ctx,
-            "cont1": cont1, "sca": sca}
+                      ) -> tuple[DataFrame, ...]:
+    """Order-3 interpolated Kneser-Ney statistics: the ``_fit_kn``
+    tuple scored by ``doc_log_ppl_kn3``."""
+    return _fit_kn(reference, 3, buckets=buckets, id_col=id_col,
+                   text_col=text_col)
 
 
-def doc_log_ppl_kn3(docs: DataFrame, model: dict[str, DataFrame], *,
+def doc_log_ppl_kn3(docs: DataFrame, model: tuple[DataFrame, ...], *,
                     buckets: int, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
-    """(id, n_trigrams, nll_micro, log_ppl_micro) under interpolated
-    order-3 Kneser-Ney with the continuation-count backoff chain:
-
-      p1(w)      = c1h/nb2, floored at 1/(nb2+buckets);
-      p2(w|v)    = (max(c2h-D2,0) + D2·N1+(v·)·p1(w)) / c2tot(v),
-                   backing fully to p1 when v completes nothing;
-      p3(w|u,v)  = (max(c3-D3,0) + D3·N1+(uv·)·p2(w|v)) / c3tot(u,v),
-                   backing fully to p2 when (u,v) is unseen.
-
-    Same portability contract as the bigram scorer: D2/D3/p1/p2/p3
-    are single double expressions over exact int64 counts riding a
-    broadcast 1-row cross join; ln() quantizes once; per-doc sums are
-    exact integers. Plan: five broadcast joins + one 1-row cross join
-    + one (doc, partial-sum) shuffle."""
-    trips = trigram_triples(docs, buckets=buckets, id_col=id_col,
-                            text_col=text_col)
-    j = (trips
-         .join(F.broadcast(model["tri"]), ["ub", "vb", "wb"], "left")
-         .join(F.broadcast(model["tctx"]), ["ub", "vb"], "left")
-         .join(F.broadcast(model["cont2"]), ["vb", "wb"], "left")
-         .join(F.broadcast(model["c2ctx"]), ["vb"], "left")
-         .join(F.broadcast(model["cont1"]), ["wb"], "left")
-         .crossJoin(F.broadcast(model["sca"])))
-    for c in ("c3", "c3tot", "n13", "c2h", "c2tot", "n12", "c1h"):
-        j = j.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
-    d3 = F.when(F.col("n1_3") + 2 * F.col("n2_3") == 0, F.lit(0.5)) \
-          .otherwise(F.col("n1_3").cast("double")
-                     / (F.col("n1_3") + 2 * F.col("n2_3"))
-                     .cast("double"))
-    d2 = F.when(F.col("n1_2") + 2 * F.col("n2_2") == 0, F.lit(0.5)) \
-          .otherwise(F.col("n1_2").cast("double")
-                     / (F.col("n1_2") + 2 * F.col("n2_2"))
-                     .cast("double"))
-    p1 = F.when(F.col("c1h") > 0,
-                F.col("c1h").cast("double")
-                / F.col("nb2").cast("double")) \
-          .otherwise(F.lit(1.0)
-                     / (F.col("nb2") + F.lit(buckets)).cast("double"))
-    p2 = F.when(
-        F.col("c2tot") > 0,
-        (F.greatest(F.col("c2h").cast("double") - d2, F.lit(0.0))
-         + d2 * F.col("n12").cast("double") * p1)
-        / F.col("c2tot").cast("double")) \
-        .otherwise(p1)
-    p3 = F.when(
-        F.col("c3tot") > 0,
-        (F.greatest(F.col("c3").cast("double") - d3, F.lit(0.0))
-         + d3 * F.col("n13").cast("double") * p2)
-        / F.col("c3tot").cast("double")) \
-        .otherwise(p2)
-    lp_micro = F.round(F.log(p3) * F.lit(MICRO), 0).cast("long")
-    return (j.withColumn("__lp", lp_micro)
-            .groupBy(id_col)
-            .agg(F.count("*").alias("n_trigrams"),
-                 (-F.sum("__lp")).alias("nll_micro"))
-            .withColumn("log_ppl_micro",
-                        F.expr("nll_micro div n_trigrams")))
+    """(id, n_trigrams, nll_micro, log_ppl_micro): ``doc_log_ppl_kn``
+    over a ``fit_kn_trigram_lm`` model (p3 -> p2 -> p1 backoff)."""
+    return doc_log_ppl_kn(docs, *model, buckets=buckets, id_col=id_col,
+                          text_col=text_col)

@@ -73,6 +73,36 @@ def doc_postings(docs: DataFrame, *, id_col: str = "doc_id",
             .agg(F.count("*").alias("tf")))
 
 
+def _corpus_stats(postings: DataFrame, id_col: str) -> DataFrame:
+    """1-row (n_docs, total_dl) over a postings table; ``total_dl`` is
+    NULL when there are no postings."""
+    return (postings.groupBy(id_col).agg(F.first("dl").alias("dl"))
+            .agg(F.count("*").alias("n_docs"),
+                 F.sum("dl").alias("total_dl")))
+
+
+def _bm25_contribs(qt: DataFrame, st: DataFrame, *, k1: float,
+                   b: float) -> DataFrame:
+    """``qt`` (the query terms' postings rows) plus ``c_micro``, each
+    posting's ``idf * tfn`` quantized once to integer micro-units.
+    ``st`` is the 1-row corpus stats; idf is one row per query term
+    after a broadcast cross join with it — never a driver round
+    trip."""
+    dft = qt.groupBy("term").agg(F.count("*").alias("dft"))
+    idf_t = (dft.crossJoin(F.broadcast(st))
+             .select("term", "n_docs", "total_dl",
+                     F.log(F.lit(1.0)
+                           + (F.col("n_docs") - F.col("dft") + F.lit(0.5))
+                           / (F.col("dft") + F.lit(0.5))).alias("idf")))
+    avgdl = F.col("total_dl") / F.col("n_docs")
+    tfn = (F.col("tf") * F.lit(k1 + 1.0)
+           / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b)
+                                         + F.lit(b) * F.col("dl") / avgdl)))
+    contrib = F.round(F.col("idf") * tfn * F.lit(MICRO), 0).cast("long")
+    return (qt.join(F.broadcast(idf_t), "term")
+            .withColumn("c_micro", contrib))
+
+
 def bm25_topk(postings: DataFrame, query_terms: list[str], k: int, *,
               k1: float = 1.2, b: float = 0.75, id_col: str = "doc_id",
               stats: tuple[int, int] | None = None) -> DataFrame:
@@ -90,27 +120,11 @@ def bm25_topk(postings: DataFrame, query_terms: list[str], k: int, *,
         raise ValueError("empty query")
     qt = postings.filter(F.col("term").isin(list(query_terms)))
     if stats is None:
-        st = (postings.groupBy(id_col).agg(F.first("dl").alias("dl"))
-              .agg(F.count("*").alias("n_docs"),
-                   F.sum("dl").alias("total_dl")))
+        st = _corpus_stats(postings, id_col)
     else:
         spark = postings.sparkSession
         st = spark.createDataFrame([stats], "n_docs long, total_dl long")
-    dft = qt.groupBy("term").agg(F.count("*").alias("dft"))
-    # idf per query term: |query| rows after the broadcast cross join
-    # with the 1-row stats — never a driver round trip
-    idf_t = (dft.crossJoin(F.broadcast(st))
-             .select("term", "n_docs", "total_dl",
-                     F.log(F.lit(1.0)
-                           + (F.col("n_docs") - F.col("dft") + F.lit(0.5))
-                           / (F.col("dft") + F.lit(0.5))).alias("idf")))
-    avgdl = F.col("total_dl") / F.col("n_docs")
-    tfn = (F.col("tf") * F.lit(k1 + 1.0)
-           / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b)
-                                         + F.lit(b) * F.col("dl") / avgdl)))
-    contrib = F.round(F.col("idf") * tfn * F.lit(MICRO), 0).cast("long")
-    scored = (qt.join(F.broadcast(idf_t), "term")
-              .select(id_col, contrib.alias("c_micro"))
+    scored = (_bm25_contribs(qt, st, k1=k1, b=b)
               .groupBy(id_col)
               .agg(F.sum("c_micro").alias("score_micro"),
                    F.count("*").alias("n_terms_hit")))
@@ -149,34 +163,10 @@ class SearchIndex:
         position array alongside tf, enabling ``phrase()`` queries
         over the same pruned scan — tf stays a separate column so
         bag-of-words scoring never deserializes the arrays (Parquet
-        column pruning drops them at the scan)."""
-        spark = docs.sparkSession
-        if positions:
-            toks = docs.select(F.col(id_col),
-                               word_tokens_col(F.col(text_col))
-                               .alias("__t"))
-            post = (toks.select(id_col, F.size("__t").alias("dl"),
-                                F.posexplode("__t").alias("pos", "term"))
-                    .groupBy(id_col, "dl", "term")
-                    .agg(F.sort_array(F.collect_list("pos"))
-                         .alias("positions"))
-                    .withColumn("tf", F.size("positions").cast("long")))
-        else:
-            post = doc_postings(docs, id_col=id_col, text_col=text_col)
-        post = post.withColumn(
-            "tbkt", (md5_int60_col(F.col("term")) % buckets).cast("int"))
-        post.write.partitionBy("tbkt").mode("overwrite") \
-            .parquet(os.path.join(path, "postings"))
-        stats = (post.groupBy(id_col).agg(F.first("dl").alias("dl"))
-                 .agg(F.count("*").alias("n_docs"),
-                      F.sum("dl").alias("total_dl")).collect()[0])
-        spark.createDataFrame(
-            [(buckets, int(stats["n_docs"]), int(stats["total_dl"]))],
-            "buckets int, n_docs long, total_dl long") \
-            .coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(path, "meta"))
-        return cls(path, buckets, int(stats["n_docs"]),
-                   int(stats["total_dl"]), id_col)
+        column pruning drops them at the scan). Building is appending
+        ``docs`` to an empty index that overwrites ``path``."""
+        return cls(path, buckets, 0, 0, id_col)._write(
+            docs, text_col=text_col, positions=positions, mode="overwrite")
 
     @classmethod
     def load(cls, spark: SparkSession, path: str,
@@ -198,10 +188,17 @@ class SearchIndex:
         atomic vs concurrent readers; run it as the periodic batch
         job, the same lambda split start_near_dedup_stream documents.
         """
-        spark = docs.sparkSession
-        has_pos = "positions" in spark.read.parquet(
+        has_pos = "positions" in docs.sparkSession.read.parquet(
             self.postings_path).columns
-        if has_pos:
+        return self._write(docs, text_col=text_col, positions=has_pos,
+                           mode="append")
+
+    def _write(self, docs: DataFrame, *, text_col: str, positions: bool,
+               mode: str) -> "SearchIndex":
+        """Write ``docs``' postings into the term-hash-partitioned
+        layout with ``mode``, then add their stats to the metadata."""
+        spark = docs.sparkSession
+        if positions:
             toks = docs.select(F.col(self.id_col),
                                word_tokens_col(F.col(text_col))
                                .alias("__t"))
@@ -217,13 +214,16 @@ class SearchIndex:
         post = post.withColumn(
             "tbkt",
             (md5_int60_col(F.col("term")) % self.buckets).cast("int"))
-        post.write.partitionBy("tbkt").mode("append") \
+        post.write.partitionBy("tbkt").mode(mode) \
             .parquet(self.postings_path)
-        stats = (post.groupBy(self.id_col).agg(F.first("dl").alias("dl"))
-                 .agg(F.count("*").alias("n"),
-                      F.sum("dl").alias("t")).collect()[0])
-        self.n_docs += int(stats["n"] or 0)
-        self.total_dl += int(stats["t"] or 0)
+        stats = _corpus_stats(post, self.id_col).collect()[0]
+        self.n_docs += int(stats["n_docs"])
+        self.total_dl += int(stats["total_dl"] or 0)
+        if self.n_docs == 0:
+            # a partitioned write of no rows leaves no file to read the
+            # schema from; one zero-row file keeps the index readable
+            post.drop("tbkt").limit(0).write.mode("overwrite").parquet(
+                os.path.join(self.postings_path, "tbkt=0"))
         spark.createDataFrame(
             [(self.buckets, self.n_docs, self.total_dl)],
             "buckets int, n_docs long, total_dl long") \
@@ -349,23 +349,9 @@ def bm25_batch_topk(postings: DataFrame, queries: DataFrame, k: int, *,
     queries = queries.dropDuplicates([qid_col, "term"])
     terms = queries.select("term").distinct()
     qt = postings.join(F.broadcast(terms), "term")
-    st = (postings.groupBy(id_col).agg(F.first("dl").alias("dl"))
-          .agg(F.count("*").alias("n_docs"),
-               F.sum("dl").alias("total_dl")))
-    dft = qt.groupBy("term").agg(F.count("*").alias("dft"))
-    idf_t = (dft.crossJoin(F.broadcast(st))
-             .select("term", "n_docs", "total_dl",
-                     F.log(F.lit(1.0)
-                           + (F.col("n_docs") - F.col("dft") + F.lit(0.5))
-                           / (F.col("dft") + F.lit(0.5))).alias("idf")))
-    avgdl = F.col("total_dl") / F.col("n_docs")
-    tfn = (F.col("tf") * F.lit(k1 + 1.0)
-           / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b)
-                                         + F.lit(b) * F.col("dl") / avgdl)))
-    contrib = F.round(F.col("idf") * tfn * F.lit(MICRO), 0).cast("long")
-    scored = (qt.join(F.broadcast(idf_t), "term")
+    scored = (_bm25_contribs(qt, _corpus_stats(postings, id_col),
+                             k1=k1, b=b)
               .join(F.broadcast(queries), "term")
-              .select(qid_col, id_col, contrib.alias("c_micro"))
               .groupBy(qid_col, id_col)
               .agg(F.sum("c_micro").alias("score_micro"),
                    F.count("*").alias("n_terms_hit")))

@@ -441,19 +441,6 @@ def lsh_band_buckets_udf(planes: list[list[float]], n_bands: int,
     return _buckets
 
 
-def lsh_bucket_col(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id: bit i = 1 if dot(v, plane_i) > 0."""
-    bits = [
-        F.when(dot_col(vec_col.cast("array<double>"), _vec_lit(p)) > 0,
-               F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        for i, p in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def lsh_recall_estimate(threshold: float, n_bands: int,
                         rows_per_band: int) -> float:
     """Worst-case (boundary) recall of the banded OR-construction: a

@@ -36,13 +36,51 @@ def read_pages_stream(spark: SparkSession, path: str,
     return r.parquet(path)
 
 
-def extract_stream(pages: DataFrame, *, partitions: int | None = None
-                   ) -> DataFrame:
-    """The batch extraction core applied to a streaming DataFrame —
-    identical plan after the source node (mapInArrow is
-    streaming-compatible; the repartition becomes a per-micro-batch
-    shuffle)."""
-    return extract_pages(pages, partitions=partitions)
+def _start(writer, checkpoint_path: str, available_now: bool):
+    """Start a configured ``DataStreamWriter`` on ``checkpoint_path``,
+    as a drain-then-stop run when ``available_now``."""
+    w = writer.option("checkpointLocation", checkpoint_path)
+    if available_now:
+        w = w.trigger(availableNow=True)
+    return w.start()
+
+
+def _start_parquet_sink(stream: DataFrame, output_path: str,
+                        checkpoint_path: str, *, available_now: bool):
+    """Append ``stream`` to a parquet directory with exactly-once
+    commit-log semantics (the streaming commit log in
+    ``checkpoint_path``)."""
+    return _start(stream.writeStream.format("parquet")
+                  .option("path", output_path).outputMode("append"),
+                  checkpoint_path, available_now)
+
+
+def _start_committed(pages_stream: DataFrame, output_root: str,
+                     checkpoint_path: str, tables: tuple[str, ...], body,
+                     *, available_now: bool):
+    """The exactly-once micro-batch shell: ``body(batch_df)`` yields
+    ``(table, frame)`` pairs and each frame commits to its table
+    through the ``ManifestCatalog`` marker protocol. ``foreachBatch``
+    replays an interrupted micro-batch with the SAME batch_id after
+    checkpoint recovery; each table is guarded on its own, so the
+    replay writes only the tables that batch_id has not committed
+    (nothing at all, and ``body`` never runs, when every one has) —
+    the committed tables never see a row twice."""
+    from ocr_engine_spark.engine.catalog import ManifestCatalog
+
+    cat = ManifestCatalog(output_root)
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        todo = {t for t in tables
+                if batch_id not in cat.committed_batches(t)}
+        if not todo:
+            return  # replayed after recovery; already committed
+        for table, frame in body(batch_df):
+            if table in todo:
+                cat.write_batch(frame, table, batch_id)
+
+    return _start(pages_stream.writeStream.foreachBatch(_process),
+                  checkpoint_path, available_now)
 
 
 def start_extraction_stream(pages_stream: DataFrame, output_path: str,
@@ -52,14 +90,9 @@ def start_extraction_stream(pages_stream: DataFrame, output_path: str,
     """extractions sink with exactly-once commit-log semantics. With
     ``available_now`` the stream drains all pending input then stops —
     the bounded-backfill mode; otherwise it runs continuously."""
-    out = extract_stream(pages_stream, partitions=partitions)
-    w = (out.writeStream.format("parquet")
-         .option("path", output_path)
-         .option("checkpointLocation", checkpoint_path)
-         .outputMode("append"))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_parquet_sink(
+        extract_pages(pages_stream, partitions=partitions), output_path,
+        checkpoint_path, available_now=available_now)
 
 
 def windowed_metrics_stream(pages_stream: DataFrame, *,
@@ -70,7 +103,7 @@ def windowed_metrics_stream(pages_stream: DataFrame, *,
     event time = warc_ts, watermark bounds state. Append-mode windows
     finalize once the watermark passes — the streaming twin of the
     batch metrics side table."""
-    out = extract_stream(pages_stream, partitions=partitions)
+    out = extract_pages(pages_stream, partitions=partitions)
     return (out.withWatermark("warc_ts", watermark)
             .groupBy(F.window("warc_ts", window).alias("w"),
                      F.col("payload_kind"))
@@ -254,40 +287,28 @@ def start_near_dedup_stream(pages_stream: DataFrame, index_path: str,
     corpus under a different url, which the watermark-bounded exact url
     guard (``dedup_pages_stream``) cannot.
 
-    Exactly-once: ``foreachBatch`` replays an interrupted micro-batch
-    with the SAME batch_id after checkpoint recovery, and the
-    ``ManifestCatalog`` commit marker turns the replay into an
-    overwrite-then-commit no-op — the committed table never sees a row
-    twice. Within a batch, exact url dups are dropped first.
+    Exactly-once through the ``_start_committed`` shell: a batch_id
+    replayed after checkpoint recovery commits nothing twice. Within a
+    batch, exact url dups are dropped first.
 
     The index is intentionally NOT extended inside the stream: an
     idempotent-looking index append replayed by foreachBatch would
     duplicate shingle rows and corrupt verify cardinality. Growing the
     index is the periodic batch job's move (rebuild or a compact-then-
     swap), the standard lambda split."""
-    from ocr_engine_spark.engine.catalog import ManifestCatalog
     from ocr_engine_spark.functions.dedup import MinHashIndex
 
-    cat = ManifestCatalog(output_root)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in cat.committed_batches(table):
-            return  # replayed after recovery; already committed
+    def _body(batch_df: DataFrame):
         idx = MinHashIndex.load(batch_df.sparkSession, index_path)
         b = batch_df.dropDuplicates([id_col])
         dup_ids = (idx.find_dups(b, id_col=id_col, text_col=text_col,
                                  threshold=threshold)
                    .select(F.col("batch_id").alias(id_col))
                    .distinct())
-        survivors = b.join(dup_ids, id_col, "left_anti")
-        cat.write_batch(survivors, table, batch_id)
+        yield table, b.join(dup_ids, id_col, "left_anti")
 
-    w = (pages_stream.writeStream
-         .foreachBatch(_process)
-         .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_committed(pages_stream, output_root, checkpoint_path,
+                            (table,), _body, available_now=available_now)
 
 
 def start_windowed_metrics_stream(pages_stream: DataFrame, output_path: str,
@@ -295,15 +316,10 @@ def start_windowed_metrics_stream(pages_stream: DataFrame, output_path: str,
                                   window: str = "1 day",
                                   watermark: str = "2 days",
                                   available_now: bool = True):
-    m = windowed_metrics_stream(pages_stream, window=window,
-                                watermark=watermark)
-    w = (m.writeStream.format("parquet")
-         .option("path", output_path)
-         .option("checkpointLocation", checkpoint_path)
-         .outputMode("append"))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_parquet_sink(
+        windowed_metrics_stream(pages_stream, window=window,
+                                watermark=watermark),
+        output_path, checkpoint_path, available_now=available_now)
 
 
 def start_edge_stream(pages_stream: DataFrame, output_root: str,
@@ -312,31 +328,19 @@ def start_edge_stream(pages_stream: DataFrame, output_root: str,
                       available_now: bool = True):
     """Continuous link-graph construction: each micro-batch's pages
     reduce to (src_host, dst_host, n_links) partial counts, committed
-    as a log-structured edge DELTA through the ``ManifestCatalog``
-    marker protocol — exactly-once across checkpoint recovery, the
-    ``start_near_dedup_stream`` discipline (a replayed batch_id is a
-    no-op). Deltas are ADDITIVE: integer counts merge by sum, so the
-    merged graph is independent of micro-batch boundaries and replay
-    order, and a rank job (pagerank / harmonic_centrality) can run at
-    any instant on a consistent committed prefix of the crawl. No
-    unbounded streaming-aggregation state anywhere: the only state is
-    the commit log."""
-    from ocr_engine_spark.engine.catalog import ManifestCatalog
+    as a log-structured edge DELTA through the ``_start_committed``
+    shell — exactly-once across checkpoint recovery (a replayed
+    batch_id is a no-op). Deltas are ADDITIVE: integer counts merge by
+    sum, so the merged graph is independent of micro-batch boundaries
+    and replay order, and a rank job (pagerank / harmonic_centrality)
+    can run at any instant on a consistent committed prefix of the
+    crawl. No unbounded streaming-aggregation state anywhere: the only
+    state is the commit log."""
     from ocr_engine_spark.functions.linkgraph import host_edges
 
-    cat = ManifestCatalog(output_root)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in cat.committed_batches(table):
-            return  # replayed after recovery; already committed
-        cat.write_batch(host_edges(batch_df), table, batch_id)
-
-    w = (pages_stream.writeStream
-         .foreachBatch(_process)
-         .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_committed(pages_stream, output_root, checkpoint_path,
+                            (table,), lambda b: [(table, host_edges(b))],
+                            available_now=available_now)
 
 
 def read_edge_table(spark: SparkSession, output_root: str, *,
@@ -364,41 +368,27 @@ def start_decontam_stream(pages_stream: DataFrame, bench_hash_path: str,
     flagged ids + hit counts commit to ``flagged_table`` — the
     quarantine stream a compliance reviewer audits.
 
-    foreachBatch with the ManifestCatalog commit marker (the
-    start_near_dedup_stream exactly-once shape), guarded PER TABLE so
-    a crash between the two writes replays only the missing one."""
-    from ocr_engine_spark.engine.catalog import ManifestCatalog
+    Both tables commit through the ``_start_committed`` shell, which
+    guards each on its own, so a crash between the two writes replays
+    only the missing one."""
     from ocr_engine_spark.functions.decontam import (
         contamination_report_from_hashes,
     )
 
-    cat = ManifestCatalog(output_root)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        done_clean = batch_id in cat.committed_batches(table)
-        done_flag = batch_id in cat.committed_batches(flagged_table)
-        if done_clean and done_flag:
-            return  # replayed after recovery; already committed
+    def _body(batch_df: DataFrame):
         hashes = batch_df.sparkSession.read.parquet(bench_hash_path)
         b = batch_df.dropDuplicates([id_col])
         flagged = (contamination_report_from_hashes(
             b, hashes, n=n, id_col=id_col, text_col=text_col)
             .filter(F.col("n_hits") >= min_hits)
             .persist())
-        if not done_flag:
-            cat.write_batch(flagged, flagged_table, batch_id)
-        if not done_clean:
-            survivors = b.join(flagged.select(id_col), id_col,
-                               "left_anti")
-            cat.write_batch(survivors, table, batch_id)
+        yield flagged_table, flagged
+        yield table, b.join(flagged.select(id_col), id_col, "left_anti")
         flagged.unpersist()
 
-    w = (pages_stream.writeStream
-         .foreachBatch(_process)
-         .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_committed(pages_stream, output_root, checkpoint_path,
+                            (flagged_table, table), _body,
+                            available_now=available_now)
 
 
 def start_classify_stream(pages_stream: DataFrame, model_path: str,
@@ -414,28 +404,17 @@ def start_classify_stream(pages_stream: DataFrame, model_path: str,
     with the prediction columns attached.
 
     The batch scorer's per-doc argmax window is not streamable, so this
-    rides ``foreachBatch`` — the same exactly-once shape as
-    ``start_near_dedup_stream``: checkpoint replay re-runs the batch
-    with the SAME batch_id and the ManifestCatalog commit marker makes
-    the replay a no-op."""
-    from ocr_engine_spark.engine.catalog import ManifestCatalog
+    rides the ``_start_committed`` ``foreachBatch`` shell: a batch_id
+    replayed after checkpoint recovery is a no-op."""
     from ocr_engine_spark.functions.classify import (
         load_nb_model, nb_predict,
     )
 
-    cat = ManifestCatalog(output_root)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in cat.committed_batches(table):
-            return  # replayed after recovery; already committed
+    def _body(batch_df: DataFrame):
         labels, cond = load_nb_model(batch_df.sparkSession, model_path)
         pred = nb_predict(batch_df, labels, cond, buckets=buckets,
                           id_col=id_col, text_col=text_col)
-        cat.write_batch(batch_df.join(pred, id_col), table, batch_id)
+        yield table, batch_df.join(pred, id_col)
 
-    w = (pages_stream.writeStream
-         .foreachBatch(_process)
-         .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_committed(pages_stream, output_root, checkpoint_path,
+                            (table,), _body, available_now=available_now)

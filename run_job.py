@@ -419,16 +419,13 @@ def main(argv: list[str] | None = None) -> int:
         q.awaitTermination()
     elif args.cmd == "sessions":
         from ocr_engine_spark.streaming.stream_job import (
-            host_sessions_stream, read_pages_stream,
+            _start_parquet_sink, host_sessions_stream, read_pages_stream,
         )
         s = host_sessions_stream(read_pages_stream(spark, args.input),
                                  gap_min=args.gap_min)
-        w = (s.writeStream.format("parquet").option("path", args.output)
-             .option("checkpointLocation", args.checkpoint)
-             .outputMode("append"))
-        if not args.continuous:
-            w = w.trigger(availableNow=True)
-        w.start().awaitTermination()
+        _start_parquet_sink(s, args.output, args.checkpoint,
+                            available_now=not args.continuous
+                            ).awaitTermination()
     elif args.cmd == "dedup":
         from ocr_engine_spark.functions.dedup import (
             exact_duplicate_groups, minhash_dedup_pairs,
@@ -1004,27 +1001,14 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
         docs = spark.read.parquet(args.input)
         ref = spark.read.parquet(args.reference)
-        if args.order == 2:
-            from ocr_engine_spark.functions.lm import (
-                doc_log_ppl_kn, fit_kn_bigram_lm,
-            )
-            big, ctx, n1w, sca = fit_kn_bigram_lm(
-                ref, buckets=args.buckets, id_col=args.id_col,
-                text_col=args.text_col)
-            scored = doc_log_ppl_kn(docs, big, ctx, n1w, sca,
-                                    buckets=args.buckets,
-                                    id_col=args.id_col,
-                                    text_col=args.text_col)
-        else:
-            from ocr_engine_spark.functions.lm import (
-                doc_log_ppl_kn3, fit_kn_trigram_lm,
-            )
-            model = fit_kn_trigram_lm(ref, buckets=args.buckets,
-                                      id_col=args.id_col,
-                                      text_col=args.text_col)
-            scored = doc_log_ppl_kn3(docs, model, buckets=args.buckets,
-                                     id_col=args.id_col,
-                                     text_col=args.text_col)
+        from ocr_engine_spark.functions.lm import (
+            doc_log_ppl_kn, fit_kn_bigram_lm, fit_kn_trigram_lm,
+        )
+        fit = fit_kn_bigram_lm if args.order == 2 else fit_kn_trigram_lm
+        model = fit(ref, buckets=args.buckets, id_col=args.id_col,
+                    text_col=args.text_col)
+        scored = doc_log_ppl_kn(docs, *model, buckets=args.buckets,
+                                id_col=args.id_col, text_col=args.text_col)
         scored.write.mode("overwrite").parquet(args.output)
         st = (spark.read.parquet(args.output)
               .agg(F.count("*").alias("docs"),

@@ -6,6 +6,7 @@ import math
 import os
 import re
 
+import pytest
 import pyspark.sql.functions as F
 
 from ocr_engine_spark.functions.lm import (
@@ -290,3 +291,38 @@ def test_kn3_matches_python_reference(spark):
            for r in doc_log_ppl_kn3(docs, model, buckets=B).collect()}
     assert got == want
     assert 12 not in got
+
+
+@pytest.mark.parametrize("order", [2, 3])
+def test_kn_scores_invariant_to_partitioning_shuffle_width_and_aqe(
+        spark, order):
+    """doc_log_ppl_kn returns identical rows whatever the input
+    partitioning, shuffle width or AQE setting: every count is an exact
+    integer and each per-gram lp is quantized before the per-doc sum."""
+    from ocr_engine_spark.functions.lm import (
+        doc_log_ppl_kn, fit_kn_bigram_lm, fit_kn_trigram_lm,
+    )
+    fit = fit_kn_bigram_lm if order == 2 else fit_kn_trigram_lm
+    docs = spark.read.parquet(
+        os.path.join(TESTDATA_SF001, "documents.parquet")).filter(
+        F.col("doc_id") < 60).select("doc_id", "text")
+    ref = docs.filter(F.col("doc_id") % 3 == 0)
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = [spark.conf.get(k) for k in keys]
+
+    def scores(parts, width, aqe):
+        spark.conf.set(keys[0], str(width))
+        spark.conf.set(keys[1], str(aqe).lower())
+        try:
+            model = fit(ref.repartition(parts), buckets=64)
+            return sorted(tuple(r) for r in doc_log_ppl_kn(
+                docs.repartition(parts), *model, buckets=64).collect())
+        finally:
+            for k, v in zip(keys, before):
+                spark.conf.set(k, v)
+
+    want = scores(1, 3, True)
+    assert len(want) > 40
+    for setting in [(7, 3, True), (1, 17, True), (1, 3, False),
+                    (7, 17, False)]:
+        assert scores(*setting) == want, setting

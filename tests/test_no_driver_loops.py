@@ -41,9 +41,8 @@ COLLECT_ALLOWLIST = {
         '"params")).first()',       # index params: 1 row
     ],
     "functions/search.py": [
-        '.alias("total_dl")).collect()[0])',  # corpus stats: 1 row
+        '_corpus_stats(post, self.id_col).collect()[0]',  # stats: 1 row
         '"meta")).collect()[0]',              # index metadata: 1 row
-        '.alias("t")).collect()[0])',         # append stats delta: 1 row
     ],
     "functions/pq.py": [
         ".limit(k).select(vec_col).collect())",  # codebook seed: k rows

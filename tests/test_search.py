@@ -227,6 +227,29 @@ def test_index_append_equals_rebuild(spark, tmp_path):
     assert gp == wp
 
 
+@pytest.mark.parametrize("positions", [True, False])
+def test_index_built_empty_then_appended_equals_fresh_build(
+        spark, tmp_path, positions):
+    """An index built over no documents has zero stats and stays
+    readable: appending one doc then searching equals a fresh build
+    over that doc."""
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    one = spark.createDataFrame(DOCS[:1], "doc_id long, text string")
+    inc = SearchIndex.build(empty, str(tmp_path / "inc"), buckets=8,
+                            positions=positions)
+    assert (inc.n_docs, inc.total_dl) == (0, 0)
+    assert SearchIndex.load(spark, str(tmp_path / "inc")).n_docs == 0
+    assert inc.search(spark, "table", 10).count() == 0
+    inc.append(one)
+    fresh = SearchIndex.build(one, str(tmp_path / "fresh"), buckets=8,
+                              positions=positions)
+    inc2 = SearchIndex.load(spark, str(tmp_path / "inc"))
+    assert (inc2.n_docs, inc2.total_dl) == (fresh.n_docs, fresh.total_dl)
+    q = "table scan rows"
+    assert ([tuple(r) for r in inc2.search(spark, q, 10).collect()]
+            == [tuple(r) for r in fresh.search(spark, q, 10).collect()])
+
+
 def test_bm25_mrr_planted_markers_rank_first(spark):
     import pyspark.sql.functions as F
     from ocr_engine_spark.functions.search import (

@@ -773,3 +773,87 @@ def test_stream_decontam_against_hash_table(spark, tmp_path):
                 cat.read_table(spark, "pages_contaminated").collect()}
     assert flagged2 == {"https://a.example.com/leak",
                         "https://c.example.com/leak2"}
+
+
+def _text_pages_stream(spark, src, rows):
+    """One parquet file of (url, text) pages under ``src`` and a
+    one-file-per-trigger stream over it: a fresh checkpoint makes it
+    batch 0."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src.mkdir()
+    t0 = datetime.datetime(2025, 5, 1, 12, 0, 0)
+    pq.write_table(pa.table({
+        "url": pa.array([r[0] for r in rows], pa.string()),
+        "warc_ts": pa.array([t0] * len(rows), pa.timestamp("us")),
+        "html": pa.array([b""] * len(rows), pa.binary()),
+        "text": pa.array([r[1] for r in rows], pa.string()),
+        "lang": pa.array(["en"] * len(rows), pa.string()),
+    }), str(src / "f1.parquet"))
+    return read_pages_stream(spark, str(src), max_files_per_trigger=1)
+
+
+_LEAK = ("https://a.example.com/leak",
+         "quiz answers say the capital of france is paris and more")
+_CLEAN = ("https://a.example.com/clean",
+          "spark shuffles data between executor nodes during joins")
+
+
+def test_commit_shell_skips_batch_committed_in_every_table(spark,
+                                                           tmp_path):
+    """A replayed batch id that every output table already committed
+    writes nothing and never runs the batch body (the body would fail:
+    its benchmark hash table does not exist)."""
+    from ocr_engine_spark.engine.catalog import ManifestCatalog
+    from ocr_engine_spark.streaming.stream_job import start_decontam_stream
+
+    out_root = str(tmp_path / "dc_out")
+    cat = ManifestCatalog(out_root)
+    marker = spark.createDataFrame([("https://sentinel/", 99)],
+                                   "url string, n_hits long")
+    for table in ("pages_clean", "pages_contaminated"):
+        cat.write_batch(marker, table, 0)
+    stream = _text_pages_stream(spark, tmp_path / "pages_in",
+                                [_LEAK, _CLEAN])
+    q = start_decontam_stream(stream, str(tmp_path / "missing_hashes"),
+                              out_root, str(tmp_path / "ckpt"), n=5)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    for table in ("pages_clean", "pages_contaminated"):
+        assert cat.committed_batches(table) == {0}
+        assert [tuple(r) for r in cat.read_table(spark, table).collect()] \
+            == [("https://sentinel/", 99)]
+
+
+def test_commit_shell_replays_only_the_uncommitted_table(spark, tmp_path):
+    """A decontam batch committed in the quarantine table but not in
+    the survivors table (a crash between the two writes) replays only
+    the survivors write, with the right rows."""
+    from ocr_engine_spark.engine.catalog import ManifestCatalog
+    from ocr_engine_spark.functions.decontam import benchmark_ngram_hashes
+    from ocr_engine_spark.streaming.stream_job import start_decontam_stream
+
+    bench = spark.createDataFrame(
+        [(0, "the capital of france is paris and the capital of spain")],
+        "doc_id long, text string")
+    hash_path = str(tmp_path / "bench_hashes")
+    benchmark_ngram_hashes(bench, n=5).write.parquet(hash_path)
+    out_root = str(tmp_path / "dc_out")
+    cat = ManifestCatalog(out_root)
+    cat.write_batch(spark.createDataFrame([("https://sentinel/", 99)],
+                                          "url string, n_hits long"),
+                    "pages_contaminated", 0)
+    stream = _text_pages_stream(spark, tmp_path / "pages_in",
+                                [_LEAK, _CLEAN, _CLEAN])
+    q = start_decontam_stream(stream, hash_path, out_root,
+                              str(tmp_path / "ckpt"), n=5)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    flagged = cat.read_table(spark, "pages_contaminated").collect()
+    assert [tuple(r) for r in flagged] == [("https://sentinel/", 99)]
+    assert cat.committed_batches("pages_clean") == {0}
+    clean = cat.read_table(spark, "pages_clean").collect()
+    assert [(r["url"], r["text"]) for r in clean] == [_CLEAN]
