@@ -10,8 +10,9 @@ Spark lifecycle (the DataFrame mirror of the reference's POST /ocr path,
          html: DOM parse + densitometric block scoring
          pdf:  text-layer layout analysis
          + clean_text (5-step pipeline) in the same pass
+         + provider + 13 regex fields + raw_response   # T11/T13,
+           kernels/fields.py over each doc's cleaned text
          + per-doc timing, per-batch lineage counters
-    -> provider + structured-field columns   # JVM regexp_extract, T13
     -> extractions DataFrame
 
 No per-row Python UDFs anywhere: the only Python stage is one
@@ -34,7 +35,9 @@ from pyspark.sql.types import (
     StructField, StructType, TimestampType,
 )
 
-from ocr_engine_spark.kernels.fields import FIELD_PATTERNS
+from ocr_engine_spark.kernels.fields import FIELD_PATTERNS, bill_row
+# re-exported: perfbench estimates the field guards' pass rate with it
+from ocr_engine_spark.kernels.fields import _LITERAL_PREFIX_RE  # noqa: F401
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import SparkSession
@@ -65,6 +68,12 @@ EXTRACT_SCHEMA = StructType([
     StructField("processing_ms", DoubleType()),
     StructField("partition_id", IntegerType()),
     StructField("batch_seq", IntegerType()),
+    # T11/T13: provider, the regex fields, the parse-failure fallback
+    StructField("provider", StringType()),
+    *[StructField(name, {"string": StringType(), "long": LongType(),
+                         "double": DoubleType()}[typ])
+      for name, (_, typ) in FIELD_PATTERNS.items()],
+    StructField("raw_response", StringType()),
 ])
 
 # parity with the reference's upload size guard (Claude.md:204 — 50 MB
@@ -92,6 +101,7 @@ def extract_batch_arrow(batches):
     surya_service.py:55-75).
     """
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     from ocr_engine_spark.kernels.clean import clean_text
     from ocr_engine_spark.kernels.html_extract import extract_html
@@ -100,13 +110,16 @@ def extract_batch_arrow(batches):
     span_t = pa.list_(pa.struct([
         ("start", pa.int64()), ("end", pa.int64()),
         ("block_id", pa.int64()), ("kind", pa.string())]))
+    # bill_row's columns: provider through raw_response, the schema's tail
+    bill_t = [to_arrow_type(f.dataType) for f in EXTRACT_SCHEMA.fields[
+        EXTRACT_SCHEMA.names.index("provider"):]]
     batch_seq = 0
     for rb in batches:
         names = rb.schema.names
         col = {n: rb.column(i) for i, n in enumerate(names)}
         kinds, texts, cleans, spans_col, n_blocks = [], [], [], [], []
-        confs, statuses, errors, times = [], [], [], []
-        for payload in col["html"]:
+        confs, statuses, errors, times, bills = [], [], [], [], []
+        for url, payload in zip(col["url"].to_pylist(), col["html"]):
             t0 = time.perf_counter()
             raw = payload.as_py() or b""
             if len(raw) > MAX_PAYLOAD_BYTES:
@@ -137,7 +150,10 @@ def extract_batch_arrow(batches):
             statuses.append(res["status"])
             errors.append(res["error"])
             times.append((time.perf_counter() - t0) * 1000.0)
+            # T11/T13 over the full cleaned text (before delta encoding)
+            bills.append(bill_row(cleaned, url))
         n = rb.num_rows
+        bill_cols = zip(*bills) if bills else [[]] * len(bill_t)
         yield pa.RecordBatch.from_arrays([
             col["url"], col["warc_ts"], col["lang"],
             pa.array(kinds, pa.string()),
@@ -151,71 +167,9 @@ def extract_batch_arrow(batches):
             pa.array(times, pa.float64()),
             col["partition_id"],
             pa.array([batch_seq] * n, pa.int32()),
+            *[pa.array(c, t) for c, t in zip(bill_cols, bill_t)],
         ], names=[f.name for f in EXTRACT_SCHEMA.fields])
         batch_seq += 1
-
-
-def provider_col(url=None) -> F.Column:
-    """T11 — filename-substring provider detection (qwen_service.py:260),
-    as a pure JVM expression. (No module-level Column objects: executors
-    import this module inside the mapInArrow worker, where Column
-    construction is unavailable.)"""
-    u = F.lower(url if url is not None else F.col("url"))
-    return (F.when(u.contains("dewa"), F.lit("DEWA"))
-             .when(u.contains("sewa"), F.lit("SEWA"))
-             .otherwise(F.lit("Unknown")))
-
-
-_LITERAL_PREFIX_RE = __import__("re").compile(r"^[^\\\[\(\{\.\+\*\?\|\^\$]+")
-
-
-def fields_columns(text_col: str = "clean_text") -> list[F.Column]:
-    """T13 — structured fields as JVM-side regexp_extract expressions
-    (shared pattern table with the pure kernel, kernels/fields.py).
-
-    Each regex is guarded by a substring test on its literal prefix
-    ('Account Number: ' etc.) — implied by any match, so the guard is a
-    pure fast path: only the ~8% bill-like documents pay the 13 regex
-    scans (measured: 30% of total extraction wall without the guards)."""
-    cols = []
-    for name, (pattern, typ) in FIELD_PATTERNS.items():
-        m = _LITERAL_PREFIX_RE.match(pattern)
-        needle = m.group(0) if m else ""
-        # a literal whose last char is quantified (e.g. r'Fees?: ') is
-        # NOT implied by a match — drop it from the required substring
-        if needle and len(pattern) > len(needle) \
-                and pattern[len(needle)] in "?*{":
-            needle = needle[:-1]
-        c = F.regexp_extract(F.col(text_col), pattern, 1)
-        if needle:
-            c = F.when(F.col(text_col).contains(needle), c)
-        c = F.when(c == "", None).otherwise(c)
-        if typ == "long":
-            c = c.cast("long")
-        elif typ == "double":
-            c = c.cast("double")
-        cols.append(c.alias(name))
-    return cols
-
-
-def raw_response_col(text_col: str = "clean_text") -> F.Column:
-    """T13 fallback — the reference returns ``{"raw_response": raw_text}``
-    when the LLM output fails to parse (qwen_service.py:245-252). Our
-    deterministic analog: a provider-detected (bill-like) document on
-    which EVERY field regex missed keeps its full cleaned text in
-    ``raw_response`` (null otherwise — a non-bill page is never a parse
-    *failure*, and carrying the text twice for every crawl page would
-    double the sink at table scale).
-
-    References the field and provider columns BY NAME, so it must be
-    applied downstream of ``fields_columns()`` — each regex is then
-    evaluated exactly once, never re-instantiated for the null check."""
-    all_null = None
-    for name in FIELD_PATTERNS:
-        isnull = F.col(name).isNull()
-        all_null = isnull if all_null is None else (all_null & isnull)
-    bill_like = F.col("provider") != "Unknown"
-    return F.when(bill_like & all_null, F.col(text_col))
 
 
 def _local_input_bytes(df: DataFrame) -> int:
@@ -303,10 +257,8 @@ def extract_pages(pages: DataFrame, *, partitions: int | None = None,
     # extracted_text"); error rows have both null, which coalesce keeps
     out = out.withColumn("clean_text",
                          F.coalesce("clean_text", "extracted_text"))
-    out = out.withColumn("provider", provider_col())
-    if with_fields:
-        out = (out.select("*", *fields_columns())
-               .withColumn("raw_response", raw_response_col()))
+    if not with_fields:
+        out = out.drop(*FIELD_PATTERNS, "raw_response")
     return out
 
 

@@ -165,8 +165,10 @@ def ppl_bucket(docs: DataFrame, reference: DataFrame, *,
         return (scored.withColumn("ppl_rank", F.lit(0).cast("long"))
                 .withColumn("bucket", F.lit(""))
                 .filter(F.lit(False)))
-    # scalar N rides a 1-row broadcast cross join — one lazy plan
-    total = scored.agg(F.count("*").alias("__n"))
+    # scalar N rides a 1-row broadcast cross join — one lazy plan,
+    # counted on the ranked side, which reads the rank engine's
+    # persisted input (counting ``scored`` would re-run the LM fit)
+    total = ranked.agg(F.count("*").alias("__n"))
     head_n = F.expr(f"(__n * {int(head_pct)}) div 100")
     mid_n = F.expr(f"(__n * {int(head_pct) + int(middle_pct)}) div 100")
     bucket = (F.when(F.col("__grank") <= head_n, F.lit("head"))

@@ -273,3 +273,139 @@ def test_read_pages_autosplit(spark, tmp_path):
     finally:
         if before is not None:
             spark.conf.set("spark.sql.files.maxPartitionBytes", before)
+
+
+# the extraction output contract: (name, type) in order, as the job has
+# always produced it
+EXTRACT_COLUMNS = [
+    ("url", "string"), ("warc_ts", "timestamp"), ("lang", "string"),
+    ("payload_kind", "string"), ("extracted_text", "string"),
+    ("clean_text", "string"),
+    ("spans", "array<struct<start:bigint,end:bigint,block_id:bigint,"
+              "kind:string>>"),
+    ("n_blocks", "int"), ("confidence", "double"), ("status", "string"),
+    ("error", "string"), ("processing_ms", "double"),
+    ("partition_id", "int"), ("batch_seq", "int"), ("provider", "string"),
+    ("account_number", "string"), ("invoice_number", "string"),
+    ("bill_date", "string"), ("billing_period", "string"),
+    ("total_amount", "double"), ("currency", "string"),
+    ("electricity_kwh", "bigint"), ("water_m3", "double"),
+    ("carbon_kg_co2e", "bigint"), ("meter_number", "string"),
+    ("current_reading", "bigint"), ("previous_reading", "bigint"),
+    ("vat_number", "string"), ("raw_response", "string"),
+]
+
+
+def test_plan_fields_in_the_arrow_pass_and_schema_pinned(pages_df):
+    """Provider, fields and raw_response come out of the one Arrow
+    stage: no JVM regex in the executed plan, and the output columns
+    keep their names, order and types."""
+    from ocr_engine_spark.engine.extract_job import extract_pages
+    from ocr_engine_spark.kernels.fields import FIELD_PATTERNS
+    # .limit() keeps the plan from unifying with the cached fixture
+    df = extract_pages(pages_df.limit(7))
+    df.collect()  # AQE: the FINAL plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 1
+    assert "regexp_extract" not in plan.lower()
+    assert [(f.name, f.dataType.simpleString())
+            for f in df.schema.fields] == EXTRACT_COLUMNS
+    lean = extract_pages(pages_df.limit(7), with_fields=False)
+    dropped = {*FIELD_PATTERNS, "raw_response"}
+    assert len(dropped) == 14
+    assert lean.schema.names == [n for n, _ in EXTRACT_COLUMNS
+                                 if n not in dropped]
+
+
+def test_field_values_past_int64_are_null_not_job_failures(spark):
+    """Errors are data: a digit run past int64 in any long field (Spark's
+    ANSI cast would abort the whole job) reads NULL on a success row;
+    a 400-digit amount reads inf, and int64's max still parses."""
+    import datetime
+    from ocr_engine_spark.engine.extract_job import PAGES_SCHEMA, extract_pages
+    big = "9" * 20
+    cases = {
+        f"Electricity Consumption: {big} kWh": ("electricity_kwh", None),
+        f"Carbon Footprint: {big} kg CO2e": ("carbon_kg_co2e", None),
+        f"Current Reading: {big}": ("current_reading", None),
+        f"Previous Reading: {big}": ("previous_reading", None),
+        "Current Reading: 9223372036854775808": ("current_reading", None),
+        "Current Reading: 9223372036854775807":
+            ("current_reading", 9223372036854775807),
+        f"Total Amount: AED {'9' * 400}": ("total_amount", float("inf")),
+    }
+    ts = datetime.datetime(2025, 5, 1)
+    filler = " where the neighbours rescue pass needs plenty of words"
+    pages = spark.createDataFrame(
+        [(f"u://bills/dewa_{i}.html", ts,
+          f"<body><p>{t}{filler}</p></body>".encode(), "", "en")
+         for i, t in enumerate(cases)], PAGES_SCHEMA)
+    rows = extract_pages(pages).collect()
+    assert len(rows) == len(cases)
+    for r in rows:
+        assert r.status == "success", r.error
+        field, want = cases[r.clean_text.split(" where ")[0]]
+        assert r[field] == want, (field, r[field])
+
+
+# adversarial (url, text) rows for the kernel-vs-JVM regex parity test
+_ADVERSARIAL = [
+    ("u://bills/dewa_1", "Account Number: \u0661\u0662\u0663"),
+    ("u://bills/dewa_2", "Account Number: \uff11\uff12\uff13"),
+    ("u://bills/dewa_3", "Account Number: 12\u0663 Invoice Number: \u00b2"),
+    ("u://bills/dewa_4", "Account Number:\u00a0123"),
+    ("u://bills/sewa_5", "Account Number: 123\r\nInvoice Number: 456\r\n"
+                         "Bill Date: 01/02/2025\r\n"),
+    ("u://bills/dewa_6", "Bill Date: \u0660\u0661/02/2025"),
+    ("u://bills/dewa_7", "Electricity Consumption: 9223372036854775807 kWh"),
+    ("u://bills/dewa_8", "Electricity Consumption: 9223372036854775808 kWh"),
+    ("u://bills/dewa_9", "Carbon Footprint: 99999999999999999999 kg CO2e"),
+    ("u://bills/dewa_10", "Current Reading: 0000000000000000000000042"),
+    ("u://bills/dewa_11", "Previous Reading: " + "9" * 5000),
+    ("u://bills/dewa_12", "Total Amount: AED " + "9" * 400),
+    ("u://bills/dewa_13", "Total Amount: AED 12. Water Consumption: 0.5 m3"),
+    ("u://bills/dewa_14", "Total Amount: aed 12.5 Water Consumption: 7. m3"),
+    ("u://bills/dewa_15", "Total Amount: \uff21\uff25\uff24 5"),
+    ("u://bills/dewa_16", "Meter Number: AB-12-\u0663 VAT Registration "
+                          "Number: 100"),
+    ("HTTPS://X/BILLS/DEWA/17", "no fields here"),
+    ("u://Bills/SeWa_18", "Meter Number: ---"),
+    ("u://dewasewa", "Total Amount: AED 97.35 "),
+    ("u://blog/post", "Account Number: 1"),
+    ("u://blog/post2", "nothing"),
+    ("u://bills/dewa_empty", ""),
+    ("u://bills/dewa_null", None),
+    (None, "Account Number: 5"),
+    (None, None),
+]
+
+
+def test_field_kernel_matches_jvm_regex_oracle(spark):
+    """The field kernel row-for-row against a JVM oracle of the same
+    rules (``regexp_extract`` + ``try_cast``, ``lower(url)`` contains)
+    on adversarial text: other scripts' digits, NBSP, CRLF, values past
+    int64 and past Python's int-parse limit, upper-case urls, NULLs."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from ocr_engine_spark.kernels.fields import FIELD_PATTERNS, bill_row
+    df = spark.createDataFrame(_ADVERSARIAL, StructType([
+        StructField("url", StringType()), StructField("text", StringType())]))
+    u = F.lower("url")
+    provider = (F.when(u.contains("dewa"), F.lit("DEWA"))
+                .when(u.contains("sewa"), F.lit("SEWA"))
+                .otherwise(F.lit("Unknown")))
+    fields = []
+    for pattern, typ in FIELD_PATTERNS.values():
+        v = F.regexp_extract("text", pattern, 1)
+        v = F.when(v != "", v)
+        fields.append(v if typ == "string" else v.try_cast(typ))
+    all_null = F.lit(True)
+    for c in fields:
+        all_null = all_null & c.isNull()
+    raw = F.when((provider != "Unknown") & all_null, F.col("text"))
+    oracle = df.select("url", "text", provider, *fields, raw).collect()
+    assert len(oracle) == len(_ADVERSARIAL)
+    for r in oracle:
+        assert bill_row(r[1], r[0]) == tuple(r[2:]), (r[0], r[1][:60]
+                                                      if r[1] else r[1])
