@@ -214,15 +214,21 @@ def pq_search(embeddings: DataFrame, books: list[Codebook],
     Returns (id, d2) — exact squared L2, ascending, rounded to 6 for
     the portable presentation sort."""
     short = pq_adc_topk(embeddings, books, query_vec, shortlist,
-                        id_col=id_col, vec_col=vec_col) \
-        .select(id_col)
+                        id_col=id_col, vec_col=vec_col)
+    return _rerank(embeddings, short, query_vec, topk, id_col, vec_col)
+
+
+def _rerank(vectors: DataFrame, short: DataFrame, query_vec: list[float],
+            k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact re-rank of an ADC shortlist: the shortlist ids broadcast-
+    join back to the full-precision ``vectors``; (id, d2) top-``k`` by
+    squared L2 rounded to 6, ties to the lower id."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col).cast("array<double>")
-    d2 = sqdist_col(v, q)
-    return (embeddings.join(F.broadcast(short), id_col)
+    d2 = sqdist_col(F.col(vec_col).cast("array<double>"), q)
+    return (vectors.join(F.broadcast(short.select(id_col)), id_col)
             .select(F.col(id_col), F.round(d2, 6).alias("d2"))
             .orderBy(F.col("d2").asc(), F.col(id_col).asc())
-            .limit(topk))
+            .limit(k))
 
 
 class PqIndex:
@@ -318,13 +324,6 @@ class PqIndex:
         """ADC shortlist + exact re-rank from the stored vectors —
         ``pq_search`` semantics (same rounding grid, same
         presentation sort) without the per-query retrain/encode."""
-        short = self.adc_topk(spark, query_vec, shortlist) \
-            .select(self.id_col)
-        q = F.array(*[F.lit(float(x)) for x in query_vec])
-        v = F.col(self.vec_col).cast("array<double>")
-        enc = spark.read.parquet(self.encoded_path)
-        return (enc.join(F.broadcast(short), self.id_col)
-                .select(F.col(self.id_col),
-                        F.round(sqdist_col(v, q), 6).alias("d2"))
-                .orderBy(F.col("d2").asc(), F.col(self.id_col).asc())
-                .limit(k))
+        return _rerank(spark.read.parquet(self.encoded_path),
+                       self.adc_topk(spark, query_vec, shortlist),
+                       query_vec, k, self.id_col, self.vec_col)

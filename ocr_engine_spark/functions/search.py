@@ -40,7 +40,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ocr_engine_spark.functions.decontam import word_tokens_col
 from ocr_engine_spark.functions.dsir import MICRO
@@ -60,13 +60,22 @@ def tokenize_query(q: str) -> list[str]:
     return list(seen)
 
 
+def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, __t): each doc's token array, the one frame every postings
+    build explodes."""
+    return docs.select(F.col(id_col),
+                       word_tokens_col(F.col(text_col)).alias("__t"))
+
+
 def doc_postings(docs: DataFrame, *, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
     """(id, term, tf) postings plus the document length ``dl`` repeated
     on every row (one shuffle; dl via a size() before the explode, so
     no second aggregation pass is needed)."""
-    toks = docs.select(F.col(id_col),
-                       word_tokens_col(F.col(text_col)).alias("__t"))
+    return _tf_postings(_doc_tokens(docs, id_col, text_col), id_col)
+
+
+def _tf_postings(toks: DataFrame, id_col: str) -> DataFrame:
     return (toks.select(id_col, F.size("__t").alias("dl"),
                         F.explode("__t").alias("term"))
             .groupBy(id_col, "dl", "term")
@@ -196,29 +205,34 @@ class SearchIndex:
     def _write(self, docs: DataFrame, *, text_col: str, positions: bool,
                mode: str) -> "SearchIndex":
         """Write ``docs``' postings into the term-hash-partitioned
-        layout with ``mode``, then add their stats to the metadata."""
+        layout with ``mode`` and add their stats (docs with >= 1 token,
+        total length) to the metadata, observed on the token arrays in
+        that one write job. With no postings AQE drops that observed
+        subtree with the empty exchange, so stats are read only when
+        the write saw postings."""
         spark = docs.sparkSession
+        stats, rows = Observation(), Observation()
+        dl = F.size("__t")
+        toks = _doc_tokens(docs, self.id_col, text_col).observe(
+            stats, F.count(F.when(dl > 0, 1)).alias("n_docs"),
+            F.sum(F.when(dl > 0, dl)).alias("total_dl"))
         if positions:
-            toks = docs.select(F.col(self.id_col),
-                               word_tokens_col(F.col(text_col))
-                               .alias("__t"))
-            post = (toks.select(self.id_col, F.size("__t").alias("dl"),
+            post = (toks.select(self.id_col, dl.alias("dl"),
                                 F.posexplode("__t").alias("pos", "term"))
                     .groupBy(self.id_col, "dl", "term")
                     .agg(F.sort_array(F.collect_list("pos"))
                          .alias("positions"))
                     .withColumn("tf", F.size("positions").cast("long")))
         else:
-            post = doc_postings(docs, id_col=self.id_col,
-                                text_col=text_col)
+            post = _tf_postings(toks, self.id_col)
         post = post.withColumn(
             "tbkt",
             (md5_int60_col(F.col("term")) % self.buckets).cast("int"))
-        post.write.partitionBy("tbkt").mode(mode) \
-            .parquet(self.postings_path)
-        stats = _corpus_stats(post, self.id_col).collect()[0]
-        self.n_docs += int(stats["n_docs"])
-        self.total_dl += int(stats["total_dl"] or 0)
+        post.observe(rows, F.count(F.lit(1)).alias("n")) \
+            .write.partitionBy("tbkt").mode(mode).parquet(self.postings_path)
+        if rows.get["n"]:
+            self.n_docs += stats.get["n_docs"]
+            self.total_dl += stats.get["total_dl"]
         if self.n_docs == 0:
             # a partitioned write of no rows leaves no file to read the
             # schema from; one zero-row file keeps the index readable
@@ -281,9 +295,8 @@ def pos_postings(docs: DataFrame, *, id_col: str = "doc_id",
     layer over the same one-shuffle build as ``doc_postings`` (the
     positions array replaces the bare tf; ``size(positions)`` IS tf,
     so one table can serve both scorers)."""
-    toks = docs.select(F.col(id_col),
-                       word_tokens_col(F.col(text_col)).alias("__t"))
-    return (toks.select(id_col, F.posexplode("__t").alias("pos", "term"))
+    return (_doc_tokens(docs, id_col, text_col)
+            .select(id_col, F.posexplode("__t").alias("pos", "term"))
             .groupBy(id_col, "term")
             .agg(F.sort_array(F.collect_list("pos")).alias("positions")))
 

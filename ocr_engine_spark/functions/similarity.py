@@ -300,13 +300,9 @@ def ivf_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
         if refine_iters > 0:
             cents = refine_centroids(embeddings, cents, refine_iters,
                                      id_col, vec_col)
-    probe_ids = IvfIndex("", cents, id_col, vec_col) \
-        .probe_cells(query_vec, n_probe)
-    assigned = ivf_assign(embeddings, cents, id_col, vec_col, n_assign)
-    scoped = assigned.filter(F.col("cell").isin(probe_ids))
-    if n_assign > 1:
-        scoped = scoped.dropDuplicates([id_col])
-    return brute_topk(scoped, query_vec, k, id_col, vec_col)
+    return IvfIndex("", cents, id_col, vec_col, n_assign)._probe(
+        ivf_assign(embeddings, cents, id_col, vec_col, n_assign),
+        query_vec, k, n_probe)
 
 
 class IvfIndex:
@@ -399,9 +395,16 @@ class IvfIndex:
 
     def topk(self, spark, query_vec: list[float], k: int = 10,
              n_probe: int = 2) -> DataFrame:
-        cells = self.probe_cells(query_vec, n_probe)
-        scoped = (spark.read.parquet(self.assignment_path)
-                  .filter(F.col("cell").isin(cells)))  # partition pruning
+        return self._probe(spark.read.parquet(self.assignment_path),
+                           query_vec, k, n_probe)
+
+    def _probe(self, assigned: DataFrame, query_vec: list[float], k: int,
+               n_probe: int) -> DataFrame:
+        """Probe tail shared with ``ivf_topk``: the ``n_probe`` nearest
+        cells (partition-pruned on a stored assignment), one copy per
+        multi-assigned vector, exact top-k."""
+        scoped = assigned.filter(
+            F.col("cell").isin(self.probe_cells(query_vec, n_probe)))
         if self.n_assign > 1:
             scoped = scoped.dropDuplicates([self.id_col])
         return brute_topk(scoped, query_vec, k, self.id_col, self.vec_col)

@@ -7,20 +7,7 @@ shape):
         --output /data/out_catalog   \
         --batches 64
 
-Subcommands:
-  extract   resumable extraction into a ManifestCatalog (skips committed
-            batches on restart — kill it mid-run and re-submit)
-  evaluate  broadcast-join goldens + CER metrics over a catalog's
-            extractions table
-  stream    continuous/backfill ingest via Structured Streaming
-  sessions  stateful per-host crawl sessionization stream
-  dedup     exact + MinHash-LSH near-dup pass over a documents table
-  index     build a persisted IVF index over an embeddings table
-  search    approximate top-k against a built IVF index
-  profile   corpus text-quality / language / token profile
-  select    DSIR importance resampling toward a target domain
-  mix       temperature-alpha or explicit-quota stratum resampling
-  decontam  benchmark n-gram decontamination (exact or Bloom prefilter)
+``python run_job.py -h`` lists the subcommands.
 
 Also runnable without spark-submit: ``python run_job.py ...`` builds a
 local session from SPARK_GRAFT_MASTER / SPARK_GRAFT_CPUS.
@@ -29,6 +16,7 @@ local session from SPARK_GRAFT_MASTER / SPARK_GRAFT_CPUS.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
@@ -36,9 +24,28 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main(argv: list[str] | None = None) -> int:
+def _write(df, path: str | None, *aggs) -> dict:
+    """Write ``df`` to ``path`` (overwrite) and return its row count
+    ``n`` plus ``aggs``, observed on the write job itself, so nothing
+    is read back to count it (the ``ManifestCatalog.write_batch``
+    pattern). With no ``path`` the same aggregates run as one job."""
+    from pyspark.sql import Observation, functions as F
+    metrics = [F.count(F.lit(1)).alias("n"), *aggs]
+    if path is None:
+        return df.agg(*metrics).first().asDict()
+    obs = Observation()
+    df.observe(obs, *metrics).write.mode("overwrite").parquet(path)
+    return obs.get
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(prog="run_job")
     sub = ap.add_subparsers(dest="cmd", required=True)
+    ids = argparse.ArgumentParser(add_help=False)
+    ids.add_argument("--id-col", default="doc_id")
+    texts = argparse.ArgumentParser(add_help=False)
+    texts.add_argument("--text-col", default="text")
+    cols = [ids, texts]
 
     ex = sub.add_parser("extract", help="resumable extraction job")
     ex.add_argument("--input", required=True, help="pages parquet path")
@@ -70,12 +77,11 @@ def main(argv: list[str] | None = None) -> int:
     se.add_argument("--gap-min", type=int, default=30)
     se.add_argument("--continuous", action="store_true")
 
-    dd = sub.add_parser("dedup", help="exact + near-dup pass")
+    dd = sub.add_parser("dedup", parents=cols,
+                        help="exact + near-dup pass")
     dd.add_argument("--input", required=True, help="documents parquet")
     dd.add_argument("--output", required=True, help="output dir")
     dd.add_argument("--threshold", type=float, default=0.8)
-    dd.add_argument("--id-col", default="doc_id")
-    dd.add_argument("--text-col", default="text")
     dd.add_argument("--resolve", action="store_true",
                     help="also resolve pairs into clusters and write the"
                          " keep-one deduped corpus")
@@ -133,7 +139,8 @@ def main(argv: list[str] | None = None) -> int:
     pf.add_argument("--input", required=True, help="documents parquet")
     pf.add_argument("--output", required=True, help="metrics parquet dir")
 
-    sl = sub.add_parser("select", help="DSIR data selection")
+    sl = sub.add_parser("select", parents=cols,
+                        help="DSIR data selection")
     sl.add_argument("--input", required=True, help="documents parquet")
     sl.add_argument("--target", required=True,
                     help="target-domain sample parquet (same schema)")
@@ -142,11 +149,10 @@ def main(argv: list[str] | None = None) -> int:
                     help="number of documents to select")
     sl.add_argument("--buckets", type=int, default=10_000)
     sl.add_argument("--seed", type=int, default=42)
-    sl.add_argument("--id-col", default="doc_id")
-    sl.add_argument("--text-col", default="text")
 
-    mx = sub.add_parser("mix", help="temperature-alpha or explicit-"
-                                    "quota resampling")
+    mx = sub.add_parser("mix", parents=[ids],
+                        help="temperature-alpha or explicit-quota "
+                             "resampling")
     mx.add_argument("--input", required=True, help="documents parquet")
     mx.add_argument("--output", required=True, help="mixed parquet dir")
     mx.add_argument("--alpha", type=float, default=0.3)
@@ -160,9 +166,9 @@ def main(argv: list[str] | None = None) -> int:
                          "external recipes; strata without a quota "
                          "are dropped)")
     mx.add_argument("--strata-col", default="lang")
-    mx.add_argument("--id-col", default="doc_id")
 
-    dc = sub.add_parser("decontam", help="benchmark decontamination")
+    dc = sub.add_parser("decontam", parents=cols,
+                        help="benchmark decontamination")
     dc.add_argument("--input", required=True, help="documents parquet")
     dc.add_argument("--benchmark", required=True,
                     help="benchmark set parquet (same schema)")
@@ -173,8 +179,6 @@ def main(argv: list[str] | None = None) -> int:
                          "too big to broadcast exactly)")
     dc.add_argument("--m-bits", type=int, default=1 << 24)
     dc.add_argument("--hashes", type=int, default=5)
-    dc.add_argument("--id-col", default="doc_id")
-    dc.add_argument("--text-col", default="text")
     dc.add_argument("--fraction-micro", type=int, default=None,
                     metavar="MICRO",
                     help="PaLM-style positional-overlap mode: drop docs "
@@ -184,29 +188,29 @@ def main(argv: list[str] | None = None) -> int:
                     help="also write <output>_spans forensics (where "
                          "each contaminated doc overlaps)")
 
-    pk = sub.add_parser("pack", help="pack docs into training shards")
+    pk = sub.add_parser("pack", parents=cols,
+                        help="pack docs into training shards")
     pk.add_argument("--input", required=True, help="documents parquet")
     pk.add_argument("--output", required=True, help="shard sink dir")
     pk.add_argument("--seq-len", type=int, default=2048)
     pk.add_argument("--seqs-per-shard", type=int, default=1024)
-    pk.add_argument("--id-col", default="doc_id")
-    pk.add_argument("--text-col", default="text")
     pk.add_argument("--verify", action="store_true",
                     help="re-read written shards and diff vs manifest")
     pk.add_argument("--shuffle-seed", type=int, default=None,
                     help="epoch-shuffle docs with this seed before "
                          "packing (deterministic permutation)")
 
-    sn = sub.add_parser("snapshot", help="diff two crawl snapshots")
+    sn = sub.add_parser("snapshot", parents=[texts],
+                        help="diff two crawl snapshots")
     sn.add_argument("--old", required=True, help="old snapshot parquet")
     sn.add_argument("--new", required=True, help="new snapshot parquet")
     sn.add_argument("--key-col", default="url")
-    sn.add_argument("--text-col", default="text")
     sn.add_argument("--output", default=None,
                     help="optionally write the per-key diff parquet")
 
-    gq = sub.add_parser("gopher", help="full Gopher quality-rule "
-                                       "battery: report + kept corpus")
+    gq = sub.add_parser("gopher", parents=cols,
+                        help="full Gopher quality-rule battery: report + "
+                             "kept corpus")
     gq.add_argument("--input", required=True, help="documents parquet")
     gq.add_argument("--output", help="kept-corpus parquet sink")
     gq.add_argument("--ngrams", action="store_true",
@@ -217,8 +221,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="drop a rule from the FILTER (report still "
                          "shows it); repeatable — rule names are the "
                          "RULES keys in functions/gopher.py")
-    gq.add_argument("--id-col", default="doc_id")
-    gq.add_argument("--text-col", default="text")
 
     dr = sub.add_parser("drift", help="distribution drift between two "
                                       "corpus snapshots (KL/JS/TV gate)")
@@ -231,13 +233,12 @@ def main(argv: list[str] | None = None) -> int:
                     help="add-alpha smoothing")
     dr.add_argument("--output", help="per-value drift table parquet")
 
-    ck = sub.add_parser("chunk", help="sliding-window document chunks")
+    ck = sub.add_parser("chunk", parents=cols,
+                        help="sliding-window document chunks")
     ck.add_argument("--input", required=True, help="documents parquet")
     ck.add_argument("--output", required=True, help="chunks parquet dir")
     ck.add_argument("--chunk-tokens", type=int, default=256)
     ck.add_argument("--stride", type=int, default=192)
-    ck.add_argument("--id-col", default="doc_id")
-    ck.add_argument("--text-col", default="text")
 
     dv = sub.add_parser("discover", help="crawl-discovery harvest: "
                         "feed autodiscovery + hreflang alternates + "
@@ -247,16 +248,21 @@ def main(argv: list[str] | None = None) -> int:
     dv.add_argument("--output", required=True, help="output dir")
 
     rb = sub.add_parser("robots", help="robots.txt fetch-permission "
-                                       "audit over a pages table")
+                                       "audit over a pages table, per "
+                                       "agent")
     rb.add_argument("--pages", required=True, help="pages parquet (url)")
     rb.add_argument("--robots", required=True,
                     help="robots parquet (host, robots_txt)")
-    rb.add_argument("--agent", default="*")
+    rb.add_argument("--agents", "--agent", default="*",
+                    help="comma-separated agent tokens; one JSON row "
+                         "per agent")
     rb.add_argument("--output", default=None,
-                    help="optionally write per-url decisions parquet")
+                    help="optionally write per-url decisions parquet "
+                         "(one agent only)")
 
-    bp = sub.add_parser("bpe", help="train a BPE tokenizer; optionally "
-                                    "encode the corpus with it")
+    bp = sub.add_parser("bpe", parents=cols,
+                        help="train a BPE tokenizer; optionally encode "
+                             "the corpus with it")
     bp.add_argument("--input", required=True, help="documents parquet")
     bp.add_argument("--output", required=True,
                     help="output dir (merges parquet + optional tokens)")
@@ -264,8 +270,6 @@ def main(argv: list[str] | None = None) -> int:
     bp.add_argument("--min-pair-count", type=int, default=2)
     bp.add_argument("--encode", action="store_true",
                     help="also write per-doc token arrays")
-    bp.add_argument("--id-col", default="doc_id")
-    bp.add_argument("--text-col", default="text")
 
     lg = sub.add_parser("linkgraph", help="host link graph + PageRank "
                                           "from raw page payloads")
@@ -296,7 +300,7 @@ def main(argv: list[str] | None = None) -> int:
                          "teleporting to these seed hosts")
 
     pl = sub.add_parser(
-        "pipeline",
+        "pipeline", parents=cols,
         help="corpus -> quality filter -> dedup -> epoch shuffle -> "
              "packed training shards, one job")
     pl.add_argument("--input", required=True, help="documents parquet")
@@ -319,8 +323,6 @@ def main(argv: list[str] | None = None) -> int:
                          "leakage audit runs and is reported — 0 by "
                          "construction, because dedup precedes the "
                          "split")
-    pl.add_argument("--id-col", default="doc_id")
-    pl.add_argument("--text-col", default="text")
 
     tp = sub.add_parser("traps", help="crawler-trap detection: per-"
                         "(host, path-template) URL concentration")
@@ -329,15 +331,16 @@ def main(argv: list[str] | None = None) -> int:
     tp.add_argument("--output", default=None,
                     help="optionally write template rows parquet")
 
-    fu = sub.add_parser("funnel", help="single-scan cleaning-funnel "
-                        "report (length -> quality -> exact dedup)")
+    fu = sub.add_parser("funnel", parents=[texts],
+                        help="single-scan cleaning-funnel report "
+                             "(length -> quality -> exact dedup)")
     fu.add_argument("--input", required=True, help="documents parquet")
     fu.add_argument("--min-tokens", type=int, default=25)
     fu.add_argument("--min-quality-micro", type=int, default=350_000)
-    fu.add_argument("--text-col", default="text")
 
-    px = sub.add_parser("perplexity", help="LM perplexity scoring "
-                        "against a clean reference corpus")
+    px = sub.add_parser("perplexity", parents=cols,
+                        help="LM perplexity scoring against a clean "
+                             "reference corpus")
     px.add_argument("--input", required=True, help="documents parquet")
     px.add_argument("--reference", required=True,
                     help="clean reference parquet")
@@ -347,16 +350,6 @@ def main(argv: list[str] | None = None) -> int:
     px.add_argument("--buckets", type=int, default=4096)
     px.add_argument("--output", required=True,
                     help="per-doc scores parquet")
-    px.add_argument("--id-col", default="doc_id")
-    px.add_argument("--text-col", default="text")
-
-    oo = sub.add_parser("optout", help="per-agent robots.txt opt-out "
-                        "governance audit")
-    oo.add_argument("--pages", required=True, help="pages parquet (url)")
-    oo.add_argument("--robots", required=True,
-                    help="robots parquet (host, robots_txt)")
-    oo.add_argument("--agents", default="gptbot,ccbot,*",
-                    help="comma-separated agent tokens")
 
     cu = sub.add_parser("curate", help="gate -> exact-dedup -> per-"
                         "language quota sample, one composed plan")
@@ -369,10 +362,14 @@ def main(argv: list[str] | None = None) -> int:
     cu.add_argument("--per-lang", type=int, default=20)
 
     args = ap.parse_args(argv)
+    if args.cmd == "robots" and args.output and "," in args.agents:
+        ap.error("robots: --output takes one agent")
+    return args
 
-    from ocr_engine_spark.engine.session import build_session
-    spark = build_session(f"ocr-engine-spark-{args.cmd}")
 
+def run(spark, args: argparse.Namespace) -> int:
+    """Run the parsed subcommand on ``spark``; prints its JSON
+    summary and returns the exit status. The session stays open."""
     if args.cmd == "extract":
         from ocr_engine_spark.engine.catalog import (
             ManifestCatalog, run_resumable_extract,
@@ -396,13 +393,13 @@ def main(argv: list[str] | None = None) -> int:
         summary_metrics(ev_df).orderBy("scope").show(50, truncate=False)
         if args.wer:
             from pyspark.sql import functions as F
-            from ocr_engine_spark.engine.evaluate import with_wer
+            from ocr_engine_spark.engine.evaluate import (
+                base_url_col, with_wer,
+            )
             g = golden.select(F.col("url").alias("base_url"),
                               F.col("clean_text").alias("__golden"))
-            joined = (ext.withColumn(
-                "base_url",
-                F.regexp_replace("url", r"_degraded_\d+$", ""))
-                .join(F.broadcast(g), "base_url"))
+            joined = (ext.withColumn("base_url", base_url_col(F.col("url")))
+                      .join(F.broadcast(g), "base_url"))
             w = with_wer(joined, "__golden", "clean_text")
             (w.agg(F.count("*").alias("n_docs"),
                    F.round(F.avg("wer"), 4).alias("avg_wer"),
@@ -431,29 +428,27 @@ def main(argv: list[str] | None = None) -> int:
             exact_duplicate_groups, minhash_dedup_pairs,
         )
         docs = spark.read.parquet(args.input)
-        groups = exact_duplicate_groups(docs, args.text_col, args.id_col)
-        groups.write.mode("overwrite").parquet(
-            os.path.join(args.output, "exact_groups"))
-        pairs = minhash_dedup_pairs(docs, id_col=args.id_col,
-                                    text_col=args.text_col,
-                                    threshold=args.threshold)
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(args.output, "near_dup_pairs"))
+        pairs_path = os.path.join(args.output, "near_dup_pairs")
         out = {
-            "exact_groups": spark.read.parquet(
-                os.path.join(args.output, "exact_groups")).count(),
-            "near_dup_pairs": spark.read.parquet(
-                os.path.join(args.output, "near_dup_pairs")).count()}
+            "exact_groups": _write(
+                exact_duplicate_groups(docs, args.text_col, args.id_col),
+                os.path.join(args.output, "exact_groups"))["n"],
+            "near_dup_pairs": _write(
+                minhash_dedup_pairs(docs, id_col=args.id_col,
+                                    text_col=args.text_col,
+                                    threshold=args.threshold),
+                pairs_path)["n"]}
         if args.resolve:
-            from pyspark.sql import Observation, functions as F
+            from pyspark.sql import functions as F
             from ocr_engine_spark.functions.cluster import (
                 dedup_decisions, representative_decisions,
             )
-            stored = spark.read.parquet(
-                os.path.join(args.output, "near_dup_pairs"))
+            # the written pairs are the checkpointed input of the
+            # resolve step (not re-counted)
+            stored = spark.read.parquet(pairs_path)
             # decisions are tiny (near-dup nodes only): persist so the
-            # clusters write, the loser anti-join side and the count
-            # share one computation
+            # clusters write and the loser anti-join side share one
+            # computation
             if args.keep_best:
                 decisions = representative_decisions(
                     stored, docs.select(args.id_col, args.keep_best),
@@ -465,29 +460,20 @@ def main(argv: list[str] | None = None) -> int:
                 decisions = decisions.persist()
             else:
                 decisions = dedup_decisions(stored).persist()
-            decisions.write.mode("overwrite").parquet(
-                os.path.join(args.output, "clusters"))
+            out["clusters"] = _write(
+                decisions, os.path.join(args.output, "clusters"))["n"]
             losers = (decisions.filter(~F.col("keep"))
                       .select(F.col("doc_id").alias(args.id_col)))
-            kept = docs.join(losers, args.id_col, "left_anti")
-            # kept-count rides on the write via observe() — never a
-            # second scan of the just-written corpus (catalog.py
-            # pattern)
-            obs = Observation("dedup_kept")
-            kept.observe(obs, F.count(F.lit(1)).alias("n")) \
-                .write.mode("overwrite").parquet(
-                    os.path.join(args.output, "deduped"))
-            out["clusters"] = decisions.count()
-            out["kept_docs"] = obs.get["n"]
+            out["kept_docs"] = _write(
+                docs.join(losers, args.id_col, "left_anti"),
+                os.path.join(args.output, "deduped"))["n"]
             decisions.unpersist()
         if args.mirrors:
             from ocr_engine_spark.functions.dedup import mirror_host_pairs
-            mp = mirror_host_pairs(docs, url_col=args.url_col,
-                                   text_col=args.text_col)
-            mp.write.mode("overwrite").parquet(
-                os.path.join(args.output, "mirror_hosts"))
-            out["mirror_host_pairs"] = spark.read.parquet(
-                os.path.join(args.output, "mirror_hosts")).count()
+            out["mirror_host_pairs"] = _write(
+                mirror_host_pairs(docs, url_col=args.url_col,
+                                  text_col=args.text_col),
+                os.path.join(args.output, "mirror_hosts"))["n"]
         print(json.dumps(out))
     elif args.cmd == "index":
         from ocr_engine_spark.functions.similarity import IvfIndex
@@ -504,7 +490,6 @@ def main(argv: list[str] | None = None) -> int:
         if qrow is None:
             print(f"error: --query-id {args.query_id} not found in "
                   f"{args.input}", file=sys.stderr)
-            spark.stop()
             return 2
         qv = [float(x) for x in qrow[idx.vec_col]]
         rows = idx.topk(spark, qv, k=args.k, n_probe=args.probes).collect()
@@ -545,7 +530,10 @@ def main(argv: list[str] | None = None) -> int:
         pred = nb_predict(spark.read.parquet(args.input), labels, cond,
                           buckets=args.buckets,
                           ns=ns, features=args.features)
-        pred.write.mode("overwrite").parquet(args.output)
+        _write(pred, args.output)
+        labels.unpersist()
+        cond.unpersist()
+        # grouped summary: counted from what landed
         dist = (spark.read.parquet(args.output)
                 .groupBy("pred_label").agg(F.count("*").alias("n"))
                 .orderBy("pred_label").collect())
@@ -565,7 +553,7 @@ def main(argv: list[str] | None = None) -> int:
             token_count_col(F.col("text")).alias("n_tokens"),
             bpe_token_count_col(F.col("text")).alias("n_bpe_tokens"),
             quality_score_col(F.col("text")).alias("quality"))
-        prof.write.mode("overwrite").parquet(args.output)
+        _write(prof, args.output)
         prof.groupBy("guessed_lang").agg(
             F.count("*").alias("n_docs"),
             F.round(F.avg("quality"), 4).alias("avg_quality")).show()
@@ -581,12 +569,10 @@ def main(argv: list[str] | None = None) -> int:
         # is tiny: k rows)
         out = docs.join(F.broadcast(sel.select(args.id_col, "rank")),
                         args.id_col)
-        out.write.mode("overwrite").parquet(args.output)
         print(json.dumps({
-            "selected": spark.read.parquet(args.output).count(),
+            "selected": _write(out, args.output)["n"],
             "k": args.k, "buckets": args.buckets, "seed": args.seed}))
     elif args.cmd == "mix":
-        from pyspark.sql import Observation, functions as F
         from ocr_engine_spark.functions.sample import (
             quota_sample, temperature_sample,
         )
@@ -611,12 +597,10 @@ def main(argv: list[str] | None = None) -> int:
                                        strata_col=args.strata_col,
                                        id_col=args.id_col)
             params = {"alpha": args.alpha, "total": args.total}
-        obs = Observation("mix_rows")
-        mixed.observe(obs, F.count(F.lit(1)).alias("n")) \
-            .write.mode("overwrite").parquet(args.output)
-        print(json.dumps({"rows": obs.get["n"], **params}))
+        print(json.dumps({"rows": _write(mixed, args.output)["n"],
+                          **params}))
     elif args.cmd == "decontam":
-        from pyspark.sql import Observation, functions as F
+        from pyspark.sql import functions as F
         docs = spark.read.parquet(args.input)
         bench = spark.read.parquet(args.benchmark)
         if args.fraction_micro is not None:
@@ -646,22 +630,19 @@ def main(argv: list[str] | None = None) -> int:
         flagged = report.persist()
         clean = docs.join(flagged.select(args.id_col), args.id_col,
                           "left_anti")
-        obs = Observation("decontam_kept")
-        clean.observe(obs, F.count(F.lit(1)).alias("n")) \
-            .write.mode("overwrite").parquet(args.output)
-        out = {"contaminated": flagged.count(), "kept": obs.get["n"],
+        out = {"contaminated": flagged.count(),
+               "kept": _write(clean, args.output)["n"],
                "path": ("fraction" if args.fraction_micro is not None
                         else "bloom" if args.bloom else "exact")}
         if args.spans:
             from ocr_engine_spark.functions.decontam import (
                 contamination_spans,
             )
-            sp = contamination_spans(docs, bench, n=args.ngram,
-                                     id_col=args.id_col,
-                                     text_col=args.text_col)
-            sp.write.mode("overwrite").parquet(args.output + "_spans")
-            out["spans"] = spark.read.parquet(
-                args.output + "_spans").count()
+            out["spans"] = _write(
+                contamination_spans(docs, bench, n=args.ngram,
+                                    id_col=args.id_col,
+                                    text_col=args.text_col),
+                args.output + "_spans")["n"]
         print(json.dumps(out))
         flagged.unpersist()
     elif args.cmd == "pack":
@@ -744,9 +725,8 @@ def main(argv: list[str] | None = None) -> int:
                     continue
                 part = assigned.filter(F.col("split") == name) \
                                .drop("split")
-                dest = os.path.join(args.output, f"split_{name}")
-                part.write.mode("overwrite").parquet(dest)
-                split_counts[name] = spark.read.parquet(dest).count()
+                split_counts[name] = _write(
+                    part, os.path.join(args.output, f"split_{name}"))["n"]
             to_pack = assigned.filter(F.col("split") == train) \
                               .drop("split")
         shuffled = shuffle_corpus(to_pack, seed=args.shuffle_seed,
@@ -758,6 +738,8 @@ def main(argv: list[str] | None = None) -> int:
                                       seqs_per_shard=args.seqs_per_shard)
         clean.unpersist()
         deduped.unpersist()
+        if args.split:
+            assigned.unpersist()
         out = {
             "n_input": n_in, "n_after_quality": n_clean,
             "n_after_dedup": n_dedup,
@@ -779,8 +761,9 @@ def main(argv: list[str] | None = None) -> int:
         diff = snapshot_diff(old, new, key_col=args.key_col,
                              text_col=args.text_col)
         if args.output:
-            diff.write.mode("overwrite").parquet(args.output)
-            diff = spark.read.parquet(args.output)  # count what landed
+            _write(diff, args.output)
+            # grouped summary: counted from what landed
+            diff = spark.read.parquet(args.output)
         counts = {r["status"]: r["n"] for r in
                   diff.groupBy("status").agg(F.count("*").alias("n"))
                   .collect()}
@@ -807,8 +790,7 @@ def main(argv: list[str] | None = None) -> int:
             rep["fail_ngram_repetition"] = bad.count()
             kept = kept.join(bad, args.id_col, "left_anti")
         if args.output:
-            kept.write.mode("overwrite").parquet(args.output)
-            rep["n_written"] = spark.read.parquet(args.output).count()
+            rep["n_written"] = _write(kept, args.output)["n"]
         print(json.dumps(rep))
     elif args.cmd == "drift":
         from ocr_engine_spark.functions.drift import (
@@ -817,8 +799,8 @@ def main(argv: list[str] | None = None) -> int:
         old = spark.read.parquet(args.old)
         new = spark.read.parquet(args.new)
         if args.output:
-            (distribution_drift(old, new, args.column, alpha=args.alpha)
-             .write.mode("overwrite").parquet(args.output))
+            _write(distribution_drift(old, new, args.column,
+                                      alpha=args.alpha), args.output)
         s = drift_summary(old, new, args.column, alpha=args.alpha) \
             .collect()[0].asDict()  # 1-row gate
         s["column"] = args.column
@@ -829,51 +811,47 @@ def main(argv: list[str] | None = None) -> int:
         chunks = chunk_documents(docs, chunk_tokens=args.chunk_tokens,
                                  stride=args.stride, id_col=args.id_col,
                                  text_col=args.text_col)
-        chunks.write.mode("overwrite").parquet(args.output)
-        written = spark.read.parquet(args.output)
+        n_chunks = _write(chunks, args.output)["n"]
+        # DISTINCT is not an observable metric: count it from what landed
         print(json.dumps({
-            "n_chunks": written.count(),
-            "n_docs": written.select(args.id_col).distinct().count(),
+            "n_chunks": n_chunks,
+            "n_docs": spark.read.parquet(args.output)
+                           .select(args.id_col).distinct().count(),
             "chunk_tokens": args.chunk_tokens, "stride": args.stride}))
     elif args.cmd == "linkgraph":
         from pyspark.sql import functions as F
         from ocr_engine_spark.functions.linkgraph import (
             host_edges, pagerank,
         )
+        sink = functools.partial(os.path.join, args.output)
         pages = spark.read.parquet(args.input)
-        edges = host_edges(pages)
-        edges.write.mode("overwrite").parquet(
-            os.path.join(args.output, "edges"))
-        edges = spark.read.parquet(os.path.join(args.output, "edges"))
-        ranks = pagerank(edges, iterations=args.iterations,
-                         damping_pct=args.damping_pct)
-        ranks.write.mode("overwrite").parquet(
-            os.path.join(args.output, "ranks"))
-        ranks = spark.read.parquet(os.path.join(args.output, "ranks"))
+        # edges and ranks are re-read as the checkpointed input of the
+        # later steps; their counts come from the writes
+        n_edges = _write(host_edges(pages), sink("edges"))["n"]
+        edges = spark.read.parquet(sink("edges"))
+        n_hosts = _write(pagerank(edges, iterations=args.iterations,
+                                  damping_pct=args.damping_pct),
+                         sink("ranks"))["n"]
+        ranks = spark.read.parquet(sink("ranks"))
         top = [{"host": r["node"], "rank_micro": r["rank"]}
                for r in ranks.orderBy(F.desc("rank"), "node")
                              .limit(args.top).collect()]
-        out = {"hosts": ranks.count(), "edges": edges.count(),
+        out = {"hosts": n_hosts, "edges": n_edges,
                "iterations": args.iterations, "top": top}
         if args.harmonic:
             from ocr_engine_spark.functions.linkgraph import (
                 harmonic_centrality,
             )
-            hc = harmonic_centrality(edges, iterations=args.iterations)
-            hc.write.mode("overwrite").parquet(
-                os.path.join(args.output, "harmonic"))
-            out["harmonic_hosts"] = spark.read.parquet(
-                os.path.join(args.output, "harmonic")).count()
+            out["harmonic_hosts"] = _write(
+                harmonic_centrality(edges, iterations=args.iterations),
+                sink("harmonic"))["n"]
         if args.stats:
             from ocr_engine_spark.functions.linkgraph import graph_stats
             out["stats"] = graph_stats(edges).collect()[0].asDict()
         if args.hits:
             from ocr_engine_spark.functions.linkgraph import hits
-            ha = hits(edges, iterations=args.iterations)
-            ha.write.mode("overwrite").parquet(
-                os.path.join(args.output, "hits"))
-            out["hits_hosts"] = spark.read.parquet(
-                os.path.join(args.output, "hits")).count()
+            out["hits_hosts"] = _write(
+                hits(edges, iterations=args.iterations), sink("hits"))["n"]
         if args.trust_seeds is not None:
             from ocr_engine_spark.functions.linkgraph import trustrank
             seeds = spark.createDataFrame(
@@ -887,39 +865,29 @@ def main(argv: list[str] | None = None) -> int:
                           .otherwise(F.expr(
                               "((rank - trust) * 1000000) div rank"))
                           .cast("long").alias("spam_mass_micro")))
-            sm.write.mode("overwrite").parquet(
-                os.path.join(args.output, "trust"))
-            out["trust_hosts"] = spark.read.parquet(
-                os.path.join(args.output, "trust")).count()
+            out["trust_hosts"] = _write(sm, sink("trust"))["n"]
         if args.frontier is not None:
             from ocr_engine_spark.functions.linkgraph import (
                 crawl_frontier,
             )
-            fr = crawl_frontier(pages, ranks, now_epoch=args.frontier,
-                                per_host_budget=args.per_host_budget,
-                                top_n=args.frontier_top)
-            fr.write.mode("overwrite").parquet(
-                os.path.join(args.output, "frontier"))
-            out["frontier_urls"] = spark.read.parquet(
-                os.path.join(args.output, "frontier")).count()
+            out["frontier_urls"] = _write(
+                crawl_frontier(pages, ranks, now_epoch=args.frontier,
+                               per_host_budget=args.per_host_budget,
+                               top_n=args.frontier_top),
+                sink("frontier"))["n"]
         print(json.dumps(out))
     elif args.cmd == "discover":
-        from pyspark.sql import functions as F
         from ocr_engine_spark.functions.robots import feed_links
         from ocr_engine_spark.functions.scrub import (
             hreflang_records, og_metadata, page_metadata,
         )
         pages = spark.read.parquet(args.input).select("url", "html")
-        feeds = feed_links(pages)
-        alts = hreflang_records(pages)
         meta = (page_metadata(pages)
                 .join(og_metadata(pages), "url"))
-        out = {}
-        for name, df in (("feeds", feeds), ("alternates", alts),
-                         ("metadata", meta)):
-            path = os.path.join(args.output, name)
-            df.write.mode("overwrite").parquet(path)
-            out[name] = spark.read.parquet(path).count()
+        out = {name: _write(df, os.path.join(args.output, name))["n"]
+               for name, df in (("feeds", feed_links(pages)),
+                                ("alternates", hreflang_records(pages)),
+                                ("metadata", meta))}
         out["pages"] = pages.count()
         print(json.dumps({"output": args.output, "counts": out}))
     elif args.cmd == "robots":
@@ -927,65 +895,54 @@ def main(argv: list[str] | None = None) -> int:
         from ocr_engine_spark.functions.robots import robots_decisions
         pages = spark.read.parquet(args.pages)
         robots = spark.read.parquet(args.robots)
-        dec = robots_decisions(pages, robots, agent=args.agent)
-        if args.output:
-            dec.write.mode("overwrite").parquet(args.output)
-            dec = spark.read.parquet(args.output)
-        stats = (dec.agg(F.count("*").alias("urls"),
-                         F.coalesce(F.sum(F.col("allowed").cast("int")),
-                                    F.lit(0)).alias("allowed")).first())
-        print(json.dumps({"agent": args.agent,
-                          "urls": stats["urls"],
-                          "allowed": int(stats["allowed"]),
-                          "blocked": stats["urls"] - int(stats["allowed"])}))
+        for agent in args.agents.split(","):
+            st = _write(robots_decisions(pages, robots, agent=agent),
+                        args.output,
+                        F.coalesce(F.sum(F.col("allowed").cast("long")),
+                                   F.lit(0)).alias("allowed"))
+            print(json.dumps({"agent": agent, "urls": st["n"],
+                              "allowed": st["allowed"],
+                              "blocked": st["n"] - st["allowed"]}))
     elif args.cmd == "bpe":
         from pyspark.sql import functions as F
         from ocr_engine_spark.functions.bpe import encode_bpe, train_bpe
         docs = spark.read.parquet(args.input)
         merges = train_bpe(docs, args.merges, text_col=args.text_col,
                            min_pair_count=args.min_pair_count)
-        (spark.createDataFrame(
+        _write(spark.createDataFrame(
             [(m["rank"], m["p1"], m["p2"], m["merged"], m["pair_count"])
              for m in merges],
             schema="merge_rank INT, p1 STRING, p2 STRING, merged STRING, "
-                   "pair_count BIGINT")
-         .coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(args.output, "merges")))
+                   "pair_count BIGINT").coalesce(1),
+            os.path.join(args.output, "merges"))
         out = {"n_merges": len(merges),
                "merges": [m["merged"] for m in merges]}
         if args.encode and merges:
-            toks = encode_bpe(docs, merges, id_col=args.id_col,
-                              text_col=args.text_col)
-            toks.write.mode("overwrite").parquet(
-                os.path.join(args.output, "tokens"))
-            stats = (spark.read.parquet(os.path.join(args.output, "tokens"))
-                     .agg(F.count("*").alias("docs"),
-                          F.coalesce(F.sum(F.size("tokens")), F.lit(0))
-                          .alias("tokens"))
-                     .first())
-            out["encoded_docs"] = stats["docs"]
-            out["total_tokens"] = int(stats["tokens"])
+            st = _write(encode_bpe(docs, merges, id_col=args.id_col,
+                                   text_col=args.text_col),
+                        os.path.join(args.output, "tokens"),
+                        F.coalesce(F.sum(F.size("tokens")), F.lit(0))
+                        .alias("tokens"))
+            out["encoded_docs"] = st["n"]
+            out["total_tokens"] = st["tokens"]
         print(json.dumps(out))
     elif args.cmd == "traps":
         from pyspark.sql import functions as F
         from ocr_engine_spark.functions.scrub import url_trap_report
         pages = spark.read.parquet(args.pages)
         rep = url_trap_report(pages, trap_min_urls=args.min_urls)
-        if args.output:
-            rep.write.mode("overwrite").parquet(args.output)
-            rep = spark.read.parquet(args.output)
-        stats = rep.agg(
-            F.countDistinct("host").alias("hosts"),
-            F.count("*").alias("templates"),
-            F.coalesce(F.sum(F.col("is_trap").cast("long")), F.lit(0))
-            .alias("trap_templates"),
-            F.coalesce(F.sum(F.when(F.col("is_trap"),
-                                    F.col("n_urls"))), F.lit(0))
-            .alias("trapped_urls")).first()
-        print(json.dumps({"hosts": stats["hosts"],
-                          "templates": stats["templates"],
-                          "trap_templates": int(stats["trap_templates"]),
-                          "trapped_urls": int(stats["trapped_urls"])}))
+        st = _write(rep, args.output,
+                    F.coalesce(F.sum(F.col("is_trap").cast("long")),
+                               F.lit(0)).alias("trap_templates"),
+                    F.coalesce(F.sum(F.when(F.col("is_trap"),
+                                            F.col("n_urls"))), F.lit(0))
+                    .alias("trapped_urls"))
+        # DISTINCT is not an observable metric: count it from what landed
+        hosts = (spark.read.parquet(args.output) if args.output else rep) \
+            .select("host").distinct().count()
+        print(json.dumps({"hosts": hosts, "templates": st["n"],
+                          "trap_templates": st["trap_templates"],
+                          "trapped_urls": st["trapped_urls"]}))
     elif args.cmd == "funnel":
         from ocr_engine_spark.functions.funnel import filter_funnel
         docs = spark.read.parquet(args.input)
@@ -1009,17 +966,13 @@ def main(argv: list[str] | None = None) -> int:
                     text_col=args.text_col)
         scored = doc_log_ppl_kn(docs, *model, buckets=args.buckets,
                                 id_col=args.id_col, text_col=args.text_col)
-        scored.write.mode("overwrite").parquet(args.output)
-        st = (spark.read.parquet(args.output)
-              .agg(F.count("*").alias("docs"),
-                   F.min("log_ppl_micro").alias("min"),
-                   F.max("log_ppl_micro").alias("max")).first())
-        print(json.dumps({"order": args.order, "docs": st["docs"],
+        st = _write(scored, args.output,
+                    F.min("log_ppl_micro").alias("min"),
+                    F.max("log_ppl_micro").alias("max"))
+        print(json.dumps({"order": args.order, "docs": st["n"],
                           "log_ppl_micro_min": int(st["min"]),
                           "log_ppl_micro_max": int(st["max"])}))
     elif args.cmd == "curate":
-        import os as _os
-
         from ocr_engine_spark.functions.curation import (
             curate_corpus, curation_summary,
         )
@@ -1027,30 +980,22 @@ def main(argv: list[str] | None = None) -> int:
         kw = dict(min_tokens=args.min_tokens,
                   min_quality_micro=args.min_quality_micro,
                   n_per_lang=args.per_lang)
-        curate_corpus(docs, **kw).write.mode("overwrite") \
-            .parquet(_os.path.join(args.output, "sample"))
+        sample = os.path.join(args.output, "sample")
+        _write(curate_corpus(docs, **kw), sample)
         rows = [r.asDict() for r in
                 curation_summary(docs, **kw).collect()]
-        print(json.dumps({"langs": rows,
-                          "sample": _os.path.join(args.output,
-                                                  "sample")}))
-    elif args.cmd == "optout":
-        from pyspark.sql import functions as F
-        from ocr_engine_spark.functions.robots import robots_decisions
-        pages = spark.read.parquet(args.pages)
-        robots = spark.read.parquet(args.robots)
-        out = []
-        for agent in args.agents.split(","):
-            dec = robots_decisions(pages, robots, agent=agent)
-            st = dec.agg(
-                F.count("*").alias("urls"),
-                F.coalesce(F.sum((~F.col("allowed")).cast("long")),
-                           F.lit(0)).alias("blocked")).first()
-            out.append({"agent": agent, "urls": st["urls"],
-                        "blocked": int(st["blocked"])})
-        print(json.dumps(out))
-    spark.stop()
+        print(json.dumps({"langs": rows, "sample": sample}))
     return 0
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(argv)
+    from ocr_engine_spark.engine.session import build_session
+    spark = build_session(f"ocr-engine-spark-{args.cmd}")
+    try:
+        return run(spark, args)
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

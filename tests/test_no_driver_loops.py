@@ -41,7 +41,6 @@ COLLECT_ALLOWLIST = {
         '"params")).first()',       # index params: 1 row
     ],
     "functions/search.py": [
-        '_corpus_stats(post, self.id_col).collect()[0]',  # stats: 1 row
         '"meta")).collect()[0]',              # index metadata: 1 row
     ],
     "functions/pq.py": [

@@ -231,20 +231,26 @@ def test_index_append_equals_rebuild(spark, tmp_path):
 def test_index_built_empty_then_appended_equals_fresh_build(
         spark, tmp_path, positions):
     """An index built over no documents has zero stats and stays
-    readable: appending one doc then searching equals a fresh build
-    over that doc."""
+    readable: appending one doc (plus one with no indexable token,
+    which counts toward neither stat) then searching equals a fresh
+    build over the same docs."""
     empty = spark.createDataFrame([], "doc_id long, text string")
-    one = spark.createDataFrame(DOCS[:1], "doc_id long, text string")
+    one = spark.createDataFrame(DOCS[:1] + [(999, "-- !! --")],
+                                "doc_id long, text string")
     inc = SearchIndex.build(empty, str(tmp_path / "inc"), buckets=8,
                             positions=positions)
     assert (inc.n_docs, inc.total_dl) == (0, 0)
     assert SearchIndex.load(spark, str(tmp_path / "inc")).n_docs == 0
     assert inc.search(spark, "table", 10).count() == 0
-    inc.append(one)
+    # docs without a token write no postings and leave the stats at 0
+    inc.append(one.filter("doc_id = 999"))
+    assert (inc.n_docs, inc.total_dl) == (0, 0)
+    inc.append(one.filter("doc_id != 999"))
     fresh = SearchIndex.build(one, str(tmp_path / "fresh"), buckets=8,
                               positions=positions)
     inc2 = SearchIndex.load(spark, str(tmp_path / "inc"))
     assert (inc2.n_docs, inc2.total_dl) == (fresh.n_docs, fresh.total_dl)
+    assert (fresh.n_docs, fresh.total_dl) == (1, len(DOCS[0][1].split()))
     q = "table scan rows"
     assert ([tuple(r) for r in inc2.search(spark, q, 10).collect()]
             == [tuple(r) for r in fresh.search(spark, q, 10).collect()])
