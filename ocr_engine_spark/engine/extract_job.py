@@ -189,30 +189,42 @@ def _local_input_bytes(df: DataFrame) -> int:
     return total
 
 
-def _max_partition_bytes(spark) -> int:
+def _size_conf(spark, key: str, default: int) -> int:
+    """A Spark size config in bytes; the strings keep their suffix
+    ('128m', '64MB', '4194304b', ...). Unparseable reads as ``default``."""
     import re as _re
-    conf = spark.conf.get("spark.sql.files.maxPartitionBytes",
-                          "134217728")
-    # Spark size-config strings keep their suffix ('128m', '64MB', ...)
+    conf = spark.conf.get(key, str(default))
     m = _re.match(r"(\d+)\s*([kmgt]?)b?$", str(conf).strip().lower())
     if m:
         return int(m.group(1)) * (
             1024 ** {"": 0, "k": 1, "m": 2, "g": 3, "t": 4}[m.group(2)])
-    return 134_217_728
+    return default
 
 
-def _estimated_scan_splits(df: DataFrame) -> int:
-    """Metadata-only estimate of how many scan splits the source yields
-    (total input bytes / spark.sql.files.maxPartitionBytes — file
-    listing only, no job). In-memory sources (no files) and unreadable
-    paths estimate 0, i.e. 'under-parallelized' — the safe local
+def _estimated_scan_splits(input_bytes: int) -> int:
+    """Metadata-only estimate of how many scan splits a source of
+    ``input_bytes`` (``_local_input_bytes``) yields: total bytes /
+    spark.sql.files.maxPartitionBytes of the active session. In-memory
+    sources (0) estimate 0, i.e. 'under-parallelized' — the safe local
     answer; a table-scale source estimates millions and is never
     shuffled for balance."""
-    total = _local_input_bytes(df)
-    if total < 0:
+    from pyspark.sql import SparkSession
+    if input_bytes < 0:
         return 1 << 30  # remote store: trust the scan's own splits
-    max_bytes = _max_partition_bytes(df.sparkSession)
-    return -(-total // max_bytes) if total else 0
+    split = _size_conf(SparkSession.active(),
+                       "spark.sql.files.maxPartitionBytes", 128 << 20)
+    return -(-input_bytes // split)
+
+
+def _balance_partitions(spark, input_bytes: int, slots: int) -> int:
+    """Tasks for the balance shuffle: whole waves of ``slots`` tasks,
+    1 to 4 of them, about spark.sql.files.openCostInBytes of input per
+    task. Unknown size (in-memory 0, remote -1) keeps 4 waves."""
+    if input_bytes <= 0:
+        return slots * 4
+    per_wave = slots * _size_conf(spark, "spark.sql.files.openCostInBytes",
+                                  4 << 20)
+    return slots * min(4, max(1, -(-input_bytes // per_wave)))
 
 
 def extract_pages(pages: DataFrame, *, partitions: int | None = None,
@@ -220,36 +232,54 @@ def extract_pages(pages: DataFrame, *, partitions: int | None = None,
                   with_fields: bool = True) -> DataFrame:
     """pages DataFrame -> extractions DataFrame.
 
-    Load-balancing (``balance``): the kernel stage wants ~4 tasks per
-    slot (per-doc cost varies ~10x between PDF layout and HTML; finer
-    tasks amortize stragglers — measured 4x beats 2x by ~15% wall at
-    local[32]). But an unconditional ``repartition`` shuffles the FULL
-    payload bytes — at table scale that is a 100 TB shuffle bought only
-    for load-balancing. Default ``"auto"`` therefore shuffles ONLY when
-    the scan under-parallelizes (input splits < 4 tasks per executor
-    slot — true for a small/one-file corpus, never true for a 10^12-row
-    table whose scan yields millions of size-bounded splits). The 4x
-    margin matters empirically, not just for stragglers: at pinned 8
-    cores a one-file ~850 MB corpus yields ~13 64 MB splits, which
-    clears an ``< slots`` test yet schedules as 2 ragged waves
-    (+28% wall measured, and the 2->8 scaling leg drops below the
-    north rule's 0.8 on exactly this cliff). ``True``/
-    ``partitions=N`` force the shuffle (layout-known-bad inputs),
-    ``False`` never shuffles. Hash key xxhash64(url) is skew-free by
-    construction (urls unique); for host-keyed downstream ops use
-    functions/skew.py salting.
+    Load-balancing (``balance``): per-doc cost varies ~10x between PDF
+    layout and HTML, so the kernel stage wants several tasks per slot to
+    amortize stragglers. But an unconditional ``repartition`` shuffles
+    the FULL payload bytes — at table scale that is a 100 TB shuffle
+    bought only for load-balancing. Default ``"auto"`` therefore
+    shuffles ONLY when the scan under-parallelizes (input splits < 4
+    tasks per executor slot — true for a small/one-file corpus, never
+    true for a 10^12-row table whose scan yields millions of
+    size-bounded splits). The 4x margin matters empirically, not just
+    for stragglers: at pinned 8 cores a one-file ~850 MB corpus yields
+    ~13 64 MB splits, which clears an ``< slots`` test yet schedules as
+    2 ragged waves (+28% wall measured, and the 2->8 scaling leg drops
+    below the north rule's 0.8 on exactly this cliff).
+
+    How many tasks the balance shuffle makes is sized by input bytes:
+    ``slots * clamp(ceil(bytes / (slots * openCost)), 1, 4)`` with
+    ``openCost`` = spark.sql.files.openCostInBytes (4 MB default) —
+    Spark's own estimate, in bytes, of a split's fixed cost, and the
+    floor the file scan puts on split size. Every wave is full (no
+    ragged waves), there are never fewer tasks than slots, and a task
+    never gets much less input than its fixed cost is worth: each task
+    costs ~70-85 ms of JVM plus Python worker CPU before any kernel
+    work (measured at local[4] as the difference between 16 and 4
+    balance tasks), more than the kernel work of a 1/16 share of a
+    1-5 MB corpus. So a corpus under ``slots * openCost`` gets one task
+    per slot, and 4 tasks per slot only above ``3 * slots * openCost``.
+    Unknown size (in-memory, or a remote store under a forced shuffle)
+    keeps 4 tasks per slot.
+
+    ``True``/``partitions=N`` force the shuffle (layout-known-bad
+    inputs; ``N`` also fixes the task count), ``False`` never shuffles.
+    Hash key xxhash64(url) is skew-free by construction (urls unique);
+    for host-keyed downstream ops use functions/skew.py salting.
     """
     spark = pages.sparkSession
     slots = spark.sparkContext.defaultParallelism
     staged = pages.select("url", "warc_ts", "html", "lang")  # column
     # pruning: never carry the naive `text` dump into the kernel stage
+    # (streaming input: micro-batch sizing governs parallelism — never
+    # buy a balance shuffle, and inputFiles() is undefined)
+    sized = (partitions is None and balance is not False
+             and not staged.isStreaming)
+    input_bytes = _local_input_bytes(staged) if sized else 0
     do_shuffle = balance is True or partitions is not None
-    if balance == "auto" and partitions is None and not staged.isStreaming:
-        # (streaming input: micro-batch sizing governs parallelism —
-        # never buy a balance shuffle, and inputFiles() is undefined)
-        do_shuffle = _estimated_scan_splits(staged) < slots * 4
+    if balance == "auto" and sized:
+        do_shuffle = _estimated_scan_splits(input_bytes) < slots * 4
     if do_shuffle:
-        p = partitions or slots * 4
+        p = partitions or _balance_partitions(spark, input_bytes, slots)
         staged = staged.repartition(p, F.xxhash64("url"))
     staged = staged.withColumn("partition_id", F.spark_partition_id())
     out = staged.mapInArrow(extract_batch_arrow, EXTRACT_SCHEMA)
@@ -288,9 +318,11 @@ def read_pages(spark: "SparkSession", path: str, *,
         slots = spark.sparkContext.defaultParallelism
         total = _local_input_bytes(df)
         want = slots * 4
-        if total > 0 and -(-total // _max_partition_bytes(spark)) < want:
+        split = _size_conf(spark, "spark.sql.files.maxPartitionBytes",
+                           128 << 20)
+        if total > 0 and -(-total // split) < want:
             target = max(16 << 20, total // want)
-            if target < _max_partition_bytes(spark):
+            if target < split:
                 spark.conf.set("spark.sql.files.maxPartitionBytes",
                                str(int(target)))
                 df = spark.read.schema(PAGES_SCHEMA).parquet(path)

@@ -16,11 +16,17 @@ work a reused worker repeats before and after every task:
   importer.
 * After each reused task the daemon runs a full garbage collection,
   which walks the whole import heap (pyspark, pyarrow, the kernels).
-  Freezing that heap once, after a worker's first task, leaves the
-  per-task collection only the objects tasks allocate. (A frozen object
-  that later becomes cyclic garbage is never reclaimed; after one task
-  the heap is almost all module state, which lives as long as the
-  worker anyway.)
+  Freezing that heap leaves the per-task collection only the objects
+  tasks allocate. A worker freezes after its first task and again after
+  any task that grew ``sys.modules``: a first-task-only freeze misses
+  what loads late. pyarrow 16 imports pandas on the first ``pa.array``
+  call over a Python list, which in an extraction worker happens inside
+  the first extraction task, not the first task; without the re-freeze
+  each reused worker kept ~32k unfrozen objects, and walking them took
+  ~11 ms of the ~20 ms of worker CPU a near-empty task cost
+  (``tools/worker_task_cpu.py``). (A frozen object that later becomes cyclic
+  garbage is never reclaimed; what is frozen is almost all module
+  state, which lives as long as the worker anyway.)
 
 The daemon module must be importable where Python workers start, so
 ``build_session`` uses it only on local masters, where it also puts this
@@ -32,6 +38,7 @@ from __future__ import annotations
 import gc
 import importlib
 import os
+import sys
 import zipimport
 
 
@@ -73,10 +80,11 @@ def main() -> None:
     run_task = daemon.worker
 
     def worker(sock, authenticated):
+        modules = len(sys.modules)
         code = run_task(sock, authenticated)
-        if not gc.get_freeze_count():
-            # after the first task the heap holds what the worker
-            # imported; collect its garbage once, then freeze the rest
+        if not gc.get_freeze_count() or len(sys.modules) > modules:
+            # the heap now holds what the worker imported; collect its
+            # garbage once, then freeze the rest
             gc.collect(2)
             gc.freeze()
         return code

@@ -200,6 +200,38 @@ def test_auto_balance_wants_four_tasks_per_slot(pages_df, monkeypatch):
     assert "Exchange" not in upto_kernel(plan)
 
 
+def test_balance_partitions_sized_by_input_bytes(pages_df, monkeypatch):
+    """The balance shuffle makes whole waves of `slots` tasks, about
+    spark.sql.files.openCostInBytes of input per task, 1 to 4 waves;
+    unknown sizes keep 4 waves and an explicit `partitions` wins."""
+    import re
+
+    from ocr_engine_spark.engine import extract_job
+
+    spark = pages_df.sparkSession
+    slots = spark.sparkContext.defaultParallelism
+    open_cost = extract_job._size_conf(
+        spark, "spark.sql.files.openCostInBytes", 4 << 20)
+
+    def balance_tasks(input_bytes, **kw):
+        monkeypatch.setattr(extract_job, "_local_input_bytes",
+                            lambda df: input_bytes)
+        plan = (extract_job.extract_pages(pages_df, with_fields=False, **kw)
+                ._jdf.queryExecution().executedPlan().toString())
+        # a cached extraction with the same plan shows up as its
+        # InMemoryRelation, which prints the same exchange again
+        (n,) = set(re.findall(r"hashpartitioning\(xxhash64\(url#\d+, "
+                              r"42\), (\d+)\)", plan))
+        return int(n)
+
+    assert balance_tasks(0) == slots * 4  # in-memory: size unknown
+    assert balance_tasks(1 << 20) == slots
+    assert balance_tasks(int(2.5 * slots * open_cost)) == slots * 3
+    assert balance_tasks(1 << 40, balance=True) == slots * 4
+    assert balance_tasks(-1, balance=True) == slots * 4  # remote store
+    assert balance_tasks(1 << 20, partitions=7) == 7
+
+
 def test_oversize_payload_guard(monkeypatch):
     """Reference parity (Claude.md:204, 50 MB upload cap): oversized
     payloads become error records without entering the kernels. Tested

@@ -21,6 +21,24 @@ def _write_zip(path, modules: list[str]) -> None:
             zf.writestr(f"wd_zip_pkg/{name}.py", f"VALUE = {name!r}\n")
 
 
+def _run_driver(tmp_path, body: str) -> str:
+    """Run ``body`` as a driver script started in ``tmp_path`` with no
+    PYTHONPATH (``build_session`` imported); return its stdout."""
+    script = tmp_path / "job.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "from ocr_engine_spark.engine.session import build_session\n"
+        + body)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    return out.stdout
+
+
 def test_zip_guard_rereads_only_changed_archives(tmp_path, monkeypatch):
     from ocr_engine_spark.engine import worker_daemon
 
@@ -102,8 +120,11 @@ def test_workers_run_guarded_and_frozen(spark):
 
 
 def test_worker_imports_no_pandas():
-    """The extraction worker's import set (pyspark's worker, the job
-    module, its kernels and the daemon) does not load pandas."""
+    """The extraction worker's import chain (pyspark's worker, the job
+    module, its kernels and the daemon) does not load pandas. Workers
+    still load it: pyarrow imports pandas on a worker's first
+    ``pa.array`` call over a Python list, which every extraction task
+    makes."""
     code = (
         "import sys, pyspark.worker, ocr_engine_spark.engine.extract_job, "
         "ocr_engine_spark.engine.worker_daemon, "
@@ -114,6 +135,47 @@ def test_worker_imports_no_pandas():
                          capture_output=True, text=True, check=True,
                          timeout=120)
     assert out.stdout.strip() == "False"
+
+
+def test_workers_refreeze_after_late_imports(tmp_path):
+    """A reused worker whose later task imports modules (here pandas,
+    which pyarrow loads on the first ``pa.array`` over a Python list)
+    freezes its heap again, so the collection after each task walks
+    only what tasks allocate."""
+    out = _run_driver(
+        tmp_path,
+        "def passthrough(batches):\n"
+        "    yield from batches\n"
+        "def from_list(batches):\n"
+        "    import pyarrow as pa\n"
+        "    for b in batches:\n"
+        "        yield pa.RecordBatch.from_arrays(\n"
+        "            [pa.array(b.column(0).to_pylist(), pa.int64())],\n"
+        "            names=['id'])\n"
+        "def probe(batches):\n"
+        "    import gc, os\n"
+        "    import pyarrow as pa\n"
+        "    for _ in batches:\n"
+        "        pass\n"
+        "    yield pa.RecordBatch.from_pydict({\n"
+        "        'pid': [os.getpid()], 'frozen': [gc.get_freeze_count()],\n"
+        "        'unfrozen': [len(gc.get_objects())]})\n"
+        "spark = build_session('refreeze-test', master='local[4]')\n"
+        "def run(fn, schema):\n"
+        "    return spark.range(0, 160, 1, 16).mapInArrow(fn, schema)"
+        ".collect()\n"
+        "spark.range(0, 4, 1, 4).mapInArrow(passthrough, 'id long')"
+        ".collect()\n"
+        "run(from_list, 'id long')\n"
+        "for r in run(probe, 'pid long, frozen long, unfrozen long'):\n"
+        "    print(r.pid, r.frozen, r.unfrozen)\n"
+        "spark.stop()\n")
+    rows = [tuple(map(int, line.split())) for line in out.splitlines()]
+    assert len(rows) == 16
+    reused = [unfrozen for _, frozen, unfrozen in rows if frozen]
+    assert reused
+    # a first-task-only freeze left ~32k objects (pandas) unfrozen here
+    assert max(reused) < 1000, rows
 
 
 def test_worker_conf_only_on_local_masters():
@@ -133,11 +195,8 @@ def test_worker_conf_only_on_local_masters():
 def test_workers_import_package_from_any_cwd(tmp_path):
     """A driver started outside the repository, with no PYTHONPATH, runs
     a Python stage whose workers import this package."""
-    script = tmp_path / "job.py"
-    script.write_text(
-        "import sys\n"
-        f"sys.path.insert(0, {REPO!r})\n"
-        "from ocr_engine_spark.engine.session import build_session\n"
+    out = _run_driver(
+        tmp_path,
         "def kernel(batches):\n"
         "    from ocr_engine_spark.kernels.clean import clean_text\n"
         "    import pyarrow as pa\n"
@@ -149,10 +208,4 @@ def test_workers_import_package_from_any_cwd(tmp_path):
         ".collect()\n"
         "print(sorted(r.t for r in rows))\n"
         "spark.stop()\n")
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
-    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
-                         env=env, capture_output=True, text=True,
-                         timeout=300)
-    assert out.returncode == 0, out.stderr[-3000:]
-    assert out.stdout.strip().splitlines()[-1] == str(["a b"] * 4)
+    assert out.strip().splitlines()[-1] == str(["a b"] * 4)

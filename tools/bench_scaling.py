@@ -208,12 +208,14 @@ control does not, so this pair understates the plan. On a real N- vs
 own Python workers, so the 2->8 (pre-saturation) pair is the faithful
 proxy for the north rule.
 
-Why the plan scales: scan -> `repartition(4 x cores, xxhash64(url))`
--> ONE mapInArrow kernel stage -> sink. The only shuffle is the
-explicit load-balancing repartition (measured < 1 s of the total);
-kernel work is embarrassingly parallel; 4 tasks/slot amortizes the
-~10x per-doc cost variance (PDF layout vs HTML) so the last wave has
-no stragglers; nothing is driver-bound or single-partition.
+Why the plan scales: scan -> `repartition(P, xxhash64(url))`, P = 1-4
+full waves of `cores` tasks sized by input bytes (only when the scan
+itself under-parallelizes) -> ONE mapInArrow kernel stage -> sink. The
+only shuffle is the explicit load-balancing repartition (measured < 1 s
+of the total); kernel work is embarrassingly parallel; full waves of up
+to 4 tasks/slot amortize the ~10x per-doc cost variance (PDF layout vs
+HTML) so the last wave has no stragglers; nothing is driver-bound or
+single-partition.
 
 Reproduce: `python tools/bench_scaling.py`.
 

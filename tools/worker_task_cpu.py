@@ -1,15 +1,19 @@
-"""Per-task CPU of the Python workers on a pass-through ``mapInArrow``.
+"""Per-task CPU of the Python workers on a near-empty ``mapInArrow``.
 
     python tools/worker_task_cpu.py
 
 Run from the repository root. Builds a session with ``build_session`` at
-``local[4]``, warms the workers with one task per core, then runs a
-pass-through ``mapInArrow`` over ``spark.range(1000)`` in 64 partitions
-into a noop sink, five times. For each run it reads the user+system CPU
-of every Python process under the JVM (daemon, workers, reaped workers
-included) from /proc and divides by the task count, so the number is the
-worker's fixed per-task cost: the UDF body does nothing. Prints one
-JSON line with the per-run values and their median.
+``local[4]``, warms the workers with one pass-through task per core, then
+runs a ``mapInArrow`` over ``spark.range(1000)`` in 64 partitions into a
+noop sink, five times. The measured body rebuilds each batch from a
+Python list with ``pa.array``, as the extraction kernel builds its
+output columns; pyarrow imports pandas on a worker's first such call, so
+the measured tasks carry the heap an extraction worker carries. For each
+run it reads the user+system CPU of every Python process under the JVM
+(daemon, workers, reaped workers included) from /proc and divides by the
+task count, so the number is the worker's fixed per-task cost: the UDF
+body does almost nothing. Prints one JSON line with the per-run values
+and their median.
 """
 
 from __future__ import annotations
@@ -64,20 +68,27 @@ def _passthrough(batches):
     yield from batches
 
 
+def _from_list(batches):
+    import pyarrow as pa
+    for rb in batches:
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(rb.column(0).to_pylist(), pa.int64())], names=["id"])
+
+
 def main() -> None:
     from ocr_engine_spark.engine.session import build_session
     spark = build_session("worker-task-cpu", master=f"local[{CORES}]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run(rows: int, parts: int) -> None:
-        (spark.range(0, rows, 1, parts).mapInArrow(_passthrough, "id long")
+    def run(body, rows: int, parts: int) -> None:
+        (spark.range(0, rows, 1, parts).mapInArrow(body, "id long")
          .write.format("noop").mode("overwrite").save())
 
-    run(CORES, CORES)
+    run(_passthrough, CORES, CORES)
     per_task_ms = []
     for _ in range(REPEATS):
         cpu = python_worker_cpu_s()
-        run(ROWS, PARTITIONS)
+        run(_from_list, ROWS, PARTITIONS)
         per_task_ms.append((python_worker_cpu_s() - cpu) * 1e3 / PARTITIONS)
     spark.stop()
     print(json.dumps({
