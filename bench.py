@@ -1,6 +1,7 @@
 """Benchmark harness (driver contract): run the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run
+on) and print ONE JSON line::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": ..., "docs_per_sec": ...}
@@ -8,8 +9,8 @@
 The flagship number is the extraction job itself (docs/sec over a
 deterministically generated pages corpus scaled to the SF), plus the
 relational / text-pipeline / dedup / similarity headline queries from
-``__spark_entry__.queries()``. Scaling-efficiency evidence (local[8] vs
-local[32]) lives in tools/bench_scaling.py -> BENCH.md.
+``__spark_entry__.queries()``. Scaling-efficiency evidence (N vs 4N
+pinned cores) lives in tools/bench_scaling.py -> BENCH.md.
 """
 
 from __future__ import annotations
@@ -134,7 +135,8 @@ def _box_health(pool, n_workers: int) -> float:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = _sf_of(sf_dir)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = (os.environ.get("SPARK_GRAFT_CPUS")
+            or str(len(os.sched_getaffinity(0))))
 
     import __spark_entry__ as entrymod
     from ocr_engine_spark.engine.extract_job import extract_pages, read_pages

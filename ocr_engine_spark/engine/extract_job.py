@@ -4,12 +4,13 @@ Spark lifecycle (the DataFrame mirror of the reference's POST /ocr path,
 ``api_gateway.py:94-105`` -> ``services/surya/surya_service.py:83-135``):
 
   read pages (url, warc_ts, html, text, lang)
-    -> payload-kind classification (magic bytes; JVM-side)
     -> repartition(P, xxhash64(url))         # load-balance kernel cost
     -> mapInArrow(extract_batch_arrow)       # ONE Arrow-batched Python
-         html: DOM parse + densitometric block scoring
-         pdf:  text-layer layout analysis
-         + clean_text (5-step pipeline) in the same pass
+         per doc, kernels/document.extract_document:
+           size cap + magic-byte payload kind (html | pdf | oversize)
+           html: DOM parse + densitometric block scoring
+           pdf:  text-layer layout analysis
+           + clean_text (5-step pipeline) in the same pass
          + provider + 13 regex fields + raw_response   # T11/T13,
            kernels/fields.py over each doc's cleaned text
          + per-doc timing, per-batch lineage counters
@@ -76,10 +77,6 @@ EXTRACT_SCHEMA = StructType([
     StructField("raw_response", StringType()),
 ])
 
-# parity with the reference's upload size guard (Claude.md:204 — 50 MB
-# max file size): oversized payloads become error RECORDS, not failures
-MAX_PAYLOAD_BYTES = 50 * 1024 * 1024
-
 PAGES_SCHEMA = StructType([
     StructField("url", StringType()),
     StructField("warc_ts", TimestampType()),
@@ -87,6 +84,14 @@ PAGES_SCHEMA = StructType([
     StructField("text", StringType()),
     StructField("lang", StringType()),
 ])
+
+
+# the columns extract_batch_arrow builds per doc, in EXTRACT_SCHEMA order;
+# the rest of the schema passes through or is constant per batch
+_BUILT_COLUMNS = ("payload_kind", "extracted_text", "clean_text", "spans",
+                  "n_blocks", "confidence", "status", "error",
+                  "processing_ms", "provider", *FIELD_PATTERNS,
+                  "raw_response")
 
 
 def extract_batch_arrow(batches):
@@ -101,74 +106,35 @@ def extract_batch_arrow(batches):
     surya_service.py:55-75).
     """
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from ocr_engine_spark.kernels.clean import clean_text
-    from ocr_engine_spark.kernels.html_extract import extract_html
-    from ocr_engine_spark.kernels.pdf_extract import extract_pdf
+    from ocr_engine_spark.kernels.document import extract_document
 
-    span_t = pa.list_(pa.struct([
-        ("start", pa.int64()), ("end", pa.int64()),
-        ("block_id", pa.int64()), ("kind", pa.string())]))
-    # bill_row's columns: provider through raw_response, the schema's tail
-    bill_t = [to_arrow_type(f.dataType) for f in EXTRACT_SCHEMA.fields[
-        EXTRACT_SCHEMA.names.index("provider"):]]
+    schema = to_arrow_schema(EXTRACT_SCHEMA)
     batch_seq = 0
     for rb in batches:
-        names = rb.schema.names
-        col = {n: rb.column(i) for i, n in enumerate(names)}
-        kinds, texts, cleans, spans_col, n_blocks = [], [], [], [], []
-        confs, statuses, errors, times, bills = [], [], [], [], []
+        col = dict(zip(rb.schema.names, rb.columns))
+        rows = []
         for url, payload in zip(col["url"].to_pylist(), col["html"]):
             t0 = time.perf_counter()
-            raw = payload.as_py() or b""
-            if len(raw) > MAX_PAYLOAD_BYTES:
-                kind = "oversize"
-                res = {"text": None, "spans": [], "n_blocks": 0,
-                       "confidence": None, "status": "error",
-                       "error": f"payload exceeds {MAX_PAYLOAD_BYTES} "
-                                f"bytes"}
-            elif raw.startswith(b"%PDF"):
-                kind = "pdf"
-                res = extract_pdf(raw)
-            else:
-                kind = "html"
-                res = extract_html(raw)
-            txt = res["text"]
-            kinds.append(kind)
-            texts.append(txt)
+            kind, res = extract_document(payload.as_py())
+            ms = (time.perf_counter() - t0) * 1000.0
+            txt, cleaned = res["text"], res["clean"]
             # delta encoding: clean_text crosses the Arrow socket only
             # when it differs from extracted_text (usually it doesn't —
             # extraction output is already tidy); the JVM-side coalesce
-            # in extract_pages restores the full column byte-identically
-            cleaned = clean_text(txt) if txt is not None else None
-            cleans.append(cleaned if cleaned != txt else None)
-            spans_col.append([(s["start"], s["end"], s["block_id"],
-                               s["kind"]) for s in res["spans"]])
-            n_blocks.append(res["n_blocks"])
-            confs.append(res["confidence"])
-            statuses.append(res["status"])
-            errors.append(res["error"])
-            times.append((time.perf_counter() - t0) * 1000.0)
-            # T11/T13 over the full cleaned text (before delta encoding)
-            bills.append(bill_row(cleaned, url))
-        n = rb.num_rows
-        bill_cols = zip(*bills) if bills else [[]] * len(bill_t)
-        yield pa.RecordBatch.from_arrays([
-            col["url"], col["warc_ts"], col["lang"],
-            pa.array(kinds, pa.string()),
-            pa.array(texts, pa.string()),
-            pa.array(cleans, pa.string()),
-            pa.array(spans_col, span_t),
-            pa.array(n_blocks, pa.int32()),
-            pa.array(confs, pa.float64()),
-            pa.array(statuses, pa.string()),
-            pa.array(errors, pa.string()),
-            pa.array(times, pa.float64()),
-            col["partition_id"],
-            pa.array([batch_seq] * n, pa.int32()),
-            *[pa.array(c, t) for c, t in zip(bill_cols, bill_t)],
-        ], names=[f.name for f in EXTRACT_SCHEMA.fields])
+            # in extract_pages restores the full column byte-identically.
+            # T11/T13: bill_row reads the full cleaned text
+            rows.append((kind, txt, cleaned if cleaned != txt else None,
+                         res["spans"], res["n_blocks"], res["confidence"],
+                         res["status"], res["error"], ms,
+                         *bill_row(cleaned, url)))
+        built = (dict(zip(_BUILT_COLUMNS, zip(*rows))) if rows
+                 else dict.fromkeys(_BUILT_COLUMNS, ()))
+        built["batch_seq"] = [batch_seq] * rb.num_rows
+        yield pa.RecordBatch.from_arrays(
+            [col[f.name] if f.name in col else pa.array(built[f.name], f.type)
+             for f in schema], names=schema.names)
         batch_seq += 1
 
 
@@ -228,23 +194,22 @@ def _balance_partitions(spark, input_bytes: int, slots: int) -> int:
 
 
 def extract_pages(pages: DataFrame, *, partitions: int | None = None,
-                  balance: bool | str = "auto",
                   with_fields: bool = True) -> DataFrame:
     """pages DataFrame -> extractions DataFrame.
 
-    Load-balancing (``balance``): per-doc cost varies ~10x between PDF
-    layout and HTML, so the kernel stage wants several tasks per slot to
-    amortize stragglers. But an unconditional ``repartition`` shuffles
-    the FULL payload bytes — at table scale that is a 100 TB shuffle
-    bought only for load-balancing. Default ``"auto"`` therefore
-    shuffles ONLY when the scan under-parallelizes (input splits < 4
-    tasks per executor slot — true for a small/one-file corpus, never
-    true for a 10^12-row table whose scan yields millions of
-    size-bounded splits). The 4x margin matters empirically, not just
-    for stragglers: at pinned 8 cores a one-file ~850 MB corpus yields
-    ~13 64 MB splits, which clears an ``< slots`` test yet schedules as
-    2 ragged waves (+28% wall measured, and the 2->8 scaling leg drops
-    below the north rule's 0.8 on exactly this cliff).
+    Load-balancing: per-doc cost varies ~10x between PDF layout and
+    HTML, so the kernel stage wants several tasks per slot to amortize
+    stragglers. But an unconditional ``repartition`` shuffles the FULL
+    payload bytes — at table scale that is a 100 TB shuffle bought only
+    for load-balancing. The url-hash shuffle is therefore bought ONLY
+    when the scan under-parallelizes (input splits < 4 tasks per
+    executor slot — true for a small/one-file corpus, never true for a
+    10^12-row table whose scan yields millions of size-bounded splits).
+    The 4x margin matters empirically, not just for stragglers: at
+    pinned 8 cores a one-file ~850 MB corpus yields ~13 64 MB splits,
+    which clears an ``< slots`` test yet schedules as 2 ragged waves
+    (+28% wall measured, and the 2->8 scaling leg drops below the north
+    rule's 0.8 on exactly this cliff).
 
     How many tasks the balance shuffle makes is sized by input bytes:
     ``slots * clamp(ceil(bytes / (slots * openCost)), 1, 4)`` with
@@ -258,29 +223,24 @@ def extract_pages(pages: DataFrame, *, partitions: int | None = None,
     balance tasks), more than the kernel work of a 1/16 share of a
     1-5 MB corpus. So a corpus under ``slots * openCost`` gets one task
     per slot, and 4 tasks per slot only above ``3 * slots * openCost``.
-    Unknown size (in-memory, or a remote store under a forced shuffle)
-    keeps 4 tasks per slot.
+    Unknown size (in-memory) keeps 4 tasks per slot.
 
-    ``True``/``partitions=N`` force the shuffle (layout-known-bad
-    inputs; ``N`` also fixes the task count), ``False`` never shuffles.
-    Hash key xxhash64(url) is skew-free by construction (urls unique);
-    for host-keyed downstream ops use functions/skew.py salting.
+    ``partitions=N`` forces the shuffle into ``N`` tasks (layout-known-
+    bad inputs). A streaming input never shuffles unless forced:
+    micro-batch sizing governs its parallelism. Hash key xxhash64(url)
+    is skew-free by construction (urls unique); for host-keyed
+    downstream ops use functions/skew.py salting.
     """
     spark = pages.sparkSession
     slots = spark.sparkContext.defaultParallelism
     staged = pages.select("url", "warc_ts", "html", "lang")  # column
     # pruning: never carry the naive `text` dump into the kernel stage
-    # (streaming input: micro-batch sizing governs parallelism — never
-    # buy a balance shuffle, and inputFiles() is undefined)
-    sized = (partitions is None and balance is not False
-             and not staged.isStreaming)
-    input_bytes = _local_input_bytes(staged) if sized else 0
-    do_shuffle = balance is True or partitions is not None
-    if balance == "auto" and sized:
-        do_shuffle = _estimated_scan_splits(input_bytes) < slots * 4
-    if do_shuffle:
-        p = partitions or _balance_partitions(spark, input_bytes, slots)
-        staged = staged.repartition(p, F.xxhash64("url"))
+    if partitions is None and not staged.isStreaming:
+        input_bytes = _local_input_bytes(staged)
+        if _estimated_scan_splits(input_bytes) < slots * 4:
+            partitions = _balance_partitions(spark, input_bytes, slots)
+    if partitions is not None:
+        staged = staged.repartition(partitions, F.xxhash64("url"))
     staged = staged.withColumn("partition_id", F.spark_partition_id())
     out = staged.mapInArrow(extract_batch_arrow, EXTRACT_SCHEMA)
     # undo the kernel's clean_text delta encoding (null == "same as
@@ -292,17 +252,15 @@ def extract_pages(pages: DataFrame, *, partitions: int | None = None,
     return out
 
 
-def read_pages(spark: "SparkSession", path: str, *,
-               autosplit: bool = True) -> DataFrame:
+def read_pages(spark: "SparkSession", path: str) -> DataFrame:
     """Catalog-agnostic pages scan (Iceberg table name or parquet path —
     sandbox has no Iceberg jars; see engine/catalog.py seam).
 
-    ``autosplit`` (default on): when a LOCAL corpus layout
-    under-parallelizes the scan (< 4 splits per executor slot — the
-    one-big-file fixture regime), lower
+    When a LOCAL corpus layout under-parallelizes the scan (< 4 splits
+    per executor slot — the one-big-file fixture regime), lower
     ``spark.sql.files.maxPartitionBytes`` so the SCAN ITSELF yields
-    that parallelism instead of letting extract_pages' auto-balance
-    buy a full-payload repartition. Measured at pinned cores on the
+    that parallelism instead of letting extract_pages buy a
+    full-payload repartition. Measured at pinned cores on the
     36800-page corpus: the payload shuffle drags the 2->8 scaling leg
     from 0.89 to 0.73 and costs ~2x the whole JVM->Arrow plumbing —
     splitting at the source is strictly better whenever the layout
@@ -310,20 +268,19 @@ def read_pages(spark: "SparkSession", path: str, *,
     writer uses 512-row groups precisely so it can). Floor 16 MB so a
     tiny corpus never degenerates to per-row-group tasks. NOTE: this
     sets a SESSION conf (file-scan splits are decided at execution
-    time, a per-read option does not exist) — it only ever lowers the
-    value, and a 10^12-row table never triggers it (its scan already
-    yields millions of splits). Remote stores are untouched."""
+    time from the session conf, a per-read option does not exist) — it
+    only ever lowers the value, and a 10^12-row table never triggers it
+    (its scan already yields millions of splits). Remote stores are
+    untouched."""
     df = spark.read.schema(PAGES_SCHEMA).parquet(path)
-    if autosplit:
-        slots = spark.sparkContext.defaultParallelism
-        total = _local_input_bytes(df)
-        want = slots * 4
-        split = _size_conf(spark, "spark.sql.files.maxPartitionBytes",
-                           128 << 20)
-        if total > 0 and -(-total // split) < want:
-            target = max(16 << 20, total // want)
-            if target < split:
-                spark.conf.set("spark.sql.files.maxPartitionBytes",
-                               str(int(target)))
-                df = spark.read.schema(PAGES_SCHEMA).parquet(path)
+    slots = spark.sparkContext.defaultParallelism
+    total = _local_input_bytes(df)
+    want = slots * 4
+    split = _size_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+    if total > 0 and -(-total // split) < want:
+        target = max(16 << 20, total // want)
+        if target < split:
+            spark.conf.set("spark.sql.files.maxPartitionBytes",
+                           str(int(target)))
+            df = spark.read.schema(PAGES_SCHEMA).parquet(path)
     return df

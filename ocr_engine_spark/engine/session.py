@@ -38,14 +38,15 @@ def worker_conf(master: str) -> dict[str, str]:
     }
 
 
+# Arrow batch size is deliberately LOW (rows are whole web pages,
+# multi-KB to multi-MB each; extraction cost varies ~100x per doc) —
+# batches are sized by bytes-in-flight, not row count (SURVEY.md §7.2
+# kernel-cost-variance note)
+ARROW_BATCH_ROWS = 256
+
+
 def build_session(app: str = "ocr-engine-spark", master: str | None = None,
-                  shuffle_partitions: int | None = None,
-                  arrow_batch_rows: int = 256) -> SparkSession:
-    """Arrow batch size is deliberately LOW (rows are whole web pages,
-    multi-KB to multi-MB each; extraction cost varies ~100x per doc) —
-    batches are sized by bytes-in-flight, not row count
-    (SURVEY.md §7.2 kernel-cost-variance note).
-    """
+                  shuffle_partitions: int | None = None) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
         f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     cores = os.cpu_count() or 8
@@ -60,7 +61,7 @@ def build_session(app: str = "ocr-engine-spark", master: str | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(arrow_batch_rows))
+                str(ARROW_BATCH_ROWS))
         # pages rows are fat (binary html) — keep scan splits modest so a
         # partition of payloads fits executor memory at any SF
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))

@@ -52,45 +52,22 @@ def freeze_extractions(corpus_dir: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ocr_engine_spark.engine.extract_job import MAX_PAYLOAD_BYTES
-    from ocr_engine_spark.kernels.clean import clean_text
-    from ocr_engine_spark.kernels.html_extract import extract_html
+    from ocr_engine_spark.kernels.document import extract_document
     from ocr_engine_spark.kernels.markdown import render_markdown
-    from ocr_engine_spark.kernels.pdf_extract import extract_pdf
 
     pages = pq.read_table(os.path.join(corpus_dir, "pages.parquet"),
                           columns=["url", "html"])
-    urls, kinds, texts, cleans, confs, statuses = [], [], [], [], [], []
-    markdowns = []
-    for url, payload in zip(pages.column("url").to_pylist(),
-                            pages.column("html").to_pylist()):
-        raw = payload or b""
-        if len(raw) > MAX_PAYLOAD_BYTES:  # same guard as extract_batch_arrow
-            kind, res = "oversize", {
-                "text": None, "clean": None, "confidence": None,
-                "status": "error"}
-            urls.append(url)
-            kinds.append(kind)
-            texts.append(None)
-            cleans.append(None)
-            confs.append(None)
-            statuses.append("error")
-            markdowns.append(None)
-            continue
-        if raw.startswith(b"%PDF"):
-            kind, res = "pdf", extract_pdf(raw)
-        else:
-            kind, res = "html", extract_html(raw)
-        txt = res["text"]
-        urls.append(url)
+    kinds, texts, cleans, confs, statuses, markdowns = [], [], [], [], [], []
+    for payload in pages.column("html").to_pylist():
+        kind, res = extract_document(payload)
         kinds.append(kind)
-        texts.append(txt)
-        cleans.append(clean_text(txt) if txt is not None else None)
+        texts.append(res["text"])
+        cleans.append(res["clean"])
         confs.append(res["confidence"])
         statuses.append(res["status"])
-        markdowns.append(render_markdown(txt, res["spans"]))
+        markdowns.append(render_markdown(res["text"], res["spans"]))
     out = pa.table({
-        "url": pa.array(urls, pa.string()),
+        "url": pages.column("url"),
         "payload_kind": pa.array(kinds, pa.string()),
         "extracted_text": pa.array(texts, pa.string()),
         "clean_text": pa.array(cleans, pa.string()),

@@ -76,7 +76,7 @@ def brute_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
 
 def ivf_assign(embeddings: DataFrame, centroids: list[tuple[int, list[float]]],
                id_col: str = "vec_id", vec_col: str = "embedding",
-               n_assign: int = 1, method: str = "auto") -> DataFrame:
+               n_assign: int = 1) -> DataFrame:
     """Assign every vector to its nearest centroid(s) — MAP-ONLY: no
     crossJoin, no window, no shuffle: at 10^12 rows assignment is
     embarrassingly parallel and the shuffle (if any) is the caller's
@@ -99,8 +99,8 @@ def ivf_assign(embeddings: DataFrame, centroids: list[tuple[int, list[float]]],
         SQL oracles keep passing. ~100x faster at k >= 32; the ONLY
         viable shape at SemDeDup scale (paper: 110k centroids).
 
-    ``auto`` picks arrow when k x dim > 1024 (interpreted-fold cost
-    crosses the Arrow serialization overhead), fold otherwise.
+    Arrow runs when k x dim > 1024 (interpreted-fold cost crosses the
+    Arrow serialization overhead), fold otherwise.
 
     Centroids are L2-normalized driver-side so per-row score =
     dot(v, unit_centroid); dividing by |v| (common positive factor)
@@ -114,14 +114,19 @@ def ivf_assign(embeddings: DataFrame, centroids: list[tuple[int, list[float]]],
     straddle two cells — is findable from either, which is what lifts
     probe recall on weakly-clustered corpora. Costs 2x index storage;
     probes must dedupe on id (IvfIndex.topk / ivf_topk do)."""
-    import math
     assert n_assign in (1, 2)
-    assert method in ("auto", "fold", "arrow")
-    if method == "auto":
-        dim = len(centroids[0][1]) if centroids else 0
-        method = "arrow" if len(centroids) * dim > 1024 else "fold"
-    if method == "arrow":
-        return _ivf_assign_arrow(embeddings, centroids, vec_col, n_assign)
+    dim = len(centroids[0][1]) if centroids else 0
+    strategy = (_ivf_assign_arrow if len(centroids) * dim > 1024
+                else _ivf_assign_fold)
+    return strategy(embeddings, centroids, vec_col, n_assign)
+
+
+def _ivf_assign_fold(embeddings: DataFrame,
+                     centroids: list[tuple[int, list[float]]],
+                     vec_col: str, n_assign: int) -> DataFrame:
+    """Fold strategy for ivf_assign: pure JVM expressions, see its
+    docstring."""
+    import math
     cstructs = []
     for cid, vec in centroids:
         nrm = math.sqrt(sum(float(x) * float(x) for x in vec)) or 1.0

@@ -28,6 +28,8 @@ import re
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
 
+from ocr_engine_spark.kernels import assemble_blocks, error_record
+
 # --- tuning constants (fixed; part of the golden contract once frozen) ---
 LINK_DENSITY_MAX = 0.33
 MIN_WORDS = 8           # long-block threshold (word units)
@@ -360,17 +362,11 @@ def classify_blocks(blocks: list[Block]) -> list[bool]:
 def extract_html(payload: bytes) -> dict:
     """Extract main text + spans from one HTML payload.
 
-    Returns ``{text, spans, n_blocks, confidence, status, error}`` where
-    ``spans`` is a list of ``(start, end, block_id, kind)`` char offsets
-    into ``text`` (the span-offsets contract of the golden fixtures) and
-    ``status`` / ``error`` follow the reference's OCRResponse shape
-    (surya_service.py:47-53). ``confidence`` is the T4 analog of the
-    reference's mean per-line OCR confidence (surya_service.py:119-127,
-    OCRResponse.confidence :47-53): the mean over emitted blocks of a
-    deterministic densitometric block score
+    Returns the kernels' record (``kernels.assemble_blocks``): one span
+    per emitted block, blocks joined by a newline. A block's confidence
+    score is the deterministic densitometric
     ``(1 - link_density) * min(1, word_units / (2*MIN_WORDS))`` — how
-    decisively each block passed classification — and ``None`` when no
-    blocks were emitted (the reference's confidence_count == 0 case).
+    decisively it passed classification.
     """
     try:
         doc = sniff_decode(payload)
@@ -378,30 +374,11 @@ def extract_html(payload: bytes) -> dict:
         parser.feed(doc)
         parser.close()
         keep = classify_blocks(parser.blocks)
-        out_blocks = [b for b, k in zip(parser.blocks, keep) if k]
-        spans = []
-        pieces = []
-        pos = 0
-        score_total = 0.0
-        for out_id, b in enumerate(out_blocks):
-            t = b.text
-            # block_id = index within the EMITTED text (span contract);
-            # the DOM ordinal stays available as Block.block_id internally
-            spans.append({"start": pos, "end": pos + len(t),
-                          "block_id": out_id, "kind": b.kind})
-            pieces.append(t)
-            pos += len(t) + 1  # '\n' separator
-            score_total += (1.0 - b.link_density) * min(
-                1.0, b.word_units / (2.0 * MIN_WORDS))
-        return {
-            "text": "\n".join(pieces),
-            "spans": spans,
-            "n_blocks": len(out_blocks),
-            "confidence": (score_total / len(out_blocks)
-                           if out_blocks else None),
-            "status": "success",
-            "error": None,
-        }
+        # block_id = index within the EMITTED text (span contract); the
+        # DOM ordinal stays available as Block.block_id internally
+        return assemble_blocks(
+            [(b.text, b.kind, (1.0 - b.link_density)
+              * min(1.0, b.word_units / (2.0 * MIN_WORDS)))
+             for b, k in zip(parser.blocks, keep) if k], "\n")
     except Exception as exc:  # poison-row tolerance
-        return {"text": None, "spans": [], "n_blocks": 0,
-                "confidence": None, "status": "error", "error": str(exc)}
+        return error_record(str(exc))

@@ -34,6 +34,8 @@ import re
 import zlib
 from operator import itemgetter
 
+from ocr_engine_spark.kernels import assemble_blocks, error_record
+
 _BY_X = itemgetter(0)
 _BY_Y = itemgetter(1)
 
@@ -308,10 +310,10 @@ def _expand_object_streams(objs: dict[int, bytes]) -> None:
 def extract_pdf(payload: bytes) -> dict:
     """Extract text + spans from one PDF payload.
 
-    Same return contract as ``html_extract.extract_html``; multi-page
-    documents join page texts with the PAGE_BREAK sentinel byte-exactly
-    (raw_text_ground_truth.json:28). Spans carry one entry per page
-    block with kind='page'.
+    Returns the kernels' record (``kernels.assemble_blocks``) with one
+    span of kind='page' per page; multi-page documents join page texts
+    with the PAGE_BREAK sentinel byte-exactly
+    (raw_text_ground_truth.json:28).
     """
     try:
         objs: dict[int, bytes] = {
@@ -339,23 +341,11 @@ def extract_pdf(payload: bytes) -> dict:
             else:  # inline contents stream on the page object
                 stream = _resolve_stream(body)
             page_texts.append(_layout(_parse_content_stream(stream)))
-        text = PAGE_BREAK.join(page_texts)
-        spans = []
-        pos = 0
-        score_total = 0.0
-        for i, pt in enumerate(page_texts):
-            spans.append({"start": pos, "end": pos + len(pt),
-                          "block_id": i, "kind": "page"})
-            pos += len(pt) + len(PAGE_BREAK)
-            # layout confidence (T4 analog, surya_service.py:119-127):
-            # a page whose stream yielded several clustered lines parsed
-            # decisively; empty/one-line pages score low
-            n_lines = pt.count("\n") + 1 if pt else 0
-            score_total += min(1.0, n_lines / 8.0)
-        return {"text": text, "spans": spans, "n_blocks": len(page_texts),
-                "confidence": (score_total / len(page_texts)
-                               if page_texts else None),
-                "status": "success", "error": None}
+        # layout confidence (T4 analog, surya_service.py:119-127): a page
+        # whose stream yielded several clustered lines parsed decisively;
+        # empty/one-line pages score low
+        return assemble_blocks(
+            [(pt, "page", min(1.0, (pt.count("\n") + 1 if pt else 0) / 8.0))
+             for pt in page_texts], PAGE_BREAK)
     except Exception as exc:
-        return {"text": None, "spans": [], "n_blocks": 0,
-                "confidence": None, "status": "error", "error": str(exc)}
+        return error_record(str(exc))

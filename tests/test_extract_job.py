@@ -152,26 +152,30 @@ def test_raw_response_fallback(spark):
     assert k2["raw_response"] is None
 
 
-def test_balance_modes_plan(pages_df):
-    """'auto' shuffles only when the scan under-parallelizes; False
-    never buys the full-payload shuffle (the default path at table
-    scale has NO Exchange before the kernel stage)."""
-    from ocr_engine_spark.engine.extract_job import extract_pages
+def test_balance_modes_plan(pages_df, monkeypatch):
+    """The default shuffles only when the scan under-parallelizes; a
+    scan that already yields enough splits never buys the
+    full-payload shuffle (the default path at table scale has NO
+    Exchange before the kernel stage); ``partitions`` forces it."""
+    from ocr_engine_spark.engine import extract_job
 
     def upto_kernel(plan: str) -> str:
         return plan.split("MapInArrow")[-1]  # below = upstream of kernel
 
-    never = extract_pages(pages_df, balance=False, with_fields=False)
-    plan_never = never._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in upto_kernel(plan_never)
-    forced = extract_pages(pages_df, balance=True, with_fields=False)
+    forced = extract_job.extract_pages(pages_df, partitions=3,
+                                       with_fields=False)
     plan_forced = forced._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" in upto_kernel(plan_forced)
     # this corpus is one small file -> fewer scan splits than slots ->
     # auto must load-balance
-    auto = extract_pages(pages_df, with_fields=False)
+    auto = extract_job.extract_pages(pages_df, with_fields=False)
     plan_auto = auto._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" in upto_kernel(plan_auto)
+    # a remote store (size -1) is trusted to split its own scan
+    monkeypatch.setattr(extract_job, "_local_input_bytes", lambda df: -1)
+    never = extract_job.extract_pages(pages_df, with_fields=False)
+    plan_never = never._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in upto_kernel(plan_never)
 
 
 def test_auto_balance_wants_four_tasks_per_slot(pages_df, monkeypatch):
@@ -213,9 +217,12 @@ def test_balance_partitions_sized_by_input_bytes(pages_df, monkeypatch):
     open_cost = extract_job._size_conf(
         spark, "spark.sql.files.openCostInBytes", 4 << 20)
 
-    def balance_tasks(input_bytes, **kw):
+    def balance_tasks(input_bytes, splits=None, **kw):
         monkeypatch.setattr(extract_job, "_local_input_bytes",
                             lambda df: input_bytes)
+        if splits is not None:  # a scan of this many splits
+            monkeypatch.setattr(extract_job, "_estimated_scan_splits",
+                                lambda input_bytes: splits)
         plan = (extract_job.extract_pages(pages_df, with_fields=False, **kw)
                 ._jdf.queryExecution().executedPlan().toString())
         # a cached extraction with the same plan shows up as its
@@ -227,8 +234,9 @@ def test_balance_partitions_sized_by_input_bytes(pages_df, monkeypatch):
     assert balance_tasks(0) == slots * 4  # in-memory: size unknown
     assert balance_tasks(1 << 20) == slots
     assert balance_tasks(int(2.5 * slots * open_cost)) == slots * 3
-    assert balance_tasks(1 << 40, balance=True) == slots * 4
-    assert balance_tasks(-1, balance=True) == slots * 4  # remote store
+    # 1 TB and a remote store, on a scan patched to under-parallelize
+    assert balance_tasks(1 << 40, splits=0) == slots * 4
+    assert balance_tasks(-1, splits=0) == slots * 4  # remote store
     assert balance_tasks(1 << 20, partitions=7) == 7
 
 
@@ -241,7 +249,8 @@ def test_oversize_payload_guard(monkeypatch):
     import pyarrow as pa
 
     from ocr_engine_spark.engine import extract_job as ej
-    monkeypatch.setattr(ej, "MAX_PAYLOAD_BYTES", 4096)
+    from ocr_engine_spark.kernels import document
+    monkeypatch.setattr(document, "MAX_PAYLOAD_BYTES", 4096)
     rb = pa.RecordBatch.from_pydict({
         "url": ["u://big", "u://ok"],
         "warc_ts": pa.array([datetime.datetime(2025, 5, 1)] * 2,
@@ -260,6 +269,74 @@ def test_oversize_payload_guard(monkeypatch):
     assert big["extracted_text"] is None and big["clean_text"] is None
     assert ok["status"] == "success" and ok["payload_kind"] == "html"
     assert ok["url"] == "u://ok" and ok["batch_seq"] == 0
+
+
+def test_arrow_stage_and_frozen_fixture_agree_on_edge_payloads(
+        monkeypatch, tmp_path):
+    """The Spark kernel stage and the kernel-direct frozen oracle fixture
+    run the same per-document step, so they give the same record for
+    payloads that never reach a kernel or fail inside one: NULL, empty,
+    oversize (cap lowered), `%PDF` garbage with and without a corrupt
+    Flate stream, and non-UTF-8 HTML declaring its charset."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_engine_spark.engine.extract_job import extract_batch_arrow
+    from ocr_engine_spark.fixtures.frozen import (
+        FROZEN_NAME, freeze_extractions,
+    )
+    from ocr_engine_spark.kernels import document
+
+    monkeypatch.setattr(document, "MAX_PAYLOAD_BYTES", 4096)
+    payloads = {
+        "u://null": None,
+        "u://empty": b"",
+        "u://oversize": b"<p>" + b"word " * 1000 + b"</p>",
+        "u://pdf_garbage": b"%PDF\x00\xff not a pdf at all",
+        "u://pdf_bad_flate": (
+            b"%PDF-1.4\n1 0 obj << /Type /Pages /Kids [2 0 R] >> endobj\n"
+            b"2 0 obj << /Type /Page /Contents 3 0 R >> endobj\n"
+            b"3 0 obj << /Length 8 /Filter /FlateDecode >>\nstream\n"
+            b"notzlib!\nendstream\nendobj\n"),
+        "u://latin1": (
+            '<html><head><meta charset="iso-8859-1"></head><body><p>'
+            'Caf\xe9 cr\xe8me br\xfbl\xe9e, served warm with a spoon and '
+            'a glass of water</p></body></html>').encode("latin-1"),
+    }
+    urls = list(payloads)
+    html = pa.array(list(payloads.values()), pa.binary())
+    rb = pa.RecordBatch.from_pydict({
+        "url": urls,
+        "warc_ts": pa.array([datetime.datetime(2025, 5, 1)] * len(urls),
+                            pa.timestamp("us", tz="UTC")),
+        "html": html, "lang": ["en"] * len(urls),
+        "partition_id": pa.array([0] * len(urls), pa.int32())})
+    stage = {r["url"]: r for b in extract_batch_arrow(iter([rb]))
+             for r in b.to_pylist()}
+    for r in stage.values():  # extract_pages' delta decode
+        if r["clean_text"] is None:
+            r["clean_text"] = r["extracted_text"]
+    pq.write_table(pa.table({"url": urls, "html": html}),
+                   tmp_path / "pages.parquet")
+    freeze_extractions(str(tmp_path))
+    frozen = {r["url"]: r
+              for r in pq.read_table(tmp_path / FROZEN_NAME).to_pylist()}
+
+    cols = ("payload_kind", "extracted_text", "clean_text", "confidence",
+            "status")
+    for url in urls:
+        assert ({c: stage[url][c] for c in cols}
+                == {c: frozen[url][c] for c in cols}), url
+    got = {u: (r["payload_kind"], r["status"]) for u, r in stage.items()}
+    assert got == {
+        "u://null": ("html", "success"), "u://empty": ("html", "success"),
+        "u://oversize": ("oversize", "error"),
+        "u://pdf_garbage": ("pdf", "success"),
+        "u://pdf_bad_flate": ("pdf", "error"),
+        "u://latin1": ("html", "success")}
+    assert "Caf\xe9 cr\xe8me br\xfbl\xe9e" in stage["u://latin1"]["clean_text"]
 
 
 def test_read_pages_autosplit(spark, tmp_path):

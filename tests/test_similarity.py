@@ -125,17 +125,16 @@ def test_ivf_assign_arrow_matches_fold(emb):
     """The Arrow assignment strategy must be BIT-identical to the
     interpreted fold (dim-sequential accumulation == the fold's
     left-to-right order), for both single and top-2 spill assignment —
-    this is what lets `auto` switch strategies by k without moving any
-    oracle."""
+    this is what lets `ivf_assign` switch strategies by k without
+    moving any oracle."""
     from ocr_engine_spark.functions.similarity import (
-        ivf_assign, pick_centroids, refine_centroids,
+        _ivf_assign_arrow, _ivf_assign_fold, pick_centroids,
+        refine_centroids,
     )
     cents = refine_centroids(emb, pick_centroids(emb, 17), 1)
     for n_assign in (1, 2):
-        fold = ivf_assign(emb, cents, n_assign=n_assign,
-                          method="fold")
-        arrow = ivf_assign(emb, cents, n_assign=n_assign,
-                           method="arrow")
+        fold = _ivf_assign_fold(emb, cents, "embedding", n_assign)
+        arrow = _ivf_assign_arrow(emb, cents, "embedding", n_assign)
         f = sorted((r["vec_id"], r["cell"])
                    for r in fold.select("vec_id", "cell").collect())
         a = sorted((r["vec_id"], r["cell"])
@@ -146,16 +145,17 @@ def test_ivf_assign_arrow_matches_fold(emb):
 def test_ivf_assign_arrow_k1_spill_sentinel(spark):
     """k=1 top-2: both strategies emit the -1 'no second cell'
     sentinel for c2."""
-    from ocr_engine_spark.functions.similarity import ivf_assign
+    from ocr_engine_spark.functions.similarity import (
+        _ivf_assign_arrow, _ivf_assign_fold,
+    )
     df = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.5, 0.5])],
         "vec_id long, embedding array<double>")
     cents = [(0, [1.0, 0.0])]
-    for method in ("fold", "arrow"):
+    for strategy in (_ivf_assign_fold, _ivf_assign_arrow):
         cells = sorted(
             (r["vec_id"], r["cell"])
-            for r in ivf_assign(df, cents, n_assign=2,
-                                method=method).collect())
+            for r in strategy(df, cents, "embedding", 2).collect())
         assert cells == [(0, -1), (0, 0), (1, -1), (1, 0)]
 
 

@@ -7,17 +7,11 @@ a fresh JVM PINNED (taskset) to exactly that many physical cores —
 un-pinned local[N] borrows idle cores for JVM/GC/Arrow threads and
 overstates the N leg.
 
-Two N/4N pairs are reported plus a framework-free CONTROL:
-
-  * 2 -> 8 cores: below the VM's memory-bandwidth saturation point —
-    measures the JOB's scaling behavior.
-  * 8 -> 32 cores: crosses the single-box bandwidth wall. The control
-    (the same kernels under plain multiprocessing, no Spark) shows the
-    box itself caps at ~0.67 here, so the meaningful number for this
-    pair is job-efficiency / control-efficiency. On a real cluster each
-    executor node brings its own memory bus, so the wall is a sandbox
-    artifact, not a property of the plan (the plan's only cross-task
-    structure is one hash shuffle that binpacks by url).
+One N -> 4N pair is measured, N = max(1, CPUs // 4) over the CPUs this
+process may run on (``os.sched_getaffinity``; 1 -> 4 on a 4-CPU box),
+next to a framework-free CONTROL (the same kernels under
+plain multiprocessing, no Spark) that shows how far the box itself
+scales over the same pair.
 
 Results -> stdout (JSON) + BENCH.md. Usage:
     python tools/bench_scaling.py [n_pages] [n_runs] [para_scale]
@@ -103,14 +97,21 @@ if __name__ == "__main__":
 def _run(child: str, cores: int, corpus: str, n_runs: int) -> dict:
     cmd = [sys.executable, "-c", child.format(repo=REPO),
            str(cores), corpus, str(n_runs)]
-    if shutil.which("taskset"):
-        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
+    if shutil.which("taskset"):  # the first `cores` CPUs we may run on
+        cpus = sorted(os.sched_getaffinity(0))[:cores]
+        cmd = ["taskset", "-c", ",".join(map(str, cpus))] + cmd
     out = subprocess.run(cmd, capture_output=True, text=True, check=True)
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
 def _eff(r_n: dict, r_4n: dict) -> float:
     return round(r_4n["docs_per_sec"] / (4 * r_n["docs_per_sec"]), 3)
+
+
+def scaling_pair() -> tuple[int, int]:
+    """``(N, 4N)`` for the CPUs this process may run on."""
+    n = max(1, len(os.sched_getaffinity(0)) // 4)
+    return n, 4 * n
 
 
 def main() -> None:
@@ -129,51 +130,42 @@ def main() -> None:
     # INTERLEAVE control and Spark legs per core count: host-steal waves
     # on this box last minutes, so running all Spark legs then all
     # control legs lets a wave hit one side only and the control gate
-    # stops gating (observed: control 2->8 clean while the adjacent-in-
-    # time Spark 32 leg sat in a wave). Adjacent pairs see ~the same box.
+    # stops gating. Adjacent pairs see ~the same box.
+    n, n4 = pair = scaling_pair()
     spark: dict = {}
     ctrl: dict = {}
-    for c in (2, 8, 32):
+    for c in pair:
         ctrl[c] = _run(MP_CHILD, c, corpus, n_runs)
         spark[c] = _run(SPARK_CHILD, c, corpus, n_runs)
 
-    eff_2_8 = _eff(spark[2], spark[8])
-    eff_8_32 = _eff(spark[8], spark[32])
-    ctrl_2_8 = _eff(ctrl[2], ctrl[8])
-    ctrl_8_32 = _eff(ctrl[8], ctrl[32])
-    norm_2_8 = round(eff_2_8 / ctrl_2_8, 3) if ctrl_2_8 else None
-    normalized = round(eff_8_32 / ctrl_8_32, 3) if ctrl_8_32 else None
+    eff = _eff(spark[n], spark[n4])
+    ctrl_eff = _eff(ctrl[n], ctrl[n4])
+    norm = round(eff / ctrl_eff, 3) if ctrl_eff else None
 
     result = {
         "spark": spark, "control_multiprocessing": ctrl,
-        "efficiency_2_to_8": eff_2_8,
-        "efficiency_8_to_32": eff_8_32,
-        "control_efficiency_2_to_8": ctrl_2_8,
-        "control_efficiency_8_to_32": ctrl_8_32,
-        "normalized_2_to_8": norm_2_8,
-        "normalized_8_to_32": normalized,
-        "target": 0.8,
-        "pass": eff_2_8 >= 0.8,
-        "box_degraded": ctrl_2_8 is not None and ctrl_2_8 < 0.85,
+        "efficiency": eff, "control_efficiency": ctrl_eff,
+        "normalized": norm, "target": 0.8, "pass": eff >= 0.8,
+        "box_degraded": ctrl_eff < 0.85,
     }
     print(json.dumps(result, indent=2))
 
     rows = "\n".join(
         f"| local[{c}] | {spark[c]['docs']} | {spark[c]['sec']} | "
-        f"{spark[c]['docs_per_sec']} |" for c in (2, 8, 32))
+        f"{spark[c]['docs_per_sec']} |" for c in pair)
     crows = "\n".join(
         f"| {c} procs | {ctrl[c]['docs']} | {ctrl[c]['sec']} | "
-        f"{ctrl[c]['docs_per_sec']} |" for c in (2, 8, 32))
+        f"{ctrl[c]['docs_per_sec']} |" for c in pair)
     md = f"""# BENCH — extraction throughput + scaling efficiency
 
 North rule (BASELINE.json): throughput(4N)/(4 x throughput(N)) >= 0.8
 between N and 4N executors. Sandbox proxy (no real cluster): the same
-`extract_pages` job on the same {spark[8]['docs']}-page synthetic corpus
-(seed=42, mixed HTML/PDF at Common-Crawl weight ~32 KB/page) at three
-pinned parallelism levels, fresh JVM each, best of {n_runs} timed runs
-after a warm-up pass. Pinning (taskset to exactly N cores) matters:
-un-pinned local[N] borrows idle physical cores for JVM/GC/Arrow threads
-and overstates the small leg.
+`extract_pages` job on the same {spark[n]['docs']}-page synthetic corpus
+(seed=42, mixed HTML/PDF at Common-Crawl weight ~32 KB/page) at N={n}
+and 4N={n4} pinned cores (the CPUs available to the run), fresh JVM
+each, best of {n_runs} timed runs after a warm-up pass. Pinning
+(taskset to exactly N cores) matters: un-pinned local[N] borrows idle
+physical cores for JVM/GC/Arrow threads and overstates the small leg.
 
 ## Spark job
 
@@ -181,10 +173,8 @@ and overstates the small leg.
 |---|---|---|---|
 {rows}
 
-**Scaling efficiency N=2 -> 4N=8: {eff_2_8}** (target >= 0.8:
-{"PASS" if eff_2_8 >= 0.8 else "FAIL"})
-
-Scaling efficiency N=8 -> 4N=32: {eff_8_32}
+**Scaling efficiency N={n} -> 4N={n4}: {eff}** (target >= 0.8:
+{"PASS" if eff >= 0.8 else "FAIL"})
 
 ## Control: same kernels, no Spark (multiprocessing + pyarrow)
 
@@ -192,21 +182,12 @@ Scaling efficiency N=8 -> 4N=32: {eff_8_32}
 |---|---|---|---|
 {crows}
 
-Control efficiency 2 -> 8: {ctrl_2_8} (machine ceiling for the gated
-pair; Spark 2->8 normalized by it: **{norm_2_8}**). A control below
-~0.85 here means the BOX was steal-degraded during the run — rerun on
-a quiet box rather than reading the Spark number as a plan property.
-
-Control efficiency 8 -> 32: {ctrl_8_32} — the box ITSELF stops scaling
-past ~8-16 cores for this memory-heavy workload (single shared memory
-bus + virtualization jitter); even framework-free perfect parallelism
-caps there. Normalizing the Spark 8->32 number by the machine ceiling
-gives **{normalized}**; past the bandwidth wall Spark additionally pays
-JVM+Python-worker oversubscription that the bare multiprocessing
-control does not, so this pair understates the plan. On a real N- vs
-4N-EXECUTOR cluster each node brings its own memory bandwidth and its
-own Python workers, so the 2->8 (pre-saturation) pair is the faithful
-proxy for the north rule.
+Control efficiency {n} -> {n4}: {ctrl_eff} (machine ceiling for the
+pair; Spark normalized by it: **{norm}**). A control below ~0.85 means
+the BOX was steal-degraded during the run, or the corpus has fewer
+parquet row groups than {n4} (the control makes one task per row
+group) — rerun on a quiet box rather than reading the Spark number as a
+plan property.
 
 Why the plan scales: scan -> `repartition(P, xxhash64(url))`, P = 1-4
 full waves of `cores` tasks sized by input bytes (only when the scan

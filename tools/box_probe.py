@@ -1,17 +1,20 @@
 """Quick box-health probe: the bench_scaling multiprocessing control at
-2 vs 8 pinned procs on the small bench corpus. Control efficiency
->= ~0.8 -> box quiet enough for a full pinned scaling run; below ->
-host neighbor steal is active and a scaling attempt would be wasted.
+its N vs 4N pinned procs (``scaling_pair``: the CPUs this process may
+run on, 1 vs 4 on a 4-CPU box) on the small bench corpus. Control
+efficiency >= ~0.8 -> box quiet enough for a full pinned scaling run;
+below -> host neighbor steal is active and a scaling attempt would be
+wasted.
 
 Usage: python tools/box_probe.py [n_pages]
 """
 import json
 import os
-import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from tools.bench_scaling import MP_CHILD, REPO, _eff, _run  # noqa: E402
+from tools.bench_scaling import (  # noqa: E402
+    MP_CHILD, REPO, _eff, _run, scaling_pair,
+)
 
 
 def main():
@@ -20,9 +23,10 @@ def main():
     corpus = os.path.join(REPO, "fixtures_data", f"bench_{n_pages}x48")
     if not os.path.exists(os.path.join(corpus, "pages.parquet")):
         write(corpus, n_pages=n_pages, seed=42, para_scale=48)
-    ctrl = {c: _run(MP_CHILD, c, corpus, 2) for c in (2, 8)}
-    eff = _eff(ctrl[2], ctrl[8])
-    print(json.dumps({"control": ctrl, "ctrl_eff_2_8": eff,
+    n, n4 = pair = scaling_pair()
+    ctrl = {c: _run(MP_CHILD, c, corpus, 2) for c in pair}
+    eff = _eff(ctrl[n], ctrl[n4])
+    print(json.dumps({"control": ctrl, f"ctrl_eff_{n}_{n4}": eff,
                       "quiet": eff >= 0.78}))
 
 

@@ -5,36 +5,29 @@ PDF layout) so kernel micro-optimizations target real hot spots instead of
 guesses. No Spark — reads the parquet with pyarrow and loops.
 
 Usage: python tools/profile_kernels.py [n_docs] [--cprofile]
+(the corpus is the one ``python tools/bench_scaling.py 4000`` generates)
 """
 from __future__ import annotations
 
 import cProfile
+import os
 import pstats
 import sys
 import time
+from collections import Counter
 
 import pyarrow.parquet as pq
 
-from ocr_engine_spark.kernels.clean import clean_text
-from ocr_engine_spark.kernels.html_extract import extract_html
-from ocr_engine_spark.kernels.pdf_extract import extract_pdf
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+from ocr_engine_spark.kernels.document import extract_document  # noqa: E402
 
-CORPUS = "fixtures_data/bench_4000x48/pages.parquet"
+CORPUS = os.path.join(REPO, "fixtures_data", "bench_4000x48", "pages.parquet")
 
 
 def run(rows):
-    n_html = n_pdf = 0
-    for payload in rows:
-        p = bytes(payload)
-        if p.startswith(b"%PDF"):
-            res = extract_pdf(p)
-            n_pdf += 1
-        else:
-            res = extract_html(p)
-            n_html += 1
-        if res["text"] is not None:
-            clean_text(res["text"])
-    return n_html, n_pdf
+    kinds = Counter(extract_document(payload)[0] for payload in rows)
+    return kinds["html"], kinds["pdf"]
 
 
 def main():
