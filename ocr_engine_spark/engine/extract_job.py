@@ -4,7 +4,8 @@ Spark lifecycle (the DataFrame mirror of the reference's POST /ocr path,
 ``api_gateway.py:94-105`` -> ``services/surya/surya_service.py:83-135``):
 
   read pages (url, warc_ts, html, text, lang)
-    -> repartition(P, xxhash64(url))         # load-balance kernel cost
+    -> [repartition(P, xxhash64(url))]       # only when the scan alone
+                                             # under-parallelizes
     -> mapInArrow(extract_batch_arrow)       # ONE Arrow-batched Python
          per doc, kernels/document.extract_document:
            size cap + magic-byte payload kind (html | pdf | oversize)
@@ -15,6 +16,15 @@ Spark lifecycle (the DataFrame mirror of the reference's POST /ocr path,
            kernels/fields.py over each doc's cleaned text
          + per-doc timing, per-batch lineage counters
     -> extractions DataFrame
+
+Two plan shapes, chosen from file metadata before any job runs
+(``extract_pages``, ``read_pages``):
+  one stage    scan (>= 4 splits per slot, or a small local parquet
+               corpus cut along its row groups into whole waves) ->
+               mapInArrow
+  two stages   scan -> Exchange hashpartitioning(xxhash64(url), P) ->
+               mapInArrow  (a local corpus whose scan under-parallelizes
+               and cannot be cut along row groups; ``partitions=N``)
 
 No per-row Python UDFs anywhere: the only Python stage is one
 ``mapInArrow`` over whole Arrow batches (the reference's model-per-
@@ -27,6 +37,7 @@ message, never a task failure (surya_service.py:150-158).
 
 from __future__ import annotations
 
+import os
 import time
 from typing import TYPE_CHECKING
 
@@ -138,21 +149,29 @@ def extract_batch_arrow(batches):
         batch_seq += 1
 
 
-def _local_input_bytes(df: DataFrame) -> int:
-    """Total bytes of a LOCAL file-backed source (file listing only, no
-    job). 0 = unknown/in-memory; -1 = remote store (trust its scan)."""
-    import os
+def _local_paths(df: DataFrame) -> list[str] | None:
+    """Local filesystem paths of a file-backed source (file listing
+    only, no job); [] = in-memory, None = a remote store."""
     from urllib.parse import unquote, urlparse
-    total = 0
+    paths = []
     for f in df.inputFiles():
         u = urlparse(f)
         if u.scheme not in ("file", ""):
-            return -1
-        try:
-            total += os.path.getsize(unquote(u.path))
-        except OSError:
-            return 0
-    return total
+            return None
+        paths.append(unquote(u.path))
+    return paths
+
+
+def _local_input_bytes(df: DataFrame) -> int:
+    """Total bytes of a LOCAL file-backed source (file listing only, no
+    job). 0 = unknown/in-memory; -1 = remote store (trust its scan)."""
+    paths = _local_paths(df)
+    if paths is None:
+        return -1
+    try:
+        return sum(os.path.getsize(p) for p in paths)
+    except OSError:
+        return 0
 
 
 def _size_conf(spark, key: str, default: int) -> int:
@@ -182,15 +201,65 @@ def _estimated_scan_splits(input_bytes: int) -> int:
     return -(-input_bytes // split)
 
 
-def _balance_partitions(spark, input_bytes: int, slots: int) -> int:
-    """Tasks for the balance shuffle: whole waves of ``slots`` tasks,
-    1 to 4 of them, about spark.sql.files.openCostInBytes of input per
-    task. Unknown size (in-memory 0, remote -1) keeps 4 waves."""
+def _task_waves(spark, input_bytes: int, slots: int) -> int:
+    """Whole waves of ``slots`` tasks for the kernel stage, 1 to 4 of
+    them, about spark.sql.files.openCostInBytes of input per task.
+    Unknown size (in-memory 0, remote -1) keeps 4 waves."""
     if input_bytes <= 0:
-        return slots * 4
+        return 4
     per_wave = slots * _size_conf(spark, "spark.sql.files.openCostInBytes",
                                   4 << 20)
-    return slots * min(4, max(1, -(-input_bytes // per_wave)))
+    return min(4, max(1, -(-input_bytes // per_wave)))
+
+
+def _row_group_start(rg) -> int:
+    """File offset of a parquet row group: its first column chunk's
+    dictionary page, else its first data page (parquet-mr's rule)."""
+    col = rg.column(0)
+    start = col.data_page_offset
+    if col.has_dictionary_page and col.dictionary_page_offset < start:
+        start = col.dictionary_page_offset
+    return start
+
+
+def _row_group_splits(df: DataFrame, input_bytes: int, slots: int) -> int:
+    """How many scan splits a local parquet source is cut into along its
+    row groups, or 0 when it is not cut. Reads the parquet footers on
+    the driver (metadata only, no Spark job).
+
+    The cut is ``slots * _task_waves`` splits of ``ceil(input_bytes /
+    splits)`` bytes each. The scan hands a row group to the split that
+    holds its midpoint, so the rows each split would get are known from
+    the footers; the cut is made only when the files cut into exactly
+    that many byte ranges, there are at least 3 row groups per split,
+    and every split gets rows with none over 4/3 of the mean (a large
+    footer, e.g. min/max statistics of the payload column, can push the
+    last row groups into one short split)."""
+    if input_bytes <= 0:
+        return 0
+    import pyarrow.parquet as pq
+    splits = slots * _task_waves(df.sparkSession, input_bytes, slots)
+    target = -(-input_bytes // splits)
+    rows: list[int] = []  # per byte range, over all files
+    row_groups = 0
+    try:
+        for path in _local_paths(df):
+            per_range = [0] * -(-os.path.getsize(path) // target)
+            meta = pq.read_metadata(path)
+            for i in range(meta.num_row_groups):
+                rg = meta.row_group(i)
+                mid = _row_group_start(rg) + sum(
+                    rg.column(j).total_compressed_size
+                    for j in range(rg.num_columns)) // 2
+                per_range[mid // target] += rg.num_rows
+            rows += per_range
+            row_groups += meta.num_row_groups
+    except (OSError, ValueError, IndexError):  # gone, or not parquet
+        return 0
+    if len(rows) != splits or row_groups < 3 * splits or min(rows) == 0 \
+            or max(rows) * 3 * splits > sum(rows) * 4:
+        return 0
+    return splits
 
 
 def extract_pages(pages: DataFrame, *, partitions: int | None = None,
@@ -204,12 +273,12 @@ def extract_pages(pages: DataFrame, *, partitions: int | None = None,
     for load-balancing. The url-hash shuffle is therefore bought ONLY
     when the scan under-parallelizes (input splits < 4 tasks per
     executor slot — true for a small/one-file corpus, never true for a
-    10^12-row table whose scan yields millions of size-bounded splits).
-    The 4x margin matters empirically, not just for stragglers: at
-    pinned 8 cores a one-file ~850 MB corpus yields ~13 64 MB splits,
-    which clears an ``< slots`` test yet schedules as 2 ragged waves
-    (+28% wall measured, and the 2->8 scaling leg drops below the north
-    rule's 0.8 on exactly this cliff).
+    10^12-row table whose scan yields millions of size-bounded splits)
+    and the source cannot be cut along its row groups into whole waves
+    instead (``_row_group_splits``; ``read_pages`` makes that cut, and
+    the shuffle is skipped when the scan yields it). The 4x margin
+    matters empirically, not just for stragglers: a scan that clears
+    an ``< slots`` test can still schedule as 2 ragged waves.
 
     How many tasks the balance shuffle makes is sized by input bytes:
     ``slots * clamp(ceil(bytes / (slots * openCost)), 1, 4)`` with
@@ -223,7 +292,8 @@ def extract_pages(pages: DataFrame, *, partitions: int | None = None,
     balance tasks), more than the kernel work of a 1/16 share of a
     1-5 MB corpus. So a corpus under ``slots * openCost`` gets one task
     per slot, and 4 tasks per slot only above ``3 * slots * openCost``.
-    Unknown size (in-memory) keeps 4 tasks per slot.
+    Unknown size (in-memory) keeps 4 tasks per slot. A row-group cut
+    makes the same number of scan tasks.
 
     ``partitions=N`` forces the shuffle into ``N`` tasks (layout-known-
     bad inputs). A streaming input never shuffles unless forced:
@@ -237,8 +307,11 @@ def extract_pages(pages: DataFrame, *, partitions: int | None = None,
     # pruning: never carry the naive `text` dump into the kernel stage
     if partitions is None and not staged.isStreaming:
         input_bytes = _local_input_bytes(staged)
-        if _estimated_scan_splits(input_bytes) < slots * 4:
-            partitions = _balance_partitions(spark, input_bytes, slots)
+        scan_splits = _estimated_scan_splits(input_bytes)
+        if scan_splits < slots * 4:
+            cut = _row_group_splits(staged, input_bytes, slots)
+            if not cut or scan_splits < cut:
+                partitions = slots * _task_waves(spark, input_bytes, slots)
     if partitions is not None:
         staged = staged.repartition(partitions, F.xxhash64("url"))
     staged = staged.withColumn("partition_id", F.spark_partition_id())
@@ -260,25 +333,30 @@ def read_pages(spark: "SparkSession", path: str) -> DataFrame:
     per executor slot — the one-big-file fixture regime), lower
     ``spark.sql.files.maxPartitionBytes`` so the SCAN ITSELF yields
     that parallelism instead of letting extract_pages buy a
-    full-payload repartition. Measured at pinned cores on the
-    36800-page corpus: the payload shuffle drags the 2->8 scaling leg
-    from 0.89 to 0.73 and costs ~2x the whole JVM->Arrow plumbing —
-    splitting at the source is strictly better whenever the layout
-    allows it (parquet can't split finer than a row group; the fixture
-    writer uses 512-row groups precisely so it can). Floor 16 MB so a
-    tiny corpus never degenerates to per-row-group tasks. NOTE: this
-    sets a SESSION conf (file-scan splits are decided at execution
-    time from the session conf, a per-read option does not exist) — it
-    only ever lowers the value, and a 10^12-row table never triggers it
-    (its scan already yields millions of splits). Remote stores are
-    untouched."""
+    full-payload repartition (parquet can't split finer than a row
+    group; the fixture writer uses 512-row groups precisely so it can):
+      * a parquet corpus with enough row groups (``_row_group_splits``)
+        is cut into ``slots * waves`` splits of ``ceil(bytes /
+        splits)`` — whole waves, no task over 4/3 of the mean, and
+        extract_pages then runs no shuffle at all;
+      * any other corpus gets splits of ``bytes / (4 * slots)``, with
+        a 16 MB floor so a tiny corpus never degenerates to
+        per-row-group tasks (extract_pages load-balances what is left
+        with its cheap shuffle).
+    Only the row-group cut goes below the 16 MB floor, and never to
+    more than ``slots * 4`` tasks. NOTE: this sets a SESSION conf
+    (file-scan splits are decided at execution time from the session
+    conf, a per-read option does not exist) — it only ever lowers the
+    value, and a 10^12-row table never triggers it (its scan already
+    yields millions of splits). Remote stores are untouched."""
     df = spark.read.schema(PAGES_SCHEMA).parquet(path)
     slots = spark.sparkContext.defaultParallelism
     total = _local_input_bytes(df)
     want = slots * 4
     split = _size_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
     if total > 0 and -(-total // split) < want:
-        target = max(16 << 20, total // want)
+        cut = _row_group_splits(df, total, slots)
+        target = -(-total // cut) if cut else max(16 << 20, total // want)
         if target < split:
             spark.conf.set("spark.sql.files.maxPartitionBytes",
                            str(int(target)))

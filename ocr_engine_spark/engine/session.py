@@ -39,9 +39,11 @@ def worker_conf(master: str) -> dict[str, str]:
 
 
 # Arrow batch size is deliberately LOW (rows are whole web pages,
-# multi-KB to multi-MB each; extraction cost varies ~100x per doc) —
-# batches are sized by bytes-in-flight, not row count (SURVEY.md §7.2
-# kernel-cost-variance note)
+# multi-KB to multi-MB each; extraction cost varies ~100x per doc;
+# SURVEY.md §7.2 kernel-cost-variance note). This row cap is the only
+# batch limit set: nothing bounds a batch's bytes, so 256 pages near
+# the 50 MB payload cap would overflow a 2 GiB Arrow binary column
+# (ROADMAP direction 4)
 ARROW_BATCH_ROWS = 256
 
 

@@ -132,8 +132,8 @@ def semantic_dedup_decisions(embeddings: DataFrame, *,
         cents = pick_centroids(embeddings, n_centroids, id_col, vec_col)
         if refine_iters > 0:
             cents = refine_centroids(embeddings, cents, refine_iters,
-                                     id_col, vec_col)
-    assigned = ivf_assign(embeddings, cents, id_col, vec_col, n_assign=1)
+                                     vec_col=vec_col)
+    assigned = ivf_assign(embeddings, cents, vec_col=vec_col, n_assign=1)
     unit_lit = _unit_centroid_lit(cents)
     v = F.col(vec_col).cast("array<double>")
     # materialize (id, v, cell, centroid_cosine) ONCE: the element_at /

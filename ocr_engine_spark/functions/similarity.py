@@ -75,8 +75,7 @@ def brute_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
 # ---------------------------------------------------------------------------
 
 def ivf_assign(embeddings: DataFrame, centroids: list[tuple[int, list[float]]],
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               n_assign: int = 1) -> DataFrame:
+               vec_col: str = "embedding", n_assign: int = 1) -> DataFrame:
     """Assign every vector to its nearest centroid(s) — MAP-ONLY: no
     crossJoin, no window, no shuffle: at 10^12 rows assignment is
     embarrassingly parallel and the shuffle (if any) is the caller's
@@ -244,8 +243,7 @@ def pick_centroids(embeddings: DataFrame, n_centroids: int = 8,
 
 def refine_centroids(embeddings: DataFrame,
                      centroids: list[tuple[int, list[float]]],
-                     iters: int = 2, id_col: str = "vec_id",
-                     vec_col: str = "embedding"
+                     iters: int = 2, vec_col: str = "embedding"
                      ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd refinement of the hash-sampled seed — each
     iteration is two DataFrame stages, nothing iterative per row:
@@ -265,7 +263,7 @@ def refine_centroids(embeddings: DataFrame,
     their previous centroid (standard Lloyd convention)."""
     cents = centroids
     for _ in range(iters):
-        assigned = ivf_assign(embeddings, cents, id_col, vec_col,
+        assigned = ivf_assign(embeddings, cents, vec_col=vec_col,
                               n_assign=1)
         mean_rows = (assigned
                      .select("cell",
@@ -304,9 +302,9 @@ def ivf_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
         cents = pick_centroids(embeddings, n_centroids, id_col, vec_col)
         if refine_iters > 0:
             cents = refine_centroids(embeddings, cents, refine_iters,
-                                     id_col, vec_col)
+                                     vec_col=vec_col)
     return IvfIndex("", cents, id_col, vec_col, n_assign)._probe(
-        ivf_assign(embeddings, cents, id_col, vec_col, n_assign),
+        ivf_assign(embeddings, cents, vec_col=vec_col, n_assign=n_assign),
         query_vec, k, n_probe)
 
 
@@ -344,9 +342,10 @@ class IvfIndex:
         cents = pick_centroids(embeddings, n_centroids, id_col, vec_col)
         if refine_iters > 0:
             cents = refine_centroids(embeddings, cents, refine_iters,
-                                     id_col, vec_col)
+                                     vec_col=vec_col)
         idx = cls(path, cents, id_col, vec_col, n_assign)
-        assigned = ivf_assign(embeddings, cents, id_col, vec_col, n_assign)
+        assigned = ivf_assign(embeddings, cents, vec_col=vec_col,
+                              n_assign=n_assign)
         assigned.write.partitionBy("cell").mode("overwrite") \
             .parquet(idx.assignment_path)
         # index metadata through the SAME filesystem as the data (a
@@ -379,8 +378,8 @@ class IvfIndex:
         (moving them would strand old assignments); when drift
         accumulates, rebuild — the compact-then-swap batch job.
         Caller contract: new ids only (dedup upstream)."""
-        assigned = ivf_assign(embeddings, self.centroids, self.id_col,
-                              self.vec_col, self.n_assign)
+        assigned = ivf_assign(embeddings, self.centroids,
+                              vec_col=self.vec_col, n_assign=self.n_assign)
         assigned.write.partitionBy("cell").mode("append") \
             .parquet(self.assignment_path)
         return self

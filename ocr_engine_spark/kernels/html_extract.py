@@ -7,14 +7,17 @@ parse with Boilerpipe/trafilatura-style densitometric block scoring over
 a Common-Crawl-style HTML payload and emit ordered main-content blocks
 plus character-span offsets.
 
-Deterministic, dependency-free (``html.parser``), and tolerant of
-malformed markup: a failing document returns an error record instead of
-raising (mirrors the reference's error-as-record discipline,
-``surya_service.py:150-158``).
+Deterministic, dependency-free, and tolerant of malformed markup: a
+failing document returns an error record instead of raising (mirrors the
+reference's error-as-record discipline, ``surya_service.py:150-158``).
 
 Pipeline (one document):
   1. charset sniff + decode     (analog of PIL decode, surya_service.py:102-104)
-  2. DOM walk -> flat block list with per-block text/link char counts
+  2. DOM walk -> flat block list with per-block text/link char counts:
+     ``_scan_blocks`` cuts the page into text runs and tags with one
+     ``re.split`` and walks them as a flat state machine (the stdlib
+     ``html.parser`` walk ``_BlockParser`` is the reference it is tested
+     against)
   3. densitometric classification: boilerplate-ancestor pruning,
      link-density < LINK_DENSITY_MAX, word-count >= MIN_WORDS with a
      neighbor-rescue pass for short headings/list items
@@ -25,7 +28,7 @@ Pipeline (one document):
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from html import unescape
 from html.parser import HTMLParser
 
 from ocr_engine_spark.kernels import assemble_blocks, error_record
@@ -62,95 +65,183 @@ _KIND_MAP = {**{h: "heading" for h in HEADING_TAGS}, "p": "para",
              "li": "list", "dt": "list", "dd": "list",
              "td": "table", "th": "table"}
 
-_WS_RE = re.compile(r"\s+")
 _CJK_RE = re.compile(r"[一-鿿]")
 _TOKEN_SPLIT_RE = re.compile(r"[^0-9a-zA-Z]+")
 _META_CHARSET_RE = re.compile(
     rb"""<meta[^>]+charset\s*=\s*["']?\s*([A-Za-z0-9_\-]+)""", re.I)
 
+# the raw text of a tag's attributes: quoted values may hold '>'
+_ATTRS = r"""(?:[^>"']|"[^"]*"|'[^']*')*?"""
 
-@dataclass(slots=True)
-class Block:
-    """One candidate text block, in document order.
 
-    ``text`` / ``word_units`` / ``link_density`` are computed once in
-    ``_BlockParser._flush`` when the block is finalized (parts never
-    change after that) — plain attributes, because the classifier and
-    emitter probe them millions of times per batch and property-descriptor
-    dispatch was ~15% of kernel time in tools/profile_kernels.py."""
-    block_id: int
-    kind: str                    # heading | para | list | table | other
-    parts: list[str] = field(default_factory=list)
-    link_chars: int = 0
-    boilerplate: bool = False
-    text: str = ""
-    word_units: int = 0
-    link_density: float = 0.0
+def _raw_text_element(name: str) -> str:
+    """A whole ``<script>``/``<style>`` element: the start tag (ASCII
+    name, any case, not self-closing), then raw text up to the first
+    matching close tag (html.parser's CDATA content elements), or to the
+    end of the page when it is never closed."""
+    ascii_name = "".join(f"[{c}{c.upper()}]" for c in name)
+    close = rf"(?i:/{name}(?:\s[^>]*)?>)"
+    return (rf"{ascii_name}(?![a-zA-Z0-9:_.-]){_ATTRS}(?<!/)>"
+            rf"[^<]*(?:<(?!{close})[^<]*)*(?:<{close})?")
 
-    def finalize(self) -> bool:
-        """Collapse parts -> text and precompute the densitometric
-        stats; returns False for whitespace-only blocks (dropped)."""
-        # == _WS_RE.sub(' ', x).strip(): str.split() splits on the
-        # same unicode-whitespace runs, at C speed (hot: per block);
-        # most blocks carry exactly one part — skip the inner join
-        parts = self.parts
-        t = " ".join((parts[0] if len(parts) == 1
-                      else "".join(parts)).split())
-        if not t:
-            return False
-        self.text = t
-        # ASCII-ish words + CJK chars/2 (zh text has no spaces); text is
-        # ' '.join(tokens) with no empty tokens by construction, so word
-        # count == separator count + 1 (CJK scan skipped for ASCII text)
-        words = t.count(" ") + 1
-        cjk = 0 if t.isascii() else len(_CJK_RE.findall(t))
-        self.word_units = words + cjk // 2
-        self.link_density = self.link_chars / len(t)
-        return True
+
+# One token of markup. ``split`` returns the text runs between tokens
+# interleaved with the four groups of each token; comments, doctypes,
+# processing instructions, CDATA sections and whole script/style elements
+# match with all four groups None (they never touch the walk's state: a
+# script/style start and its close tag cancel out).
+_TOKEN_RE = re.compile(
+    r"<(?:"
+    r"!--.*?(?:-->|$)"                      # comment
+    r"|!\[CDATA\[.*?(?:\]\]>|$)"            # cdata
+    r"|[!?][^>]*>"                          # doctype / PI
+    rf"|{_raw_text_element('script')}"
+    rf"|{_raw_text_element('style')}"
+    r"|(/)?([a-zA-Z][a-zA-Z0-9:_.-]*)"      # close, tag
+    rf"({_ATTRS})(/)?>"                     # attrs, selfclose
+    r")",
+    re.S)
+_ATTR_RE = re.compile(
+    r"([a-zA-Z-]+)\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]+))")
+# only tags whose raw attr text could carry class/id/role pay the full
+# attr parse
+_ATTR_GATE_RE = re.compile(r"class|id|role", re.I)
+
+
+def _is_boiler_attrs(attrs) -> bool:
+    """Does a ``(name, value)`` attr list mark its subtree as
+    boilerplate (a class/id/role token in BOILERPLATE_TOKENS)?"""
+    for k, v in attrs:
+        if k in ("class", "id", "role") and v:
+            for tok in _TOKEN_SPLIT_RE.split(v.lower()):
+                if tok in BOILERPLATE_TOKENS:
+                    return True
+    return False
+
+
+def _is_boiler_raw(raw: str) -> bool:
+    """``_is_boiler_attrs`` of a tag's raw attribute text."""
+    return bool(raw) and _ATTR_GATE_RE.search(raw) is not None and \
+        _is_boiler_attrs((k.lower(), v1 or v2 or v3)
+                         for k, v1, v2, v3 in _ATTR_RE.findall(raw))
+
+
+def _finish_block(parts: list[str], kind: str, boilerplate: bool,
+                  link_chars: int) -> tuple:
+    """One block as ``(text, kind, boilerplate, link_chars, word_units,
+    link_density)``: its text runs joined and whitespace-collapsed (never
+    empty: a run that is all whitespace never opens or joins a block)."""
+    # == re.sub(r'\s+', ' ', x).strip(): str.split() splits on the same
+    # unicode-whitespace runs, at C speed; most blocks carry one part
+    t = " ".join((parts[0] if len(parts) == 1 else "".join(parts)).split())
+    # ASCII-ish words + CJK chars/2 (zh text has no spaces); t is
+    # ' '.join(tokens) with no empty tokens, so word count == separator
+    # count + 1 (CJK scan skipped for ASCII text)
+    cjk = 0 if t.isascii() else len(_CJK_RE.findall(t))
+    return (t, kind, boilerplate, link_chars, t.count(" ") + 1 + cjk // 2,
+            link_chars / len(t))
+
+
+def _scan_blocks(doc: str) -> list[tuple]:
+    """The flat block list of a decoded page, in document order (see
+    ``_finish_block`` for a block's fields).
+
+    A text run opens a block (its kind is the innermost open
+    heading/para/list/table element, its boilerplate flag whether a
+    boilerplate element is open) or joins the open one; a block-level
+    start or end tag, or a ``<br/>`` anywhere, closes it. Text inside
+    SKIP_TAGS subtrees is dropped. Every piece of state is a local: one
+    ``re.split`` and one loop per page, no call per token."""
+    parts = _TOKEN_RE.split(doc)
+    blocks: list[tuple] = []
+    cur = None                  # text runs of the open block
+    cur_kind, cur_boiler, cur_link = "other", False, 0
+    skip = link = 0             # open SKIP_TAGS elements, open <a>
+    kinds: list[str] = []       # open elements that set a block kind
+    boiler_tags: list[str] = []  # open elements that set boilerplate
+    parts += (None, None, None, None)  # no token after the last text run
+    it = iter(parts)
+    for text, close, tag, attrs, selfclose in zip(it, it, it, it, it):
+        # the text run before the token
+        if text and not skip:
+            if "&" in text:
+                text = unescape(text)
+            if text and not text.isspace():
+                if cur is None:
+                    cur = [text]
+                    cur_kind = kinds[-1] if kinds else "other"
+                    cur_boiler = bool(boiler_tags)
+                    cur_link = 0
+                else:
+                    cur.append(text)
+                if link:
+                    cur_link += len(" ".join(text.split()))
+        if tag is None:
+            continue
+        name = tag.lower()
+        flush = False
+        if name in SKIP_TAGS:
+            if close:
+                if skip:
+                    skip -= 1
+            elif not selfclose:
+                skip += 1
+        elif close:
+            if not skip:
+                if name == "a" and link:
+                    link -= 1
+                if name in BLOCK_TAGS:
+                    flush = True
+                    if kinds and name in _KIND_MAP:
+                        kinds.pop()
+                if boiler_tags and boiler_tags[-1] == name:
+                    boiler_tags.pop()
+        elif selfclose:
+            # no skip check: <br/> closes the open block even inside
+            # a skipped subtree; any other self-closing tag is inert
+            flush = name == "br"
+        elif not skip:
+            if name == "a":
+                link += 1
+            if name in BLOCK_TAGS:
+                flush = True
+                if name in BOILERPLATE_TAGS or _is_boiler_raw(attrs):
+                    boiler_tags.append(name)
+                k = _KIND_MAP.get(name)
+                if k:
+                    kinds.append(k)
+            elif _is_boiler_raw(attrs):
+                # inline boilerplate marker (e.g. <span class="ad">)
+                boiler_tags.append(name)
+        if flush and cur is not None:
+            blocks.append(_finish_block(cur, cur_kind, cur_boiler, cur_link))
+            cur = None
+    if cur is not None:
+        blocks.append(_finish_block(cur, cur_kind, cur_boiler, cur_link))
+    return blocks
 
 
 class _BlockParser(HTMLParser):
-    """Single-pass DOM walk producing the flat block list."""
+    """The stdlib ``html.parser`` walk producing the same block list as
+    ``_scan_blocks``; kept as the reference the scanner is tested
+    against (tests/test_kernels.py, tests/test_scanner_fuzz.py)."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self.blocks: list[Block] = []
-        self._cur: Block | None = None
+        self.blocks: list[tuple] = []
+        self._parts: list[str] | None = None  # text runs of the open block
+        self._cur = ("other", False)  # (kind, boilerplate) of that block
+        self._link_chars = 0
         self._skip_depth = 0          # inside SKIP_TAGS subtree
-        self._boiler_depth = 0        # inside boilerplate subtree
         self._link_depth = 0          # inside <a>
         self._kind_stack: list[str] = []
         self._boiler_tags: list[str] = []  # open tags that set boilerplate
 
-    # -- helpers ---------------------------------------------------------
     def _flush(self) -> None:
-        cur = self._cur
-        if cur is not None:
-            if cur.finalize():
-                self.blocks.append(cur)
-            self._cur = None
-
-    def _block(self) -> Block:
-        if self._cur is None:
-            self._cur = Block(
-                block_id=len(self.blocks),
-                kind=self._kind_stack[-1] if self._kind_stack else "other",
-                boilerplate=self._boiler_depth > 0,
-            )
-        return self._cur
-
-    @staticmethod
-    def _is_boiler_attrs(attrs: list[tuple[str, str | None]]) -> bool:
-        for k, v in attrs:
-            if k in ("class", "id", "role") and v:
-                for tok in _TOKEN_SPLIT_RE.split(v.lower()):
-                    if tok in BOILERPLATE_TOKENS:
-                        return True
-        return False
-
-    @staticmethod
-    def _kind_of(tag: str) -> str | None:
-        return _KIND_MAP.get(tag)
+        if self._parts is not None:
+            self.blocks.append(
+                _finish_block(self._parts, *self._cur, self._link_chars))
+            self._parts = None
 
     # -- HTMLParser callbacks ---------------------------------------------
     def handle_starttag(self, tag, attrs):
@@ -163,15 +254,13 @@ class _BlockParser(HTMLParser):
             self._link_depth += 1
         if tag in BLOCK_TAGS:
             self._flush()
-            if tag in BOILERPLATE_TAGS or self._is_boiler_attrs(attrs):
-                self._boiler_depth += 1
+            if tag in BOILERPLATE_TAGS or _is_boiler_attrs(attrs):
                 self._boiler_tags.append(tag)
             k = _KIND_MAP.get(tag)
             if k:
                 self._kind_stack.append(k)
-        elif self._is_boiler_attrs(attrs):
+        elif _is_boiler_attrs(attrs):
             # inline boilerplate marker (e.g. <span class="ad">)
-            self._boiler_depth += 1
             self._boiler_tags.append(tag)
 
     def handle_endtag(self, tag):
@@ -188,7 +277,6 @@ class _BlockParser(HTMLParser):
                 self._kind_stack.pop()
         if self._boiler_tags and self._boiler_tags[-1] == tag:
             self._boiler_tags.pop()
-            self._boiler_depth = max(0, self._boiler_depth - 1)
 
     def handle_startendtag(self, tag, attrs):
         if tag == "br":
@@ -197,117 +285,18 @@ class _BlockParser(HTMLParser):
     def handle_data(self, data):
         if self._skip_depth or not data or data.isspace():
             return
-        b = self._block()
-        b.parts.append(data)
+        if self._parts is None:
+            self._parts = []
+            self._cur = (self._kind_stack[-1] if self._kind_stack
+                         else "other", bool(self._boiler_tags))
+            self._link_chars = 0
+        self._parts.append(data)
         if self._link_depth:
-            b.link_chars += len(" ".join(data.split()))
+            self._link_chars += len(" ".join(data.split()))
 
     def close(self):
         super().close()
         self._flush()
-
-
-class _FastBlockParser(_BlockParser):
-    """Regex-scanner drop-in for the stdlib ``html.parser`` state machine
-    (same callbacks, same Block output — A/B-tested against the stdlib
-    path in tests/test_kernels.py). The stdlib parser costs ~60% of
-    HTML-kernel time in per-character bookkeeping we never use (position
-    tracking, incremental feeding, strict charref states); one compiled
-    scan with entity-decode on text runs is ~2x faster and byte-identical
-    on the golden corpus."""
-
-    def feed(self, doc: str) -> None:  # type: ignore[override]
-        unescape = _unescape
-        handle_data = self.handle_data
-        boiler_tags = self._boiler_tags
-        interesting = _STATE_TAGS
-        pos = 0
-        n = len(doc)
-        search = _MARKUP_RE.search
-        while pos < n:
-            m = search(doc, pos)
-            if m is None:
-                break
-            start = m.start()
-            if start > pos:
-                data = doc[pos:start]
-                if "&" in data:
-                    data = unescape(data)
-                handle_data(data)
-            pos = m.end()
-            # one C call for all four groups (vs 4 dict-keyed lookups)
-            close, tag, rawattrs, selfclose = m.group(
-                "close", "tag", "attrs", "selfclose")
-            if tag is None:
-                continue  # comment / doctype / PI — dropped
-            name = tag.lower()
-            if close:
-                # inert inline close tags (span/b/em/...) touch no parser
-                # state unless they close an inline boilerplate marker —
-                # skipping both inert-tag callbacks is a measured ~10%
-                # HTML-kernel win (pinned best-of-5 A/B)
-                if name in interesting or (
-                        boiler_tags and boiler_tags[-1] == name):
-                    self.handle_endtag(name)
-                continue
-            rawattrs = rawattrs or ""
-            # case-insensitive gate (CLASS="nav" must parse like the
-            # stdlib path, which lowercases attr names)
-            attrs = ([(a[0].lower(), a[1] or a[2] or a[3])
-                      for a in _ATTR_RE.findall(rawattrs)]
-                     if rawattrs and _ATTR_GATE_RE.search(rawattrs)
-                     else [])
-            if name not in interesting and not attrs:
-                # inert inline start tag with no class/id/role payload:
-                # handle_starttag would fall through every branch
-                continue
-            if selfclose:
-                self.handle_startendtag(name, attrs)
-                continue
-            self.handle_starttag(name, attrs)
-            if name in ("script", "style"):
-                # CDATA content elements: raw text to the matching close
-                # tag, never markup (html.parser CDATA_CONTENT_ELEMENTS)
-                cm = _CDATA_CLOSE[name].search(doc, pos)
-                if cm is None:
-                    pos = n
-                    self.handle_endtag(name)
-                else:
-                    pos = cm.end()
-                    self.handle_endtag(name)
-        if pos < n:
-            data = doc[pos:]
-            if "&" in data:
-                data = unescape(data)
-            handle_data(data)
-
-    def close(self) -> None:  # no stdlib buffers to drain
-        self._flush()
-
-
-_MARKUP_RE = re.compile(
-    r"<(?:"
-    r"!--.*?(?:-->|$)"                      # comment
-    r"|!\[CDATA\[.*?(?:\]\]>|$)"            # cdata
-    r"|[!?][^>]*>"                          # doctype / PI
-    r"|(?P<close>/)?(?P<tag>[a-zA-Z][a-zA-Z0-9:_.-]*)"
-    r"(?P<attrs>(?:[^>\"']|\"[^\"]*\"|'[^']*')*?)"
-    r"(?P<selfclose>/)?>"
-    r")",
-    re.S)
-_ATTR_RE = re.compile(
-    r"([a-zA-Z-]+)\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]+))")
-# only tags whose raw attr text could carry class/id/role pay the full
-# attr parse (pure fast path: _is_boiler_attrs only reads those three)
-_ATTR_GATE_RE = re.compile(r"class|id|role", re.I)
-_CDATA_CLOSE = {t: re.compile(rf"</{t}(?:\s[^>]*)?>", re.I)
-                for t in ("script", "style")}
-# every tag that can change parser state in handle_starttag/endtag
-# regardless of attrs; anything else with no class/id/role attrs is a
-# provable no-op in both callbacks (the fast scanner's skip condition)
-_STATE_TAGS = SKIP_TAGS | BLOCK_TAGS | {"a"}
-
-from html import unescape as _unescape  # noqa: E402  (used in hot loop)
 
 
 def sniff_decode(payload: bytes) -> str:
@@ -327,8 +316,9 @@ def sniff_decode(payload: bytes) -> str:
     return payload.decode("utf-8", errors="replace")
 
 
-def classify_blocks(blocks: list[Block]) -> list[bool]:
-    """Densitometric content classification (Boilerpipe-style).
+def classify_blocks(blocks: list[tuple]) -> list[bool]:
+    """Densitometric content classification (Boilerpipe-style) of
+    ``_scan_blocks`` output.
 
     Pass 1: a block is content if it is not under a boilerplate ancestor,
     its link density is < LINK_DENSITY_MAX and it has >= MIN_WORDS word
@@ -338,19 +328,15 @@ def classify_blocks(blocks: list[Block]) -> list[bool]:
     """
     n = len(blocks)
     ld_max = LINK_DENSITY_MAX
-    content = [
-        (not b.boilerplate)
-        and b.link_density < ld_max
-        and b.word_units >= MIN_WORDS
-        for b in blocks
-    ]
+    content = [not boiler and ld < ld_max and wu >= MIN_WORDS
+               for _, _, boiler, _, wu, ld in blocks]
     rescued = list(content)
-    for i, b in enumerate(blocks):
-        if content[i] or b.boilerplate:
+    for i, (_, kind, boiler, _, wu, ld) in enumerate(blocks):
+        if content[i] or boiler:
             continue
-        if b.link_density >= ld_max:
+        if ld >= ld_max:
             continue
-        if b.word_units < NEIGHBOR_MIN_WORDS and b.kind != "heading":
+        if wu < NEIGHBOR_MIN_WORDS and kind != "heading":
             continue
         prev_c = i > 0 and rescued[i - 1]   # cascades over short runs
         next_c = i + 1 < n and content[i + 1]
@@ -369,16 +355,11 @@ def extract_html(payload: bytes) -> dict:
     decisively it passed classification.
     """
     try:
-        doc = sniff_decode(payload)
-        parser = _FastBlockParser()
-        parser.feed(doc)
-        parser.close()
-        keep = classify_blocks(parser.blocks)
-        # block_id = index within the EMITTED text (span contract); the
-        # DOM ordinal stays available as Block.block_id internally
+        blocks = _scan_blocks(sniff_decode(payload))
+        keep = classify_blocks(blocks)
         return assemble_blocks(
-            [(b.text, b.kind, (1.0 - b.link_density)
-              * min(1.0, b.word_units / (2.0 * MIN_WORDS)))
-             for b, k in zip(parser.blocks, keep) if k], "\n")
+            [(text, kind, (1.0 - ld) * min(1.0, wu / (2.0 * MIN_WORDS)))
+             for (text, kind, _, _, wu, ld), k in zip(blocks, keep) if k],
+            "\n")
     except Exception as exc:  # poison-row tolerance
         return error_record(str(exc))

@@ -6,7 +6,7 @@ than flat text for LLM training corpora (heading/list structure is a
 quality signal the model can use); the reference's flat-text contract
 (surya_service.py OCRResponse.extracted_text) carries no structure, so
 this is a Spark-first widening, derived entirely from the span kinds
-the kernels already emit (html_extract.Block.kind: heading | para |
+the kernels already emit (html_extract block kinds: heading | para |
 list | table | other; pdf_extract: page).
 
 The contract is a STRUCTURAL skeleton: each emitted block becomes one

@@ -1,5 +1,7 @@
 """End-to-end Spark extraction job tests: the byte-identity gate."""
 
+import os
+
 import pyspark.sql.functions as F
 
 
@@ -381,6 +383,77 @@ def test_read_pages_autosplit(spark, tmp_path):
         assert "Exchange" in tplan.split("MapInArrow")[-1]
     finally:
         if before is not None:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", before)
+
+
+def test_read_pages_cuts_row_groups_into_whole_waves(spark, tmp_path):
+    """A small one-file corpus with >= 3 row groups per split is cut
+    along its row groups into ``slots * waves`` scan tasks and runs with
+    no balance Exchange; the rows are those of the forced shuffle.
+    Corpora the cut cannot split evenly keep their Exchange: 3 row
+    groups, and light pages whose footer (the payload column's min/max
+    statistics) takes a fifth of the file, which would leave the last
+    byte range one short row group."""
+    import pyarrow.parquet as pq
+
+    from ocr_engine_spark.engine import extract_job
+    from ocr_engine_spark.fixtures.gen_pages import write
+
+    def below_kernel(df) -> str:
+        return (df._jdf.queryExecution().executedPlan().toString()
+                .split("MapInArrow")[-1])
+
+    def auto_plan(path) -> str:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        pages = extract_job.read_pages(spark, path)
+        return below_kernel(extract_job.extract_pages(pages,
+                                                      with_fields=False))
+
+    slots = spark.sparkContext.defaultParallelism
+    # Common-Crawl page weight (~32 KB), 16-row groups
+    path = write(str(tmp_path / "pages_rg16"), n_pages=200, seed=7,
+                 para_scale=48, row_group_size=16)["pages"]
+    input_bytes = os.path.getsize(path)
+    splits = slots * extract_job._task_waves(spark, input_bytes, slots)
+    assert pq.read_metadata(path).num_row_groups >= 3 * splits
+    before = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
+    spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    try:
+        pages = extract_job.read_pages(spark, path)
+        assert pages.rdd.getNumPartitions() == splits
+        out = extract_job.extract_pages(pages)
+        assert "Exchange" not in below_kernel(out)
+        per_task = [r["count"] for r in
+                    out.groupBy("partition_id").count().collect()]
+        assert len(per_task) == splits  # every task is non-empty
+        assert max(per_task) * splits <= sum(per_task) * 4 / 3
+
+        drop = ("partition_id", "batch_seq", "processing_ms")
+        cut_rows = {r["url"]: r for r in out.drop(*drop).collect()}
+        forced = extract_job.extract_pages(pages, partitions=slots)
+        assert "Exchange" in below_kernel(forced)
+        assert cut_rows == {r["url"]: r
+                            for r in forced.drop(*drop).collect()}
+
+        # 3 row groups: a cut would leave some splits empty
+        n_rows = pq.read_metadata(path).num_rows
+        three = write(str(tmp_path / "pages_rg3"), n_pages=200, seed=7,
+                      para_scale=48,
+                      row_group_size=-(-n_rows // 3))["pages"]
+        assert pq.read_metadata(three).num_row_groups == 3
+        assert "Exchange" in auto_plan(three)
+        if slots > 1:  # one split per slot would hold the whole file
+            light = write(str(tmp_path / "pages_light"), n_pages=200,
+                          seed=7, row_group_size=16)["pages"]
+            assert pq.read_metadata(light).num_row_groups >= 3 * slots
+            assert extract_job._row_group_splits(
+                spark.read.parquet(light), os.path.getsize(light),
+                slots) == 0
+            assert "Exchange" in auto_plan(light)
+    finally:
+        if before is None:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        else:
             spark.conf.set("spark.sql.files.maxPartitionBytes", before)
 
 
