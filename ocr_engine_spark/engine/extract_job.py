@@ -17,8 +17,8 @@ Spark lifecycle (the DataFrame mirror of the reference's POST /ocr path,
          + per-doc timing, per-batch lineage counters
     -> extractions DataFrame
 
-Two plan shapes, chosen from file metadata before any job runs
-(``extract_pages``, ``read_pages``):
+Two plan shapes, chosen by one planner (``_plan_scan``, called by
+``extract_pages``) from the input's file metadata before any job runs:
   one stage    scan (>= 4 splits per slot, or a small local parquet
                corpus cut along its row groups into whole waves) ->
                mapInArrow
@@ -38,6 +38,7 @@ message, never a task failure (surya_service.py:150-158).
 from __future__ import annotations
 
 import os
+import re
 import time
 from typing import TYPE_CHECKING
 
@@ -149,67 +150,30 @@ def extract_batch_arrow(batches):
         batch_seq += 1
 
 
-def _local_paths(df: DataFrame) -> list[str] | None:
-    """Local filesystem paths of a file-backed source (file listing
-    only, no job); [] = in-memory, None = a remote store."""
+def _input_files(df: DataFrame) -> list[tuple[str, int]] | None:
+    """``(path, bytes)`` of every file a LOCAL file-backed source reads
+    (one file listing, no job); [] = in-memory, None = a remote store."""
     from urllib.parse import unquote, urlparse
-    paths = []
+    files = []
     for f in df.inputFiles():
         u = urlparse(f)
         if u.scheme not in ("file", ""):
             return None
-        paths.append(unquote(u.path))
-    return paths
+        path = unquote(u.path)
+        files.append((path, os.path.getsize(path)))
+    return files
 
 
-def _local_input_bytes(df: DataFrame) -> int:
-    """Total bytes of a LOCAL file-backed source (file listing only, no
-    job). 0 = unknown/in-memory; -1 = remote store (trust its scan)."""
-    paths = _local_paths(df)
-    if paths is None:
-        return -1
-    try:
-        return sum(os.path.getsize(p) for p in paths)
-    except OSError:
-        return 0
-
-
-def _size_conf(spark, key: str, default: int) -> int:
-    """A Spark size config in bytes; the strings keep their suffix
-    ('128m', '64MB', '4194304b', ...). Unparseable reads as ``default``."""
-    import re as _re
-    conf = spark.conf.get(key, str(default))
-    m = _re.match(r"(\d+)\s*([kmgt]?)b?$", str(conf).strip().lower())
+def _size_conf(conf, key: str, default: int) -> int:
+    """A size config of ``conf`` (a SparkConf or ``spark.conf``) in bytes;
+    the strings keep their suffix ('128m', '64MB', '4194304b', ...).
+    Unparseable reads as ``default``."""
+    m = re.match(r"(\d+)\s*([kmgt]?)b?$",
+                 str(conf.get(key, str(default))).strip().lower())
     if m:
         return int(m.group(1)) * (
             1024 ** {"": 0, "k": 1, "m": 2, "g": 3, "t": 4}[m.group(2)])
     return default
-
-
-def _estimated_scan_splits(input_bytes: int) -> int:
-    """Metadata-only estimate of how many scan splits a source of
-    ``input_bytes`` (``_local_input_bytes``) yields: total bytes /
-    spark.sql.files.maxPartitionBytes of the active session. In-memory
-    sources (0) estimate 0, i.e. 'under-parallelized' — the safe local
-    answer; a table-scale source estimates millions and is never
-    shuffled for balance."""
-    from pyspark.sql import SparkSession
-    if input_bytes < 0:
-        return 1 << 30  # remote store: trust the scan's own splits
-    split = _size_conf(SparkSession.active(),
-                       "spark.sql.files.maxPartitionBytes", 128 << 20)
-    return -(-input_bytes // split)
-
-
-def _task_waves(spark, input_bytes: int, slots: int) -> int:
-    """Whole waves of ``slots`` tasks for the kernel stage, 1 to 4 of
-    them, about spark.sql.files.openCostInBytes of input per task.
-    Unknown size (in-memory 0, remote -1) keeps 4 waves."""
-    if input_bytes <= 0:
-        return 4
-    per_wave = slots * _size_conf(spark, "spark.sql.files.openCostInBytes",
-                                  4 << 20)
-    return min(4, max(1, -(-input_bytes // per_wave)))
 
 
 def _row_group_start(rg) -> int:
@@ -222,29 +186,65 @@ def _row_group_start(rg) -> int:
     return start
 
 
-def _row_group_splits(df: DataFrame, input_bytes: int, slots: int) -> int:
-    """How many scan splits a local parquet source is cut into along its
-    row groups, or 0 when it is not cut. Reads the parquet footers on
-    the driver (metadata only, no Spark job).
+def _plan_scan(df: DataFrame) -> tuple[int, int | None]:
+    """The extraction plan of ``df``: ``(scan split bytes, balance
+    tasks)``, None tasks meaning no balance shuffle. Decided on the
+    driver from one file listing and at most one read of the parquet
+    footers (metadata only, no Spark job), from the input alone: the
+    base split is the one the session was LAUNCHED with (``build_session``
+    sets 64 MB), never the value an earlier plan applied.
 
-    The cut is ``slots * _task_waves`` splits of ``ceil(input_bytes /
-    splits)`` bytes each. The scan hands a row group to the split that
-    holds its midpoint, so the rows each split would get are known from
-    the footers; the cut is made only when the files cut into exactly
-    that many byte ranges, there are at least 3 row groups per split,
-    and every split gets rows with none over 4/3 of the mean (a large
-    footer, e.g. min/max statistics of the payload column, can push the
-    last row groups into one short split)."""
-    if input_bytes <= 0:
-        return 0
+    ``slots * 4`` scan splits at the base split, a streaming input and a
+    remote store (trusted to split its own scan) keep the base split and
+    run no shuffle; that is every 10^12-row table, whose scan yields
+    millions of size-bounded splits. Below that, the kernel stage gets
+    ``slots * waves`` tasks, ``waves = clamp(ceil(bytes / (slots *
+    openCost)), 1, 4)`` with ``openCost`` = spark.sql.files.
+    openCostInBytes (4 MB by default): Spark's own estimate of a split's
+    fixed cost, here the ~70-85 ms of JVM and Python-worker CPU a task
+    costs before any kernel work (measured at local[4] as the difference
+    between 16 and 4 balance tasks). Every wave is full, and a task never
+    gets much less input than that cost is worth. An in-memory source
+    (size unknown) gets 4 waves through the shuffle. A local parquet
+    corpus is split at the source when its footers allow it:
+      * cut along its row groups into ``slots * waves`` splits of
+        ``ceil(bytes / splits)`` bytes, no shuffle. The scan hands a row
+        group to the split that holds its midpoint, so the footers give
+        each split's rows; the cut is made only when the files cut into
+        exactly that many byte ranges, with at least 3 row groups per
+        split and every split non-empty and none over 4/3 of the mean
+        rows (a large footer, e.g. min/max statistics of the payload
+        column, can push the last row groups into one short split);
+      * otherwise splits of ``bytes / (slots * 4)`` with a 16 MB floor
+        (parquet cannot split finer than a row group, and a tiny corpus
+        must not become per-row-group tasks), and the url-hash shuffle
+        when even that scan stays under ``slots * 4`` splits.
+    Any other local source (WARC files) keeps the base split and runs
+    the shuffle."""
     import pyarrow.parquet as pq
-    splits = slots * _task_waves(df.sparkSession, input_bytes, slots)
-    target = -(-input_bytes // splits)
-    rows: list[int] = []  # per byte range, over all files
+    spark = df.sparkSession
+    slots = spark.sparkContext.defaultParallelism
+    # the context's own SparkConf: getConf() would copy every entry over
+    # py4j, ~35 ms of driver CPU per call
+    base = _size_conf(spark.sparkContext._conf,
+                      "spark.sql.files.maxPartitionBytes", 128 << 20)
+    files = None if df.isStreaming else _input_files(df)
+    if files is None:
+        return base, None
+    total, want = sum(size for _, size in files), slots * 4
+    if not total:  # in-memory: size unknown
+        return base, want
+    if -(-total // base) >= want:
+        return base, None
+    open_cost = _size_conf(spark.conf, "spark.sql.files.openCostInBytes",
+                           4 << 20)
+    splits = slots * min(4, -(-total // (slots * open_cost)))
+    target = -(-total // splits)
+    rows: list[int] = []  # per byte range of `target`, over all files
     row_groups = 0
     try:
-        for path in _local_paths(df):
-            per_range = [0] * -(-os.path.getsize(path) // target)
+        for path, size in files:
+            per_range = [0] * -(-size // target)
             meta = pq.read_metadata(path)
             for i in range(meta.num_row_groups):
                 rg = meta.row_group(i)
@@ -255,11 +255,12 @@ def _row_group_splits(df: DataFrame, input_bytes: int, slots: int) -> int:
             rows += per_range
             row_groups += meta.num_row_groups
     except (OSError, ValueError, IndexError):  # gone, or not parquet
-        return 0
-    if len(rows) != splits or row_groups < 3 * splits or min(rows) == 0 \
-            or max(rows) * 3 * splits > sum(rows) * 4:
-        return 0
-    return splits
+        return base, splits
+    if len(rows) == splits and row_groups >= 3 * splits and min(rows) \
+            and max(rows) * 3 * splits <= sum(rows) * 4:
+        return target, None
+    split = min(base, max(16 << 20, total // want))
+    return split, None if -(-total // split) >= want else splits
 
 
 def extract_pages(pages: DataFrame, *, partitions: int | None = None,
@@ -268,52 +269,33 @@ def extract_pages(pages: DataFrame, *, partitions: int | None = None,
 
     Load-balancing: per-doc cost varies ~10x between PDF layout and
     HTML, so the kernel stage wants several tasks per slot to amortize
-    stragglers. But an unconditional ``repartition`` shuffles the FULL
-    payload bytes — at table scale that is a 100 TB shuffle bought only
-    for load-balancing. The url-hash shuffle is therefore bought ONLY
-    when the scan under-parallelizes (input splits < 4 tasks per
-    executor slot — true for a small/one-file corpus, never true for a
-    10^12-row table whose scan yields millions of size-bounded splits)
-    and the source cannot be cut along its row groups into whole waves
-    instead (``_row_group_splits``; ``read_pages`` makes that cut, and
-    the shuffle is skipped when the scan yields it). The 4x margin
-    matters empirically, not just for stragglers: a scan that clears
-    an ``< slots`` test can still schedule as 2 ragged waves.
-
-    How many tasks the balance shuffle makes is sized by input bytes:
-    ``slots * clamp(ceil(bytes / (slots * openCost)), 1, 4)`` with
-    ``openCost`` = spark.sql.files.openCostInBytes (4 MB default) —
-    Spark's own estimate, in bytes, of a split's fixed cost, and the
-    floor the file scan puts on split size. Every wave is full (no
-    ragged waves), there are never fewer tasks than slots, and a task
-    never gets much less input than its fixed cost is worth: each task
-    costs ~70-85 ms of JVM plus Python worker CPU before any kernel
-    work (measured at local[4] as the difference between 16 and 4
-    balance tasks), more than the kernel work of a 1/16 share of a
-    1-5 MB corpus. So a corpus under ``slots * openCost`` gets one task
-    per slot, and 4 tasks per slot only above ``3 * slots * openCost``.
-    Unknown size (in-memory) keeps 4 tasks per slot. A row-group cut
-    makes the same number of scan tasks.
+    stragglers, but an unconditional ``repartition`` shuffles the FULL
+    payload bytes (a 100 TB shuffle at table scale). ``_plan_scan``
+    decides the plan from the input: the scan split, which is applied to
+    the session here (file-scan splits are read from the session conf
+    when the scan runs; no per-read option exists), and whether the
+    xxhash64(url) balance shuffle runs and into how many tasks. The
+    shuffle runs only when the scan under-parallelizes (< 4 splits per
+    slot: a small or one-file corpus, never a 10^12-row table) and the
+    source cannot be cut along its row groups into whole waves instead.
+    The 4x margin matters empirically, not just for stragglers: a scan
+    that clears an ``< slots`` test can still schedule as 2 ragged waves.
 
     ``partitions=N`` forces the shuffle into ``N`` tasks (layout-known-
-    bad inputs). A streaming input never shuffles unless forced:
-    micro-batch sizing governs its parallelism. Hash key xxhash64(url)
-    is skew-free by construction (urls unique); for host-keyed
-    downstream ops use functions/skew.py salting.
+    bad inputs); the split is applied all the same. A streaming input
+    never shuffles unless forced: micro-batch sizing governs its
+    parallelism. Hash key xxhash64(url) is skew-free by construction
+    (urls unique); for host-keyed downstream ops use functions/skew.py
+    salting.
     """
-    spark = pages.sparkSession
-    slots = spark.sparkContext.defaultParallelism
     staged = pages.select("url", "warc_ts", "html", "lang")  # column
     # pruning: never carry the naive `text` dump into the kernel stage
-    if partitions is None and not staged.isStreaming:
-        input_bytes = _local_input_bytes(staged)
-        scan_splits = _estimated_scan_splits(input_bytes)
-        if scan_splits < slots * 4:
-            cut = _row_group_splits(staged, input_bytes, slots)
-            if not cut or scan_splits < cut:
-                partitions = slots * _task_waves(spark, input_bytes, slots)
-    if partitions is not None:
-        staged = staged.repartition(partitions, F.xxhash64("url"))
+    split, tasks = _plan_scan(staged)
+    pages.sparkSession.conf.set("spark.sql.files.maxPartitionBytes",
+                                str(split))
+    tasks = tasks if partitions is None else partitions
+    if tasks is not None:
+        staged = staged.repartition(tasks, F.xxhash64("url"))
     staged = staged.withColumn("partition_id", F.spark_partition_id())
     out = staged.mapInArrow(extract_batch_arrow, EXTRACT_SCHEMA)
     # undo the kernel's clean_text delta encoding (null == "same as
@@ -327,38 +309,6 @@ def extract_pages(pages: DataFrame, *, partitions: int | None = None,
 
 def read_pages(spark: "SparkSession", path: str) -> DataFrame:
     """Catalog-agnostic pages scan (Iceberg table name or parquet path —
-    sandbox has no Iceberg jars; see engine/catalog.py seam).
-
-    When a LOCAL corpus layout under-parallelizes the scan (< 4 splits
-    per executor slot — the one-big-file fixture regime), lower
-    ``spark.sql.files.maxPartitionBytes`` so the SCAN ITSELF yields
-    that parallelism instead of letting extract_pages buy a
-    full-payload repartition (parquet can't split finer than a row
-    group; the fixture writer uses 512-row groups precisely so it can):
-      * a parquet corpus with enough row groups (``_row_group_splits``)
-        is cut into ``slots * waves`` splits of ``ceil(bytes /
-        splits)`` — whole waves, no task over 4/3 of the mean, and
-        extract_pages then runs no shuffle at all;
-      * any other corpus gets splits of ``bytes / (4 * slots)``, with
-        a 16 MB floor so a tiny corpus never degenerates to
-        per-row-group tasks (extract_pages load-balances what is left
-        with its cheap shuffle).
-    Only the row-group cut goes below the 16 MB floor, and never to
-    more than ``slots * 4`` tasks. NOTE: this sets a SESSION conf
-    (file-scan splits are decided at execution time from the session
-    conf, a per-read option does not exist) — it only ever lowers the
-    value, and a 10^12-row table never triggers it (its scan already
-    yields millions of splits). Remote stores are untouched."""
-    df = spark.read.schema(PAGES_SCHEMA).parquet(path)
-    slots = spark.sparkContext.defaultParallelism
-    total = _local_input_bytes(df)
-    want = slots * 4
-    split = _size_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
-    if total > 0 and -(-total // split) < want:
-        cut = _row_group_splits(df, total, slots)
-        target = -(-total // cut) if cut else max(16 << 20, total // want)
-        if target < split:
-            spark.conf.set("spark.sql.files.maxPartitionBytes",
-                           str(int(target)))
-            df = spark.read.schema(PAGES_SCHEMA).parquet(path)
-    return df
+    sandbox has no Iceberg jars; see engine/catalog.py seam). Its scan
+    split is planned by ``extract_pages`` (``_plan_scan``)."""
+    return spark.read.schema(PAGES_SCHEMA).parquet(path)

@@ -65,7 +65,9 @@ def build_session(app: str = "ocr-engine-spark", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_BATCH_ROWS))
         # pages rows are fat (binary html) — keep scan splits modest so a
-        # partition of payloads fits executor memory at any SF
+        # partition of payloads fits executor memory at any SF; the
+        # extraction planner (extract_job._plan_scan) starts from this
+        # launch value and only lowers it for a small local corpus
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory",

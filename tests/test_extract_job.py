@@ -3,6 +3,7 @@
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_extraction_byte_identical_on_clean_corpus(extractions_df, golden_df):
@@ -154,6 +155,29 @@ def test_raw_response_fallback(spark):
     assert k2["raw_response"] is None
 
 
+def _below_kernel(df) -> str:
+    """The executed plan upstream of the kernel stage (``MapInArrow``)."""
+    return (df._jdf.queryExecution().executedPlan().toString()
+            .split("MapInArrow")[-1])
+
+
+def _launch_split(spark) -> int:
+    """The scan split the session was launched with: the planner's base."""
+    from ocr_engine_spark.engine import extract_job
+    return extract_job._size_conf(spark.sparkContext._conf,
+                                  "spark.sql.files.maxPartitionBytes",
+                                  128 << 20)
+
+
+def _balance_tasks(spark, input_bytes: int) -> int:
+    """``slots * clamp(ceil(bytes / (slots * openCost)), 1, 4)``."""
+    from ocr_engine_spark.engine import extract_job
+    slots = spark.sparkContext.defaultParallelism
+    open_cost = extract_job._size_conf(
+        spark.conf, "spark.sql.files.openCostInBytes", 4 << 20)
+    return slots * min(4, max(1, -(-input_bytes // (slots * open_cost))))
+
+
 def test_balance_modes_plan(pages_df, monkeypatch):
     """The default shuffles only when the scan under-parallelizes; a
     scan that already yields enough splits never buys the
@@ -161,55 +185,52 @@ def test_balance_modes_plan(pages_df, monkeypatch):
     Exchange before the kernel stage); ``partitions`` forces it."""
     from ocr_engine_spark.engine import extract_job
 
-    def upto_kernel(plan: str) -> str:
-        return plan.split("MapInArrow")[-1]  # below = upstream of kernel
-
     forced = extract_job.extract_pages(pages_df, partitions=3,
                                        with_fields=False)
-    plan_forced = forced._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in upto_kernel(plan_forced)
+    assert "Exchange" in _below_kernel(forced)
     # this corpus is one small file -> fewer scan splits than slots ->
     # auto must load-balance
     auto = extract_job.extract_pages(pages_df, with_fields=False)
-    plan_auto = auto._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in upto_kernel(plan_auto)
-    # a remote store (size -1) is trusted to split its own scan
-    monkeypatch.setattr(extract_job, "_local_input_bytes", lambda df: -1)
+    assert "Exchange" in _below_kernel(auto)
+    # a remote store is trusted to split its own scan
+    monkeypatch.setattr(extract_job, "_input_files", lambda df: None)
     never = extract_job.extract_pages(pages_df, with_fields=False)
-    plan_never = never._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in upto_kernel(plan_never)
+    assert "Exchange" not in _below_kernel(never)
 
 
-def test_auto_balance_wants_four_tasks_per_slot(pages_df, monkeypatch):
+def test_auto_balance_wants_four_tasks_per_slot(pages_df, monkeypatch,
+                                               tmp_path):
     """Regression for the 2->8 scaling cliff: a scan whose split count
     clears `slots` but not `4*slots` schedules as ~2 ragged waves
     (+28% wall measured at pinned 8 cores on a one-file 850 MB corpus),
     so 'auto' must still buy the balance shuffle in that band — and
     must NOT once the scan yields >= 4 tasks per slot (the table-scale
-    regime, where the shuffle would move the full payload bytes)."""
+    regime, where the shuffle would move the full payload bytes). The
+    input is listed as one file with no parquet footer (a WARC file),
+    which the scan splits at the launch split."""
     from ocr_engine_spark.engine import extract_job
 
-    def upto_kernel(plan: str) -> str:
-        return plan.split("MapInArrow")[-1]
+    spark = pages_df.sparkSession
+    slots = spark.sparkContext.defaultParallelism
+    base = _launch_split(spark)
 
-    slots = pages_df.sparkSession.sparkContext.defaultParallelism
-    monkeypatch.setattr(extract_job, "_estimated_scan_splits",
-                        lambda df: slots * 2)
-    ragged = extract_job.extract_pages(pages_df, with_fields=False)
-    plan = ragged._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in upto_kernel(plan)
+    def plan(scan_splits: int) -> str:
+        monkeypatch.setattr(
+            extract_job, "_input_files",
+            lambda df: [(str(tmp_path / "seg.warc"), scan_splits * base)])
+        return _below_kernel(extract_job.extract_pages(pages_df,
+                                                       with_fields=False))
 
-    monkeypatch.setattr(extract_job, "_estimated_scan_splits",
-                        lambda df: slots * 4)
-    wide = extract_job.extract_pages(pages_df, with_fields=False)
-    plan = wide._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in upto_kernel(plan)
+    assert "Exchange" in plan(slots * 2)
+    assert "Exchange" not in plan(slots * 4)
 
 
-def test_balance_partitions_sized_by_input_bytes(pages_df, monkeypatch):
+def test_balance_partitions_sized_by_input_bytes(pages_df, monkeypatch,
+                                                 tmp_path):
     """The balance shuffle makes whole waves of `slots` tasks, about
     spark.sql.files.openCostInBytes of input per task, 1 to 4 waves;
-    unknown sizes keep 4 waves and an explicit `partitions` wins."""
+    an in-memory source keeps 4 waves, a remote store none, and an
+    explicit `partitions` wins."""
     import re
 
     from ocr_engine_spark.engine import extract_job
@@ -217,29 +238,35 @@ def test_balance_partitions_sized_by_input_bytes(pages_df, monkeypatch):
     spark = pages_df.sparkSession
     slots = spark.sparkContext.defaultParallelism
     open_cost = extract_job._size_conf(
-        spark, "spark.sql.files.openCostInBytes", 4 << 20)
+        spark.conf, "spark.sql.files.openCostInBytes", 4 << 20)
 
-    def balance_tasks(input_bytes, splits=None, **kw):
-        monkeypatch.setattr(extract_job, "_local_input_bytes",
-                            lambda df: input_bytes)
-        if splits is not None:  # a scan of this many splits
-            monkeypatch.setattr(extract_job, "_estimated_scan_splits",
-                                lambda input_bytes: splits)
-        plan = (extract_job.extract_pages(pages_df, with_fields=False, **kw)
-                ._jdf.queryExecution().executedPlan().toString())
+    def balance_tasks(files, launch_split=None, **kw):
+        monkeypatch.setattr(extract_job, "_input_files", lambda df: files)
+        if launch_split is not None:  # a session launched with this split
+            monkeypatch.setattr(
+                spark.sparkContext, "_conf", spark.sparkContext.getConf().set(
+                    "spark.sql.files.maxPartitionBytes", str(launch_split)))
+        plan = _below_kernel(
+            extract_job.extract_pages(pages_df, with_fields=False, **kw))
         # a cached extraction with the same plan shows up as its
         # InMemoryRelation, which prints the same exchange again
-        (n,) = set(re.findall(r"hashpartitioning\(xxhash64\(url#\d+, "
-                              r"42\), (\d+)\)", plan))
-        return int(n)
+        found = set(re.findall(r"hashpartitioning\(xxhash64\(url#\d+, "
+                               r"42\), (\d+)\)", plan))
+        assert len(found) <= 1
+        return int(found.pop()) if found else None
 
-    assert balance_tasks(0) == slots * 4  # in-memory: size unknown
-    assert balance_tasks(1 << 20) == slots
-    assert balance_tasks(int(2.5 * slots * open_cost)) == slots * 3
-    # 1 TB and a remote store, on a scan patched to under-parallelize
-    assert balance_tasks(1 << 40, splits=0) == slots * 4
-    assert balance_tasks(-1, splits=0) == slots * 4  # remote store
-    assert balance_tasks(1 << 20, partitions=7) == 7
+    def one_file(size):  # with no parquet footer, as a WARC file
+        return [(str(tmp_path / "seg.warc"), size)]
+
+    assert balance_tasks([]) == slots * 4  # in-memory: size unknown
+    assert balance_tasks(one_file(1 << 20)) == slots
+    assert balance_tasks(one_file(int(2.5 * slots * open_cost))) == slots * 3
+    assert balance_tasks(one_file(1 << 20), partitions=7) == 7
+    # 1 TB and a remote store, in a session launched with a split that
+    # leaves a 1 TB scan one split
+    assert balance_tasks(one_file(1 << 40), launch_split=1 << 41) \
+        == slots * 4
+    assert balance_tasks(None, launch_split=1 << 41) is None
 
 
 def test_oversize_payload_guard(monkeypatch):
@@ -341,52 +368,57 @@ def test_arrow_stage_and_frozen_fixture_agree_on_edge_payloads(
     assert "Caf\xe9 cr\xe8me br\xfbl\xe9e" in stage["u://latin1"]["clean_text"]
 
 
-def test_read_pages_autosplit(spark, tmp_path):
+@pytest.fixture(scope="module")
+def cut_corpus(tmp_path_factory) -> str:
+    """200 Common-Crawl-weight pages (~32 KB) in 16-row groups: a small
+    one-file corpus that is cut along its row groups."""
+    from ocr_engine_spark.fixtures.gen_pages import write
+    return write(str(tmp_path_factory.mktemp("pages_rg16")), n_pages=200,
+                 seed=7, para_scale=48, row_group_size=16)["pages"]
+
+
+@pytest.fixture(scope="module")
+def wide_corpus(tmp_path_factory) -> str:
+    """1,200 Common-Crawl-weight pages in 512-row groups: one file over
+    the 16 MB split floor, with too few row groups to cut."""
+    from ocr_engine_spark.fixtures.gen_pages import write
+    return write(str(tmp_path_factory.mktemp("pages_autosplit")),
+                 n_pages=1200, seed=7, para_scale=48)["pages"]
+
+
+def test_read_pages_autosplit(spark, wide_corpus, tmp_path):
     """A one-file corpus that would under-parallelize the scan gets
-    split at the SOURCE (maxPartitionBytes lowered) so auto-balance
-    never buys the full-payload shuffle; the resulting plan has no
-    Exchange before the kernel stage and >= 4 tasks/slot when row
-    groups allow it."""
+    split at the SOURCE: ``extract_pages`` lowers the session's
+    maxPartitionBytes below the launch split, to no less than the 16 MB
+    floor, so auto-balance never buys the full-payload shuffle when the
+    scan yields >= 4 tasks/slot."""
     from ocr_engine_spark.engine.extract_job import (
         extract_pages, read_pages,
     )
     from ocr_engine_spark.fixtures.gen_pages import write
 
-    corpus = str(tmp_path / "pages_autosplit")
-    # Common-Crawl page weight so the one file clears the 16 MB split
-    # floor (a truly tiny corpus stays one split and falls back to the
-    # cheap balance shuffle in extract_pages — also asserted below)
-    write(corpus, n_pages=1200, seed=7, para_scale=48)
-    before = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-    try:
-        pages = read_pages(spark, corpus + "/pages.parquet")
-        slots = spark.sparkContext.defaultParallelism
-        n_splits = pages.rdd.getNumPartitions()
-        assert n_splits > 1  # source-split fired
-        assert int(spark.conf.get(
-            "spark.sql.files.maxPartitionBytes")) >= 16 << 20
-        out = extract_pages(pages, with_fields=False)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        below_kernel = plan.split("MapInArrow")[-1]
-        if n_splits >= slots * 4:
-            assert "Exchange" not in below_kernel
-        assert out.count() == pages.count()  # generator adds variants
+    pages = read_pages(spark, wide_corpus)
+    out = extract_pages(pages, with_fields=False)
+    split = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    assert 16 << 20 <= split < _launch_split(spark)  # source-split fired
+    n_splits = pages.rdd.getNumPartitions()
+    assert n_splits > 1
+    if n_splits >= spark.sparkContext.defaultParallelism * 4:
+        assert "Exchange" not in _below_kernel(out)
+    assert out.count() == pages.count()  # generator adds variants
 
-        # tiny corpus: floor keeps it one split; auto-balance still
-        # buys the (cheap) shuffle downstream
-        tiny = str(tmp_path / "pages_tiny")
-        write(tiny, n_pages=60, seed=7)
-        tpages = read_pages(spark, tiny + "/pages.parquet")
-        assert tpages.rdd.getNumPartitions() == 1
-        tplan = (extract_pages(tpages, with_fields=False)
-                 ._jdf.queryExecution().executedPlan().toString())
-        assert "Exchange" in tplan.split("MapInArrow")[-1]
-    finally:
-        if before is not None:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", before)
+    # tiny corpus: floor keeps it one split; auto-balance still buys
+    # the (cheap) shuffle downstream
+    tiny = str(tmp_path / "pages_tiny")
+    write(tiny, n_pages=60, seed=7)
+    tpages = read_pages(spark, tiny + "/pages.parquet")
+    tout = extract_pages(tpages, with_fields=False)
+    assert tpages.rdd.getNumPartitions() == 1
+    assert "Exchange" in _below_kernel(tout)
 
 
-def test_read_pages_cuts_row_groups_into_whole_waves(spark, tmp_path):
+def test_read_pages_cuts_row_groups_into_whole_waves(spark, cut_corpus,
+                                                      tmp_path):
     """A small one-file corpus with >= 3 row groups per split is cut
     along its row groups into ``slots * waves`` scan tasks and runs with
     no balance Exchange; the rows are those of the forced shuffle.
@@ -399,62 +431,60 @@ def test_read_pages_cuts_row_groups_into_whole_waves(spark, tmp_path):
     from ocr_engine_spark.engine import extract_job
     from ocr_engine_spark.fixtures.gen_pages import write
 
-    def below_kernel(df) -> str:
-        return (df._jdf.queryExecution().executedPlan().toString()
-                .split("MapInArrow")[-1])
-
     def auto_plan(path) -> str:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        pages = extract_job.read_pages(spark, path)
-        return below_kernel(extract_job.extract_pages(pages,
-                                                      with_fields=False))
+        return _below_kernel(extract_job.extract_pages(
+            extract_job.read_pages(spark, path), with_fields=False))
 
     slots = spark.sparkContext.defaultParallelism
-    # Common-Crawl page weight (~32 KB), 16-row groups
-    path = write(str(tmp_path / "pages_rg16"), n_pages=200, seed=7,
-                 para_scale=48, row_group_size=16)["pages"]
-    input_bytes = os.path.getsize(path)
-    splits = slots * extract_job._task_waves(spark, input_bytes, slots)
-    assert pq.read_metadata(path).num_row_groups >= 3 * splits
-    before = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-    spark.conf.unset("spark.sql.files.maxPartitionBytes")
-    try:
-        pages = extract_job.read_pages(spark, path)
-        assert pages.rdd.getNumPartitions() == splits
-        out = extract_job.extract_pages(pages)
-        assert "Exchange" not in below_kernel(out)
-        per_task = [r["count"] for r in
-                    out.groupBy("partition_id").count().collect()]
-        assert len(per_task) == splits  # every task is non-empty
-        assert max(per_task) * splits <= sum(per_task) * 4 / 3
+    splits = _balance_tasks(spark, os.path.getsize(cut_corpus))
+    assert pq.read_metadata(cut_corpus).num_row_groups >= 3 * splits
+    pages = extract_job.read_pages(spark, cut_corpus)
+    out = extract_job.extract_pages(pages)
+    assert "Exchange" not in _below_kernel(out)
+    assert pages.rdd.getNumPartitions() == splits
+    per_task = [r["count"] for r in
+                out.groupBy("partition_id").count().collect()]
+    assert len(per_task) == splits  # every task is non-empty
+    assert max(per_task) * splits <= sum(per_task) * 4 / 3
 
-        drop = ("partition_id", "batch_seq", "processing_ms")
-        cut_rows = {r["url"]: r for r in out.drop(*drop).collect()}
-        forced = extract_job.extract_pages(pages, partitions=slots)
-        assert "Exchange" in below_kernel(forced)
-        assert cut_rows == {r["url"]: r
-                            for r in forced.drop(*drop).collect()}
+    drop = ("partition_id", "batch_seq", "processing_ms")
+    cut_rows = {r["url"]: r for r in out.drop(*drop).collect()}
+    forced = extract_job.extract_pages(pages, partitions=slots)
+    assert "Exchange" in _below_kernel(forced)
+    assert cut_rows == {r["url"]: r for r in forced.drop(*drop).collect()}
 
-        # 3 row groups: a cut would leave some splits empty
-        n_rows = pq.read_metadata(path).num_rows
-        three = write(str(tmp_path / "pages_rg3"), n_pages=200, seed=7,
-                      para_scale=48,
-                      row_group_size=-(-n_rows // 3))["pages"]
-        assert pq.read_metadata(three).num_row_groups == 3
-        assert "Exchange" in auto_plan(three)
-        if slots > 1:  # one split per slot would hold the whole file
-            light = write(str(tmp_path / "pages_light"), n_pages=200,
-                          seed=7, row_group_size=16)["pages"]
-            assert pq.read_metadata(light).num_row_groups >= 3 * slots
-            assert extract_job._row_group_splits(
-                spark.read.parquet(light), os.path.getsize(light),
-                slots) == 0
-            assert "Exchange" in auto_plan(light)
-    finally:
-        if before is None:
-            spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        else:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", before)
+    # 3 row groups: a cut would leave some splits empty
+    n_rows = pq.read_metadata(cut_corpus).num_rows
+    three = write(str(tmp_path / "pages_rg3"), n_pages=200, seed=7,
+                  para_scale=48, row_group_size=-(-n_rows // 3))["pages"]
+    assert pq.read_metadata(three).num_row_groups == 3
+    assert "Exchange" in auto_plan(three)
+    if slots > 1:  # one split per slot would hold the whole file
+        light = write(str(tmp_path / "pages_light"), n_pages=200,
+                      seed=7, row_group_size=16)["pages"]
+        assert pq.read_metadata(light).num_row_groups >= 3 * slots
+        assert "Exchange" in auto_plan(light)
+
+
+def test_extraction_plan_ignores_the_corpus_before_it(spark, cut_corpus,
+                                                       wide_corpus):
+    """The plan is decided from the input alone. A corpus extracted
+    right after a row-group cut (which applies a sub-MB scan split to
+    the session) gets the plan a fresh session gives it: the balance
+    Exchange of ``slots * waves`` tasks, every one non-empty. Planned
+    from the cut's split instead, its 3 row groups would scan as dozens
+    of tasks, all but 3 empty, with no Exchange."""
+    import re
+
+    from ocr_engine_spark.engine.extract_job import extract_pages, read_pages
+
+    cut = extract_pages(read_pages(spark, cut_corpus), with_fields=False)
+    assert "Exchange" not in _below_kernel(cut)
+    out = extract_pages(read_pages(spark, wide_corpus), with_fields=False)
+    tasks = _balance_tasks(spark, os.path.getsize(wide_corpus))
+    assert set(re.findall(r"hashpartitioning\(xxhash64\(url#\d+, 42\), "
+                          r"(\d+)\)", _below_kernel(out))) == {str(tasks)}
+    assert out.groupBy("partition_id").count().count() == tasks
 
 
 # the extraction output contract: (name, type) in order, as the job has

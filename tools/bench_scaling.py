@@ -189,14 +189,19 @@ parquet row groups than {n4} (the control makes one task per row
 group) — rerun on a quiet box rather than reading the Spark number as a
 plan property.
 
-Why the plan scales: scan -> `repartition(P, xxhash64(url))`, P = 1-4
-full waves of `cores` tasks sized by input bytes (only when the scan
-itself under-parallelizes) -> ONE mapInArrow kernel stage -> sink. The
-only shuffle is the explicit load-balancing repartition (measured < 1 s
-of the total); kernel work is embarrassingly parallel; full waves of up
-to 4 tasks/slot amortize the ~10x per-doc cost variance (PDF layout vs
-HTML) so the last wave has no stragglers; nothing is driver-bound or
-single-partition.
+Why the plan scales: one planner (`extract_job._plan_scan`) picks the
+plan from the input's file metadata, in one of two shapes. When the scan
+yields >= 4 splits per slot, or a small parquet corpus can be cut along
+its row groups into whole waves: scan -> ONE mapInArrow kernel stage ->
+sink. When the scan under-parallelizes: scan ->
+`repartition(P, xxhash64(url))`, P = 1-4 full waves of `cores` tasks
+sized by input bytes -> the kernel stage -> sink. The 4,600-page corpus
+(`python tools/bench_scaling.py 4000`, 9 row groups) keeps its 16-task
+Exchange at local[4] (6 scan splits at the 16 MB floor) and runs a
+5-split scan with no Exchange at local[1]. Kernel work is
+embarrassingly parallel; full waves of up to 4 tasks/slot amortize the
+~10x per-doc cost variance (PDF layout vs HTML) so the last wave has no
+stragglers; nothing is driver-bound or single-partition.
 
 Reproduce: `python tools/bench_scaling.py`.
 
@@ -210,7 +215,8 @@ Reproduce: `python tools/bench_scaling.py`.
     if os.path.exists(bench_path):
         old = open(bench_path).read()
         if PRESERVE_MARKER in old:
-            preserved = old.split(PRESERVE_MARKER, 1)[1]
+            # one blank line after the marker, however many it has now
+            preserved = "\n" + old.split(PRESERVE_MARKER, 1)[1].lstrip("\n")
     with open(bench_path, "w") as f:
         f.write(md + preserved)
     print("wrote BENCH.md (preserved manual sections)")
